@@ -1,14 +1,19 @@
 """1-D matrix profile: STMP / STAMP / STOMP / MPX, discovery, MPDist, update.
 
 Pure-NumPy reimplementation of the reference's MatrixProfile
-(/root/reference/matrixprofile.go). The reference parallelizes with
-goroutine batches merged over channels; here each batch is a vectorized
-NumPy pass and batches are folded sequentially in batch order, which
-reproduces the reference's merge-order tie semantics exactly
-(mergeMPResults, matrixprofile.go:607-661). Inside Spark this module
-runs per conv_id inside Arrow-batched pandas UDFs; the batch dimension
-additionally maps to separate Spark tasks for very long series (see
-operators/profile.py).
+(matrixprofile.go in matrix-profile-foundation/go-matrixprofile). The
+reference parallelizes with goroutine batches merged over channels; here
+each batch is a vectorized NumPy pass and batches are folded
+sequentially in batch order, which reproduces the reference's
+merge-order tie semantics exactly (mergeMPResults,
+matrixprofile.go:607-661). Inside Spark this module
+runs per conv_id inside Arrow-batched pandas UDFs; 2-D tiles of one
+long series map to separate Spark tasks (see operators/profile.py).
+
+The MPX recurrence lives in ONE place, ``diag_sweep``: the self-join
+(mpxBatch), both AB-join passes (mpxabBatch / mpxbaBatch) and the
+distributed tiles (``mpx_tile_partial``) are thin callers that differ
+only in which streams, seeds and output arrays they pass.
 
 Parity-critical details preserved (see SURVEY.md §7.4):
 - STOMP/STAMP/STMP min-update uses ``<=`` (latest row wins ties,
@@ -17,8 +22,8 @@ Parity-critical details preserved (see SURVEY.md §7.4):
 - Exclusion zones: w/2 for STAMP/STOMP/STMP (matrixprofile.go:481,505),
   max(1, w/4) for MPX (matrixprofile.go:998-1001).
 - Within one MPX diagonal a cell's diagonal-side update precedes its
-  offset-side update (offset j-diag is visited before offset j), so the
-  vectorized version applies the diagonal-side mask first.
+  offset-side update (offset j-diag is visited before offset j), so
+  diag_sweep applies the y-side (diagonal-side) mask first.
 - mass divides by b_std without a zero-guard (matrixprofile.go:461);
   constant windows yield Inf/NaN exactly as in Go.
 """
@@ -293,213 +298,56 @@ class MatrixProfile:
 
     # MPX — diagonal-traversal Pearson-space join (matrixprofile.go:878-1198)
     def _mpx(self) -> None:
-        w = self.w
-        len_a = self.a.size - w + 1
-        len_b = self.b.size - w + 1
-        self.mp, self.idx = self._alloc(len_a)
-        if not self.self_join:
-            self.mpb, self.idxb = self._alloc(len_b)
+        """Every pass is diag_sweep over one diagonal batch; partials fold
+        in batch order (_merge), so n_jobs only changes the tie order the
+        way Go's goroutine batches do."""
+        w, opts = self.w, self.opts
+        n_jobs = max(1, opts.n_jobs)
+        # Pearson space starts from the empty partial so that a cell with
+        # no neighbor stays corr -inf (distance inf) through the |corr| merge
+        alloc = self._alloc if opts.euclidean else _partial
+        xa = _diff_streams(self.a, w)
+        len_a = xa[0].size
+        self.mp, self.idx = alloc(len_a)
 
-        mua, siga = mu_invn(self.a, w)
-        if self.self_join:
-            mub, sigb = mua, siga
-        else:
-            mub, sigb = mu_invn(self.b, w)
-
-        # difference streams: df[i+1] = ½(A[w+i]-A[i]);
-        # dg[i+1] = (A[w+i]-μ[i+1]) + (A[i]-μ[i])  (matrixprofile.go:904-919)
-        dfa = np.zeros(len_a)
-        dga = np.zeros(len_a)
-        dfa[1:] = 0.5 * (self.a[w : w + len_a - 1] - self.a[: len_a - 1])
-        dga[1:] = (self.a[w : w + len_a - 1] - mua[1:len_a]) + (
-            self.a[: len_a - 1] - mua[: len_a - 1]
-        )
-        if self.self_join:
-            dfb, dgb = dfa, dga
-        else:
-            dfb = np.zeros(len_b)
-            dgb = np.zeros(len_b)
-            dfb[1:] = 0.5 * (self.b[w : w + len_b - 1] - self.b[: len_b - 1])
-            dgb[1:] = (self.b[w : w + len_b - 1] - mub[1:len_b]) + (
-                self.b[: len_b - 1] - mub[: len_b - 1]
-            )
-
-        n_jobs = max(1, self.opts.n_jobs)
-        scheme = diag_batching_scheme(len_a, n_jobs)
-        if self.self_join:
-            c0_all = self._mpx_c0_all(mua)
-            results = [
-                self._mpx_batch(bidx, mua, siga, dfa, dga, bsz, c0_all)
-                for bidx, bsz in scheme
-            ]
-        else:
-            results = [
-                self._mpxab_batch(bidx, mua, siga, dfa, dga, mub, sigb, dfb, dgb, bsz)
-                for bidx, bsz in scheme
-            ]
-        self._merge(results, self.opts.euclidean)
+        def finish(mp):
+            return p2e(mp, w) if opts.euclidean else mp
 
         if self.self_join:
+            # one array as both sides: the y-side (diagonal-side) touch of a
+            # cell precedes its x-side touch, Go's order (mpxBatch)
+            excl = max(1, w // 4)
+            seeds = _centered_seeds(self.a, self.a, xa[0], xa[0], w)
+            results = []
+            for start, size in diag_batching_scheme(len_a, n_jobs):
+                mp, idx = _partial(len_a)
+                d_lo, d_hi = start + excl, min(start + size + excl, len_a) - 1
+                diag_sweep(xa, xa, seeds[d_lo:], d_lo, d_hi, mp, idx, mp, idx,
+                           remap=opts.remap_neg_corr)
+                results.append((finish(mp), idx, None, None))
+            self._merge(results, opts.euclidean)
             return
-        scheme = diag_batching_scheme(len_b, n_jobs)
-        results = [
-            self._mpxba_batch(bidx, mua, siga, dfa, dga, mub, sigb, dfb, dgb, bsz)
-            for bidx, bsz in scheme
-        ]
-        self._merge(results, self.opts.euclidean)
 
-    def _mpx_c0_all(self, mu):
-        """Seed correlations for EVERY diagonal in one FFT sliding dot:
-        c0[diag] = <a[diag:diag+w] - mu[diag], a[:w] - mu[0]>
-                 = slidingdot(a[:w]-mu[0], a)[diag] - mu[diag]·Σ(a[:w]-mu[0]).
-        Replaces len_a small np.dot calls (one per diagonal) with a
-        single O(n log n) pass — ~15-20% of the whole MPX kernel."""
-        a, w = self.a, self.w
-        len_a = a.size - w + 1
-        first = a[:w] - mu[0]
-        bf = np.fft.rfft(a)
-        return cross_correlate(first, a, bf)[:len_a] - mu[:len_a] * first.sum()
-
-    def _mpx_batch(self, idx, mu, sig, df, dg, batch_size, c0_all=None):
-        """One diagonal batch of the self-join (matrixprofile.go:996-1054).
-
-        Per-diagonal vectorized: each diagonal is one cumsum + a handful
-        of in-cache vector ops over the remaining offsets (the working
-        vectors are O(n) and L2-resident, which beats 2-D blocking —
-        measured: large blocks fall out of cache and run 5x slower,
-        (D×T)-tiled variants with cumsum carry also lose, and packing
-        (df, dg) into complex128 to fuse the two cross-multiplies into
-        one Im(z·z') pass loses too: complex multiply computes the
-        unused real part and .imag reads strided).
-        Updates preserve Go's exact tie order: strict > in Pearson space
-        with diagonals ascending, and within a diagonal the
-        diagonal-side touch of a cell precedes its offset-side touch
-        (offset j-diag is visited before offset j).
-        """
-        a, w = self.a, self.w
-        excl = max(1, w // 4)
-        len_a = a.size - w + 1
-        if idx + excl > len_a:
-            return None
-        mp = np.full(len_a, -1.0)
-        mpidx = np.zeros(len_a, dtype=np.int64)
-        remap = self.opts.remap_neg_corr
-        d_start = idx + excl
-        d_end = min(idx + batch_size + excl, len_a)
-        if d_start >= d_end:
-            if self.opts.euclidean:
-                mp = p2e(mp, w)
-            return mp, mpidx, None, None
-        if c0_all is None:
-            c0_all = self._mpx_c0_all(mu)
-
-        max_o = len_a - d_start
-        t1 = np.empty(max_o)
-        t2 = np.empty(max_o)
-        for diag in range(d_start, d_end):
-            omax = len_a - diag
-            b1 = t1[:omax]
-            b2 = t2[:omax]
-            # c evolves by +df[o]*dg[o+diag] + df[o+diag]*dg[o] per offset;
-            # term[0] is 0 (df[0]=dg[0]=0), so seeding it with c0 before
-            # the cumsum folds the "+ c0" into the scan (one fewer pass)
-            np.multiply(df[:omax], dg[diag : diag + omax], out=b1)
-            np.multiply(df[diag : diag + omax], dg[:omax], out=b2)
-            b1 += b2
-            b1[0] += c0_all[diag]
-            np.cumsum(b1, out=b1)
-            np.multiply(sig[:omax], sig[diag : diag + omax], out=b2)
-            b1 *= b2
-            if remap:
-                np.abs(b1, out=b1)
-            # diagonal-side update first (offset j-diag precedes offset j)
-            seg = mp[diag : diag + omax]
-            upd = np.nonzero(b1 > seg)[0]
-            if upd.size:
-                seg[upd] = b1[upd]
-                mpidx[diag + upd] = upd
-            # offset-side update
-            upd = np.nonzero(b1 > mp[:omax])[0]
-            if upd.size:
-                mp[upd] = b1[upd]
-                mpidx[upd] = upd + diag
-        if self.opts.euclidean:
-            mp = p2e(mp, w)
-        return mp, mpidx, None, None
-
-    def _mpxab_batch(self, idx, mua, siga, dfa, dga, mub, sigb, dfb, dgb, batch_size):
-        """AB-direction diagonal batch (matrixprofile.go:1057-1126)."""
-        a, b, w = self.a, self.b, self.w
-        len_a = a.size - w + 1
-        len_b = b.size - w + 1
-        if idx > len_a:
-            return None
-        mp = np.full(len_a, -1.0)
-        mpidx = np.zeros(len_a, dtype=np.int64)
-        mpb = np.full(len_b, -1.0)
-        mpidxb = np.zeros(len_b, dtype=np.int64)
-        remap = self.opts.remap_neg_corr
-        firstb = b[:w] - mub[0]
-        for diag in range(idx, idx + batch_size):
-            if diag >= len_a:
-                break
-            c0 = np.dot(a[diag : diag + w] - mua[diag], firstb)
-            omax = min(len_a - diag, len_b)
-            c = c0 + np.cumsum(
-                dfb[:omax] * dga[diag : diag + omax] + dfa[diag : diag + omax] * dgb[:omax]
-            )
-            corr = c * (sigb[:omax] * siga[diag : diag + omax])
-            if remap:
-                corr = np.abs(corr)
-            # A-side cell offset+diag then B-side cell offset — distinct
-            # arrays, each touched once per diagonal, order immaterial
-            seg = mp[diag : diag + omax]
-            m = corr > seg
-            seg[m] = corr[m]
-            mpidx[diag : diag + omax][m] = np.nonzero(m)[0]
-            m = corr > mpb[:omax]
-            mpb[:omax][m] = corr[m]
-            mpidxb[:omax][m] = np.nonzero(m)[0] + diag
-        if self.opts.euclidean:
-            mp = p2e(mp, w)
-            mpb = p2e(mpb, w)
-        return mp, mpidx, mpb, mpidxb
-
-    def _mpxba_batch(self, idx, mua, siga, dfa, dga, mub, sigb, dfb, dgb, batch_size):
-        """BA-direction diagonal batch (matrixprofile.go:1129-1198)."""
-        a, b, w = self.a, self.b, self.w
-        len_a = a.size - w + 1
-        len_b = b.size - w + 1
-        if idx > len_a:
-            return None
-        mp = np.full(len_a, -1.0)
-        mpidx = np.zeros(len_a, dtype=np.int64)
-        mpb = np.full(len_b, -1.0)
-        mpidxb = np.zeros(len_b, dtype=np.int64)
-        remap = self.opts.remap_neg_corr
-        firsta = a[:w] - mua[0]
-        for diag in range(idx, idx + batch_size):
-            if diag >= len_b:
-                break
-            c0 = np.dot(b[diag : diag + w] - mub[diag], firsta)
-            omax = min(len_b - diag, len_a)
-            c = c0 + np.cumsum(
-                dfa[:omax] * dgb[diag : diag + omax] + dfb[diag : diag + omax] * dga[:omax]
-            )
-            corr = c * (siga[:omax] * sigb[diag : diag + omax])
-            if remap:
-                corr = np.abs(corr)
-            m = corr > mp[:omax]
-            mp[:omax][m] = corr[m]
-            mpidx[:omax][m] = np.nonzero(m)[0] + diag
-            seg = mpb[diag : diag + omax]
-            m = corr > seg
-            seg[m] = corr[m]
-            mpidxb[diag : diag + omax][m] = np.nonzero(m)[0]
-        if self.opts.euclidean:
-            mp = p2e(mp, w)
-            mpb = p2e(mpb, w)
-        return mp, mpidx, mpb, mpidxb
+        xb = _diff_streams(self.b, w)
+        self.mpb, self.idxb = alloc(xb[0].size)
+        passes = (
+            ((xb, self.b), (xa, self.a)),  # AB (mpxabBatch): diagonals start in A
+            ((xa, self.a), (xb, self.b)),  # BA (mpxbaBatch): diagonals start in B
+        )
+        for (xs, x), (ys, y) in passes:
+            # Go's per-diagonal dot seeds; seeding the scan with them makes it
+            # accumulate serially like Go's c +=
+            first = x[:w] - xs[0][0]
+            ly = ys[0].size
+            results = []
+            for start, size in diag_batching_scheme(ly, n_jobs):
+                d_hi = min(start + size, ly) - 1
+                seeds = [np.dot(y[d : d + w] - ys[0][d], first) for d in range(start, d_hi + 1)]
+                px, py = _partial(xs[0].size), _partial(ly)
+                diag_sweep(xs, ys, seeds, start, d_hi, *px, *py, remap=opts.remap_neg_corr)
+                (mpa, ia), (mpb, ib) = (py, px) if ys is xa else (px, py)
+                results.append((finish(mpa), ia, finish(mpb), ib))
+            self._merge(results, opts.euclidean)
 
     # -------------------------------------------------------------- streaming
 
@@ -758,6 +606,83 @@ def compute_mp(a, b=None, w: int = 0, opts: MPOpts | None = None) -> MatrixProfi
     return MatrixProfile(a, b, w).compute(opts)
 
 
+def _partial(n: int) -> tuple[np.ndarray, np.ndarray]:
+    """An empty Pearson-space partial profile. A cell no diagonal reaches
+    keeps corr -inf and idx MAXINT, i.e. distance inf: it has no neighbor
+    outside the exclusion zone."""
+    return np.full(n, -np.inf), np.full(n, _MAXINT, dtype=np.int64)
+
+
+def _diff_streams(a: np.ndarray, w: int):
+    """(mu, sig, df, dg) of every window of a (matrixprofile.go:904-919):
+    df[i+1] = ½(a[w+i] - a[i]); dg[i+1] = (a[w+i] - mu[i+1]) + (a[i] - mu[i]).
+    Every quantity is window-local, so a segment's streams equal the
+    whole series' streams at the same positions."""
+    mu, sig = mu_invn(a, w)
+    n = mu.size
+    df = np.zeros(n)
+    dg = np.zeros(n)
+    df[1:] = 0.5 * (a[w : w + n - 1] - a[: n - 1])
+    dg[1:] = (a[w : w + n - 1] - mu[1:]) + (a[: n - 1] - mu[: n - 1])
+    return mu, sig, df, dg
+
+
+def _centered_seeds(x, y, mux, muy, w: int) -> np.ndarray:
+    """c0[d] = <y[d:d+w] - muy[d], x[:w] - mux[0]> for every d, from one
+    FFT sliding dot. Centering x before the FFT keeps the seeds exact on
+    series with a large mean, where <x, y> - w·mux·muy cancels."""
+    first = x[:w] - mux[0]
+    return cross_correlate(first, y)[: muy.size] - muy * first.sum()
+
+
+def diag_sweep(xs, ys, seeds, d_lo, d_hi, mp_x, idx_x, mp_y, idx_y, x0=0, y0=0, remap=False):
+    """The MPX recurrence (mpxBatch, matrixprofile.go:996-1054), once.
+
+    Walks the signed diagonals d = j - i for d in [d_lo, d_hi] ascending,
+    where i indexes mp_x (x windows) and j indexes mp_y (y windows), so
+    1 - mp_x.size <= d_lo and d_hi < mp_y.size. Each
+    diagonal starts at cell (max(0, -d), max(0, d)) with correlation
+    seeds[d - d_lo] and advances by c += df_x·dg_y + df_y·dg_x, scaled by
+    sig_x·sig_y. xs / ys are _diff_streams of each side. Cells update in
+    place with strict > (earliest diagonal wins ties), the y-side cell
+    before the x-side cell: passing one array as both sides gives Go's
+    diagonal-side-first self-join order. Reported neighbors are global
+    indices: x0 + i on the y side, y0 + j on the x side.
+
+    Per diagonal this is one cumsum plus a few in-cache vector ops; the
+    O(n) working vectors stay L2-resident, which measured faster than
+    2-D blocking, (D×T)-tiled cumsum carries, or complex-packed streams.
+    """
+    _, sigx, dfx, dgx = xs
+    _, sigy, dfy, dgy = ys
+    nx, ny = mp_x.size, mp_y.size
+    t1 = np.empty(min(nx, ny))
+    t2 = np.empty_like(t1)
+    for d, seed in zip(range(d_lo, d_hi + 1), seeds):
+        i0, j0 = (0, d) if d >= 0 else (-d, 0)
+        m = min(nx - i0, ny - j0)
+        b1, b2 = t1[:m], t2[:m]
+        np.multiply(dfx[i0 : i0 + m], dgy[j0 : j0 + m], out=b1)
+        np.multiply(dfy[j0 : j0 + m], dgx[i0 : i0 + m], out=b2)
+        b1 += b2
+        b1[0] = seed  # the first cell carries the seed, no step
+        np.cumsum(b1, out=b1)
+        np.multiply(sigx[i0 : i0 + m], sigy[j0 : j0 + m], out=b2)
+        b1 *= b2
+        if remap:
+            np.abs(b1, out=b1)
+        seg = mp_y[j0 : j0 + m]
+        upd = np.nonzero(b1 > seg)[0]
+        if upd.size:
+            seg[upd] = b1[upd]
+            idx_y[j0 : j0 + m][upd] = upd + (x0 + i0)
+        seg = mp_x[i0 : i0 + m]
+        upd = np.nonzero(b1 > seg)[0]
+        if upd.size:
+            seg[upd] = b1[upd]
+            idx_x[i0 : i0 + m][upd] = upd + (y0 + j0)
+
+
 def mpx_tile_partial(
     x: np.ndarray,
     y: np.ndarray,
@@ -769,120 +694,58 @@ def mpx_tile_partial(
     remap_neg_corr: bool = False,
     self_join: bool = True,
 ):
-    """SCAMP-style 2-D tile partial of the MPX self-join.
+    """SCAMP-style 2-D tile partial of the MPX self- or AB-join.
 
     The distributed decomposition for mega-series: instead of shipping
     the WHOLE series to every diagonal-batch task (shuffle volume B×n
     and a single-row assembly that hits Spark's 2 GiB ceiling around
-    10^8 points), the distance matrix's upper triangle is tiled into
-    (row-range × col-range) blocks and each task receives only the two
-    O(T + w) segments its block touches.
+    10^8 points), the distance matrix is tiled into (row-range ×
+    col-range) blocks and each task receives only the two O(T + w)
+    segments its block touches.
 
     Self-join (default): x covers global positions
     [r0, r0 + n_row + w - 1) of the series; y covers
     [c0, c0 + n_col + w - 1); c0 >= r0 (upper triangle). The tile
     computes corr for all pairs (gi, gj) with gi in the row range,
     gj in the col range and gj - gi >= excl = max(1, w//4) — the MPX
-    exclusion zone (matrixprofile.go:998-1001).
+    exclusion zone (matrixprofile.go:998-1001). A diagonal tile
+    (r0 == c0) sweeps into ONE array, exactly like the whole-series
+    kernel, and returns it as both the row and the col partial.
 
     AB-join (self_join=False): x is a segment of series A at offset r0,
     y a segment of series B at offset c0 — independent coordinate
-    systems, ALL pairs valid (no exclusion zone,
-    mpxabBatch/mpxbaBatch matrixprofile.go:1057-1198); mp_row carries
+    systems, ALL pairs valid (no exclusion zone); mp_row carries
     A-side partials with B-space neighbor indices and mp_col the
     reverse.
 
-    Both use the same difference-stream recurrence as mpxBatch:
-    local df/dg/mu/sig at position p equal their global values because
-    every quantity is window-local. Diagonal seeds come from one FFT
-    sliding dot per side (two total). Diagonals are traversed in
-    ascending global-diagonal order with strict > (earliest diagonal
-    wins ties, Go parity).
+    Seeds are _centered_seeds of each side (two FFTs when the tile has
+    negative diagonals) and the sweep is diag_sweep in ascending global
+    diagonal order.
 
     Returns (mp_row, idx_row, mp_col, idx_col): Pearson-space partial
     profiles for the tile's row / col offset ranges, neighbor indices
     GLOBAL. Callers convert with p2e and merge partials by max-corr.
     """
-    from .mass import cross_correlate
-
     x = np.ascontiguousarray(x, dtype=np.float64)
     y = np.ascontiguousarray(y, dtype=np.float64)
-    excl = max(1, w // 4)
-    lx = x.size - w + 1
-    ly = y.size - w + 1
-    nr = min(n_row, lx)
-    nc = min(n_col, ly)
-    mp_row = np.full(max(nr, 0), -1.0)
-    idx_row = np.zeros(max(nr, 0), dtype=np.int64)
-    mp_col = np.full(max(nc, 0), -1.0)
-    idx_col = np.zeros(max(nc, 0), dtype=np.int64)
-    if nr <= 0 or nc <= 0:
+    nr = max(min(n_row, x.size - w + 1), 0)
+    nc = max(min(n_col, y.size - w + 1), 0)
+    one = self_join and r0 == c0
+    mp_row, idx_row = _partial(nr)
+    mp_col, idx_col = (mp_row, idx_row) if one else _partial(nc)
+    d_lo = max(-(nr - 1), max(1, w // 4) - (c0 - r0)) if self_join else -(nr - 1)
+    d_hi = nc - 1
+    if nr == 0 or nc == 0 or d_lo > d_hi:
         return mp_row, idx_row, mp_col, idx_col
 
-    mux, sigx = mu_invn(x, w)
-    muy, sigy = mu_invn(y, w)
-    dfx = np.zeros(lx)
-    dgx = np.zeros(lx)
-    dfx[1:] = 0.5 * (x[w : w + lx - 1] - x[: lx - 1])
-    dgx[1:] = (x[w : w + lx - 1] - mux[1:lx]) + (x[: lx - 1] - mux[: lx - 1])
-    dfy = np.zeros(ly)
-    dgy = np.zeros(ly)
-    dfy[1:] = 0.5 * (y[w : w + ly - 1] - y[: ly - 1])
-    dgy[1:] = (y[w : w + ly - 1] - muy[1:ly]) + (y[: ly - 1] - muy[: ly - 1])
-
-    if self_join:
-        off = c0 - r0
-        d_min = max(-(nr - 1), excl - off)
-    else:
-        d_min = -(nr - 1)
-    d_max = nc - 1
-    if d_min > d_max:
-        return mp_row, idx_row, mp_col, idx_col
-
-    # seeds: <x[i:i+w]-mux[i], y[j:j+w]-muy[j]> = dot - w·mux[i]·muy[j]
-    seeds_pos = cross_correlate(x[:w], y)[:ly] - float(w) * mux[0] * muy[:ly]
-    seeds_neg = (
-        cross_correlate(y[:w], x)[:lx] - float(w) * muy[0] * mux[:lx]
-        if d_min < 0
-        else None
-    )
-
-    t1 = np.empty(max(nr, nc))
-    t2 = np.empty(max(nr, nc))
-    for d in range(d_min, d_max + 1):
-        if d >= 0:
-            i0, j0 = 0, d
-            m = min(nr, nc - d)
-            seed = seeds_pos[d]
-        else:
-            i0, j0 = -d, 0
-            m = min(nr + d, nc)
-            seed = seeds_neg[-d]
-        if m <= 0:
-            continue
-        b1 = t1[:m]
-        b2 = t2[:m]
-        np.multiply(dfx[i0 : i0 + m], dgy[j0 : j0 + m], out=b1)
-        np.multiply(dfy[j0 : j0 + m], dgx[i0 : i0 + m], out=b2)
-        b1 += b2
-        b1[0] = seed  # first cell carries the exact FFT seed, no step term
-        np.cumsum(b1, out=b1)
-        np.multiply(sigx[i0 : i0 + m], sigy[j0 : j0 + m], out=b2)
-        b1 *= b2
-        if remap_neg_corr:
-            np.abs(b1, out=b1)
-        # row side first (global cell gi = r0+i0+t is the smaller index —
-        # mirrors the whole-series kernel's diagonal-side-first order)
-        seg = mp_row[i0 : i0 + m]
-        upd = np.nonzero(b1 > seg)[0]
-        if upd.size:
-            seg[upd] = b1[upd]
-            idx_row[i0 + upd] = c0 + j0 + upd
-        seg = mp_col[j0 : j0 + m]
-        upd = np.nonzero(b1 > seg)[0]
-        if upd.size:
-            seg[upd] = b1[upd]
-            idx_col[j0 + upd] = r0 + i0 + upd
+    xs = _diff_streams(x, w)
+    ys = xs if one else _diff_streams(y, w)
+    seeds = _centered_seeds(x, y, xs[0], ys[0], w)[max(d_lo, 0) : d_hi + 1]
+    if d_lo < 0:
+        # diagonal d < 0 starts at cell (-d, 0)
+        neg = _centered_seeds(y, x, ys[0], xs[0], w)
+        seeds = np.concatenate((neg[-d_lo:0:-1], seeds))
+    diag_sweep(xs, ys, seeds, d_lo, d_hi, mp_row, idx_row, mp_col, idx_col, r0, c0, remap_neg_corr)
     return mp_row, idx_row, mp_col, idx_col
 
 

@@ -48,12 +48,15 @@ def pmp_fused(
     Per-window semantics match _mpx: exclusion zone max(1, w//4),
     diagonals ascending with strict > (earliest diagonal wins ties,
     diagonal-side touch before offset-side), MuInvN zero-sigma guard,
-    default (corr -1 → p2e, idx 0) for offsets with no candidate, and
-    the _merge None convention ((inf, MAXINT)) when the zone exceeds
-    the profile. Values differ from the faithful kernel only by
+    and (corr -inf, idx MAXINT) for offsets with no candidate outside
+    the exclusion zone. Values differ from the faithful kernel only by
     accumulation order (direct range sums vs the df/dg recurrence,
     ~1e-12 relative); Go-fixture parity stays pinned on the faithful
     kernel, and equivalence of the two is pinned by pytest.
+
+    It keeps its own loop rather than calling matrix_profile.diag_sweep:
+    one product scan per diagonal serves every window, which the
+    per-window df/dg recurrence cannot share.
 
     Returns {w: (mp, idx)} in Euclidean or Pearson space per opts.
     """
@@ -78,30 +81,21 @@ def pmp_fused(
             )
         la = n - w + 1
         excl = max(1, w // 4)
-        if excl > la:
-            # faithful path: the only diagonal batch returns None and the
-            # merge leaves the _alloc defaults
-            out[w] = (
-                np.full(la, np.inf),
-                np.full(la, _MAXINT, dtype=np.int64),
-            )
-            continue
         stats[w] = mu_invn(a, w)
-        mps[w] = np.full(la, -1.0)
-        idxs[w] = np.zeros(la, dtype=np.int64)
+        mps[w] = np.full(la, -np.inf)
+        idxs[w] = np.full(la, _MAXINT, dtype=np.int64)
         lens[w] = la
         excls[w] = excl
-    act = [w for w in ws if w in stats]
-    if act:
+    if ws:
         remap = opts.remap_neg_corr
-        d_lo = min(excls[w] for w in act)
-        d_hi = max(lens[w] for w in act) - 1
+        d_lo = min(excls[w] for w in ws)
+        d_hi = max(lens[w] for w in ws) - 1
         prod = np.empty(n - d_lo)
         for d in range(d_lo, d_hi + 1):
             m = n - d
             np.multiply(a[:m], a[d:], out=prod[:m])
             pref = np.cumsum(prod[:m])
-            for w in act:
+            for w in ws:
                 la, excl = lens[w], excls[w]
                 if d < excl or d >= la:
                     continue
@@ -124,7 +118,7 @@ def pmp_fused(
                 if upd.size:
                     mp[upd] = c[upd]
                     mpidx[upd] = upd + d
-        for w in act:
+        for w in ws:
             mp = mps[w]
             if opts.euclidean:
                 mp = p2e(mp, w)

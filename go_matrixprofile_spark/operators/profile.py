@@ -14,7 +14,9 @@ Two physical strategies (chosen by series length, SURVEY.md §7.4):
    triangle splits into blocks, each tile task receives only the two
    O(T + w) series segments its block touches (never the whole
    series), computes an exact Pearson-space partial
-   (kernels.mpx_tile_partial), and partials merge with
+   (kernels.mpx_tile_partial, a thin caller of the one MPX sweep
+   kernels.matrix_profile.diag_sweep; a diagonal tile sweeps into a
+   single array like the whole-series kernel), and partials merge with
    max_by(corr, tie → earliest global diagonal) before one final
    Pearson→Euclidean conversion. Shuffle volume is O(k·n) per conv and
    no single row holds a full series, so mega-threads clear both the
@@ -443,56 +445,22 @@ def matrix_profile_chunked(
                     w,
                     remap_neg_corr=opts.remap_neg_corr,
                 )
+                sides = [(r0, mpr, idr)]
+                # a diagonal tile (r == c) returns one partial as both sides
+                if row.r != row.c:
+                    sides.append((c0, mpc, idc))
                 frames = [
                     pd.DataFrame(
                         {
                             "conv_id": row.conv_id,
                             "metric": row.metric,
-                            "offset": np.arange(r0, r0 + mpr.size, dtype=np.int32),
-                            "corr": mpr,
-                            "idx": idr,
+                            "offset": np.arange(o, o + prof.size, dtype=np.int32),
+                            "corr": prof,
+                            "idx": idx,
                         }
                     )
+                    for o, prof, idx in sides
                 ]
-                if not (row.r == row.c):
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "conv_id": row.conv_id,
-                                "metric": row.metric,
-                                "offset": np.arange(c0, c0 + mpc.size, dtype=np.int32),
-                                "corr": mpc,
-                                "idx": idc,
-                            }
-                        )
-                    )
-                else:
-                    # diagonal tile: row/col ranges coincide; emit the
-                    # element-wise better of the two partials. Exact
-                    # Pearson ties break toward the smaller |idx - offset|
-                    # (earliest global diagonal), and at EQUAL distance
-                    # toward the col partial, whose idx = offset - d is
-                    # the lower one — the whole-series kernel touches the
-                    # diagonal side (lower idx) first within a diagonal,
-                    # so strict > there means lower idx wins (r02 advisor
-                    # item). Same key as the cross-tile max_by merge.
-                    offs = np.arange(r0, r0 + mpr.size, dtype=np.int64)
-                    better = (mpc > mpr) | (
-                        (mpc == mpr) & (np.abs(idc - offs) <= np.abs(idr - offs))
-                    )
-                    mpr2 = np.where(better, mpc, mpr)
-                    idr2 = np.where(better, idc, idr)
-                    frames = [
-                        pd.DataFrame(
-                            {
-                                "conv_id": row.conv_id,
-                                "metric": row.metric,
-                                "offset": np.arange(r0, r0 + mpr.size, dtype=np.int32),
-                                "corr": mpr2,
-                                "idx": idr2,
-                            }
-                        )
-                    ]
                 yield pd.concat(frames, ignore_index=True)
 
     partials = tile_in.mapInPandas(tile_kernel, part_schema)

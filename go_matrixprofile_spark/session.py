@@ -8,9 +8,27 @@ oracle-stable.
 
 from __future__ import annotations
 
+import logging
 import os
+import time
+import weakref
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+# contexts already warmed up; a stopped-and-recreated session is a new
+# context and warms up again
+_warmed = weakref.WeakSet()
+
+
+def driver_memory(total_bytes: int) -> str:
+    """Default spark.driver.memory for a host with total_bytes of RAM:
+    half of it in whole GiB, at least 1g and at most 48g. In local mode
+    the driver heap also holds the executors, while the Python workers
+    and the JVM's off-heap memory need the other half; a heap larger
+    than the host gets the JVM OOM-killed instead of garbage-collected."""
+    return f"{min(48, max(1, total_bytes // 2**31))}g"
 
 
 def get_spark(
@@ -28,6 +46,10 @@ def get_spark(
     # oversubscribes the node 32x and collapses kernel throughput
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or driver_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
+    log.info("spark.driver.memory=%s", heap)
     builder = (
         SparkSession.builder.master(master)
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
@@ -49,7 +71,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -69,9 +91,13 @@ def _warm_up(spark: SparkSession) -> None:
     has nothing to do with the query — misleading in benchmarks and
     wasted on the critical path of short jobs. Runs tiny synthetic jobs
     only (spark.range): no input data is read, nothing is cached, no
-    result is retained. Disable with SPARK_GRAFT_NO_WARMUP=1."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1":
+    result is retained. Runs once per SparkContext. Disable with
+    SPARK_GRAFT_NO_WARMUP=1."""
+    sc = spark.sparkContext
+    if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1" or sc in _warmed:
         return
+    _warmed.add(sc)
+    t0 = time.perf_counter()
     try:
         import pandas as pd  # noqa: F401
         from pyspark.sql import functions as F
@@ -123,3 +149,4 @@ def _warm_up(spark: SparkSession) -> None:
         # warm-up is best-effort: a failure here must never break
         # session creation (e.g. minimal builds without pandas/Arrow)
         pass
+    log.info("session warm-up took %.2f s", time.perf_counter() - t0)

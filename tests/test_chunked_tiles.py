@@ -125,33 +125,44 @@ class TestTileEdgeCases:
     def test_tiny_and_odd_series(self, spark, n):
         """Tile decomposition at degenerate sizes: series barely longer
         than w, lengths not divisible by the tile width — values and
-        indices must still equal the whole-series kernel."""
+        indices must still equal the whole-series kernel. Conversation
+        "off" is the same series shifted to mean ~1e3: tile seeds must
+        not cancel on an offset-heavy series."""
         from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile, MPOpts
         from go_matrixprofile_spark.operators.profile import matrix_profile_chunked
 
         w = 8
         rng = np.random.default_rng(n)
         sig = rng.normal(0, 1, n).cumsum() + rng.random(n)
+        series = {"c": sig, "off": sig + 1e3}
         src = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "conv_id": "c",
-                    "metric": "m",
-                    "bucket_s": np.arange(n, dtype=np.float64),
-                    "value": sig,
-                }
+            pd.concat(
+                pd.DataFrame(
+                    {
+                        "conv_id": cid,
+                        "metric": "m",
+                        "bucket_s": np.arange(n, dtype=np.float64),
+                        "value": vals,
+                    }
+                )
+                for cid, vals in series.items()
             )
         )
-        want = MatrixProfile(sig, None, w).compute(MPOpts(algorithm="mpx"))
         for kwargs in ({"n_batches": 4}, {"tile_points": 10}):
-            got = (
-                matrix_profile_chunked(src, w=w, **kwargs).orderBy("offset").toPandas()
+            got_all = (
+                matrix_profile_chunked(src, w=w, **kwargs)
+                .orderBy("conv_id", "offset")
+                .toPandas()
             )
-            assert len(got) == want.mp.size, (n, kwargs)
-            np.testing.assert_allclose(
-                got["mp"].to_numpy(), want.mp, atol=1e-9, err_msg=str((n, kwargs))
-            )
-            assert (got["idx"].to_numpy() == want.idx).all(), (n, kwargs)
+            for cid, vals in series.items():
+                want = MatrixProfile(vals, None, w).compute(MPOpts(algorithm="mpx"))
+                got = got_all[got_all.conv_id == cid]
+                msg = str((n, cid, kwargs))
+                assert len(got) == want.mp.size, msg
+                np.testing.assert_allclose(
+                    got["mp"].to_numpy(), want.mp, rtol=0, atol=1e-9, err_msg=msg
+                )
+                assert (got["idx"].to_numpy() == want.idx).all(), msg
 
 
 class TestABChunked:
@@ -162,7 +173,8 @@ class TestABChunked:
         the window-sort and the arithmetic grid_step position paths
         (the input is a regular step-1 grid, so grid_step=1 takes the
         sort-free branch; irregular fallback is covered by the shared
-        _grid_positions test in TestChunkedTiles)."""
+        _grid_positions test in TestChunkedTiles). Conversation c2 is
+        offset-heavy (both sides at mean ~1e3)."""
         from go_matrixprofile_spark.kernels import siggen
         from go_matrixprofile_spark.operators.profile import (
             matrix_profile_ab,
@@ -171,12 +183,12 @@ class TestABChunked:
 
         w = 12
         rows_a, rows_b = [], []
-        for cid in range(2):
+        for cid, offset in ((0, 0.0), (1, 0.0), (2, 1e3)):
             na, nb = 300 + cid * 41, 240 + cid * 17
-            a = siggen.add(
+            a = offset + siggen.add(
                 siggen.sin(1.0, 4, 0, 0, 60, na / 60)[:na], siggen.noise(0.3, na, cid)
             )
-            b = siggen.add(
+            b = offset + siggen.add(
                 siggen.sin(0.7, 6, 1, 0, 60, nb / 60)[:nb],
                 siggen.noise(0.3, nb, cid + 10),
             )
@@ -204,7 +216,7 @@ class TestABChunked:
         )
         assert len(got) == len(want) > 0
         np.testing.assert_allclose(
-            got["mp"].to_numpy(), want["mp"].to_numpy(), atol=1e-9
+            got["mp"].to_numpy(), want["mp"].to_numpy(), rtol=0, atol=1e-9
         )
         assert (got["idx"].to_numpy() == want["idx"].to_numpy()).all()
 

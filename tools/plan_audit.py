@@ -12,7 +12,9 @@ Every operator family gets the plan invariants that make it survive a
 - aggregations split partial/final (map-side combine before the
   exchange);
 - kernel stages sit behind explicit repartitions (Exchange
-  hashpartitioning with our numbered partition count).
+  hashpartitioning with our numbered partition count);
+- shuffle counts: exactly N shuffle-exchange nodes, counted by node
+  header so broadcast and reused exchanges are not mistaken for them.
 
 Run: python tools/plan_audit.py [sf_dir]   (writes PLANS.md)
 Exit 1 on any violated invariant.
@@ -21,6 +23,7 @@ Exit 1 on any violated invariant.
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -32,6 +35,22 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def shuffle_exchanges(p: str) -> int:
+    """Shuffle-exchange nodes in a formatted plan, counted by their detail
+    headers ("(7) Exchange"): BroadcastExchange and ReusedExchange nodes,
+    and the tree lines that repeat each header, do not count."""
+    return len(re.findall(r"^\(\d+\) Exchange$", p, re.M))
+
+
+def read_schemas(p: str) -> list[set[str]]:
+    """Column names each scan reads, one set per ReadSchema line."""
+    return [
+        set(re.findall(r"[<,](\w+):", line))
+        for line in p.splitlines()
+        if line.startswith("ReadSchema: ")
+    ]
 
 
 def main() -> int:
@@ -57,7 +76,8 @@ def main() -> int:
     #    event_type; `value` must be pruned out of the scan
     df = qs["series_text_len"](spark, sf_dir)
     p = plan_of(df)
-    pruned = "value" not in p.split("ReadSchema")[1].split("\n")[0] if "ReadSchema" in p else False
+    schemas = read_schemas(p)
+    pruned = bool(schemas) and all("value" not in cols for cols in schemas)
     checks.append(
         (
             "series_text_len: scan prunes unused `value` column",
@@ -194,7 +214,8 @@ def main() -> int:
     #     read with NO text payload, and the former dedicated
     #     (conv_id, bucket) pre-aggregation exchange is gone (2, not 3,
     #     exchanges). Formatted plans print each scan node twice
-    #     (tree + detail), so 2 physical scans == 4 occurrences.
+    #     (tree + detail), so 2 physical scans == 4 occurrences;
+    #     exchanges are counted by their detail headers.
     from go_matrixprofile_spark.operators.series import derive_series
 
     p = plan_of(
@@ -212,11 +233,10 @@ def main() -> int:
                 ("exactly 2 parquet scans", p.count("Scan parquet") == 4),
                 ("explode fuses the point metrics", "Generate" in p),
                 ("single Union of the two branches", p.count("Union") == 2),
-                ("exactly 2 exchanges (no rate pre-agg shuffle)", p.count("Exchange") == 4),
+                ("exactly 2 exchanges (no rate pre-agg shuffle)", shuffle_exchanges(p) == 2),
                 (
                     "rate-leg scan prunes the text payload",
-                    p.count("ReadSchema: struct<event_id:bigint,ts:timestamp_ntz,user_id:bigint>")
-                    >= 1,
+                    any("props" not in cols for cols in read_schemas(p)),
                 ),
             ],
         )
@@ -311,7 +331,7 @@ def main() -> int:
             "pack_sequences: single bucket shuffle + one Arrow group pass",
             p,
             [
-                ("exactly one exchange", p.count("Exchange") == 2),
+                ("exactly one exchange", shuffle_exchanges(p) == 1),
                 ("Arrow group apply", "FlatMapGroupsInPandas" in p),
             ],
         )
@@ -368,7 +388,7 @@ def main() -> int:
             "split+pack: still exactly one bucket shuffle",
             p,
             [
-                ("exactly one exchange", p.count("Exchange") == 2),
+                ("exactly one exchange", shuffle_exchanges(p) == 1),
                 ("Arrow group apply", "FlatMapGroupsInPandas" in p),
             ],
         )
@@ -415,7 +435,7 @@ def main() -> int:
             "asof_join(nearest): one key shuffle, two window passes, no join",
             p,
             [
-                ("exactly one exchange", p.count("Exchange") == 2),
+                ("exactly one exchange", shuffle_exchanges(p) == 1),
                 ("window pass present", "Window" in p),
                 ("no join operator", "Join" not in p),
             ],
@@ -511,8 +531,8 @@ def main() -> int:
                 ("no Python eval", "BatchEvalPython" not in p and "InPandas" not in p),
                 (
                     "text pruned out of the scan",
-                    "ReadSchema" in p
-                    and "text" not in p.split("ReadSchema")[1].split("\n")[0],
+                    bool(read_schemas(p))
+                    and all("text" not in cols for cols in read_schemas(p)),
                 ),
             ],
         )
