@@ -625,7 +625,7 @@ def dedup_groups(
 
     algorithm: "minlabel" (min-label propagation + pointer jumping, the
     default) or "star" (alternating large-star/small-star). Measured
-    crossover (tools/cc_bench.py, BENCH_BASELINE.md): on the verified
+    crossover (BENCH_BASELINE.md §3d): on the verified
     sparse graphs this default pipeline produces, minlabel's two
     shuffles/round edge out star's four; on heavy raw-candidate graphs
     (~600k junk edges, hub components — the verify_jaccard=None

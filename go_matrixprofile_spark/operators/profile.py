@@ -41,7 +41,6 @@ from pyspark.sql import types as T
 
 from ..kernels.kmp import KMP
 from ..kernels.matrix_profile import MatrixProfile, MPOpts, mpdist
-from ..kernels.pmp import PMP
 
 MP_SCHEMA = T.StructType(
     [
@@ -156,27 +155,27 @@ def matrix_profile_assembled(
     w: int,
     opts: MPOpts | None = None,
     min_len: int | None = None,
-    spread: bool = True,
 ) -> DataFrame:
     """MP over pre-assembled array rows (conv_id, metric, vals) — the
     entry point when series are already stored array-per-conv (e.g. a
     materialized tier), skipping the assembly shuffle.
 
-    spread=True round-robins the (compact) array rows across
-    cpu_partitions before the kernel: the assembly aggregation leaves
-    rows hash-laid-out by conv_id, and for fleets whose series count is
-    near the partition count, hash collisions put 2-3 series in some
-    kernel tasks while others sit empty — the stage makespan becomes 3
+    The (compact) array rows are round-robined across cpu_partitions
+    before the kernel: the assembly aggregation leaves rows
+    hash-laid-out by conv_id, and for fleets whose series count is near
+    the partition count, hash collisions put 2-3 series in some kernel
+    tasks while others sit empty — the stage makespan becomes 3
     series-times instead of 2 (measured on the 64×16k bench fleet).
     The extra exchange moves only one array row per series (MBs), not
     the long-format points, and the kernel needs no key clustering.
-    Regime note (measured): the spread pays off for FEW-LARGE-SERIES
-    fleets (the reference's own workload: −20% on 64×16k, where one
-    collided task idles half the cluster for a whole kernel-time); for
-    MANY-SMALL-SERIES corpus fleets the keys already balance the
-    partitions (~30+ series each) and the spread only adds an array
-    shuffle + a stage barrier (−1.1 s on a 10× fleet) — such callers
-    should pass spread=False to keep assembly→kernel stage fusion."""
+    Regime note (measured): the repartition pays off for
+    FEW-LARGE-SERIES fleets (the reference's own workload: −20% on
+    64×16k, where one collided task idles half the cluster for a whole
+    kernel-time); for MANY-SMALL-SERIES corpus fleets the keys already
+    balance the partitions (~30+ series each) and it only adds an array
+    shuffle + a stage barrier (−1.1 s on a 10× fleet). Per-fleet
+    kernel-task sizing belongs in the one tile planner planned on
+    ROADMAP.md (direction 3), not in a caller-side switch."""
     opts = opts or MPOpts()
     min_len = max(min_len or 0, w + 1)
 
@@ -199,8 +198,7 @@ def matrix_profile_assembled(
                     }
                 )
 
-    if spread:
-        assembled = assembled.repartition(cpu_partitions(assembled))
+    assembled = assembled.repartition(cpu_partitions(assembled))
     return assembled.mapInPandas(kernel, MP_SCHEMA)
 
 
@@ -625,57 +623,6 @@ def k_matrix_profile(series_multi: DataFrame, w: int) -> DataFrame:
     return src.groupBy("conv_id").applyInPandas(kernel, schema)
 
 
-def pan_matrix_profile(
-    series: DataFrame, lower_m: int, upper_m: int, opts: MPOpts | None = None
-) -> DataFrame:
-    """Pan-MP per conv: one profile per window in [lower_m, upper_m]
-    (pmp.go:119-161). Output keyed by (conv_id, metric, w, offset)."""
-    opts = opts or MPOpts()
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("metric", T.StringType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("offset", T.IntegerType(), False),
-            T.StructField("mp", T.DoubleType(), True),
-            T.StructField("idx", T.LongType(), True),
-        ]
-    )
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id, metric = key
-        vals = _series_values(pdf)
-        if vals.size < upper_m + 2:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        p = PMP(vals).compute(lower_m, upper_m, opts)
-        frames = []
-        for level, w in enumerate(range(lower_m, upper_m + 1)):
-            if w not in p.pwindows:
-                continue
-            prof = p.pmp[level][: vals.size - w + 1]
-            idx = p.pidx[level][: vals.size - w + 1]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "conv_id": conv_id,
-                        "metric": metric,
-                        "w": np.int32(w),
-                        "offset": np.arange(prof.size, dtype=np.int32),
-                        "mp": prof,
-                        "idx": idx,
-                    }
-                )
-            )
-        if not frames:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        return pd.concat(frames, ignore_index=True)
-
-    src = series.select("conv_id", "metric", "bucket_s", "value").repartition(
-        cpu_partitions(series), "conv_id", "metric"
-    )
-    return src.groupBy("conv_id", "metric").applyInPandas(kernel, schema)
-
-
 def pan_matrix_profile_distributed(
     series: DataFrame,
     lower_m: int,
@@ -686,11 +633,11 @@ def pan_matrix_profile_distributed(
     """Pan-MP with (conv, window-batch) task granularity and a FUSED
     multi-window kernel.
 
-    ``pan_matrix_profile`` computes every window inside ONE per-conv
-    task (faithful to pmp.go:119-161, which loops mp.Compute over
-    windows) — fine for a wide fleet, but a few long conversations
-    leave cores idle while each task grinds through the whole window
-    range. Here the window dimension becomes data: the per-conv array
+    The reference (pmp.go:119-161) loops mp.Compute over windows inside
+    one call; run as ONE per-conv task that is fine for a wide fleet,
+    but a few long conversations leave cores idle while each task
+    grinds through the whole window range. Here the window dimension
+    becomes data: the per-conv array
     crosses with the broadcast window-BATCH list (binary_split order +
     sample_pct truncation, pmp.go:119-121, chunked into
     ``windows_per_task`` groups) and each (conv, metric, batch) is its
@@ -732,8 +679,8 @@ def pan_matrix_profile_distributed(
         for pdf in it:
             for row in pdf.itertuples(index=False):
                 vals = np.asarray(row.vals, dtype=np.float64)
-                # same whole-conv gate as pan_matrix_profile: a conv is
-                # in the pan-MP iff it fits the LARGEST window
+                # whole-conv gate: a conv is in the pan-MP iff it fits
+                # the LARGEST window
                 if vals.size < upper_m + 2:
                     continue
                 fused = pmp_fused(vals, list(row.ws), opts)

@@ -66,18 +66,6 @@ def text_quality(documents: DataFrame) -> DataFrame:
     )
 
 
-def token_counts(documents: DataFrame) -> DataFrame:
-    """Whitespace token count + pre-token (regex) count. Kept for the
-    cheap-projection use case; token_counts_bpe applies the REAL merges
-    table on top of the same pre-tokenization."""
-    text = F.col("text")
-    return documents.select(
-        "doc_id",
-        F.size(F.split(text, r"\s+")).alias("n_ws_tokens"),
-        F.size(F.regexp_extract_all(text, F.lit(_WORDISH), 0)).alias("n_bpe_tokens"),
-    )
-
-
 def token_counts_bpe(documents: DataFrame, merges=None) -> DataFrame:
     """REAL BPE token counting from an explicit merges table
     (functions/bpe.py, Sennrich et al. 2016) — no per-row Python.

@@ -332,11 +332,13 @@ class TestTieOrder:
 class TestPanDistributed:
     def test_equals_per_conv_pan(self, spark):
         """(conv, window-batch) task granularity with the fused
-        multi-window kernel reproduces the per-conv pan-MP: values to
-        accumulation order (1e-9), indices exactly."""
+        multi-window kernel reproduces the NumPy pan-MP kernel run per
+        collected series: values to accumulation order (1e-9), indices
+        exactly."""
         from go_matrixprofile_spark.kernels import siggen
+        from go_matrixprofile_spark.kernels.matrix_profile import MPOpts
+        from go_matrixprofile_spark.kernels.pmp import PMP
         from go_matrixprofile_spark.operators.profile import (
-            pan_matrix_profile,
             pan_matrix_profile_distributed,
         )
 
@@ -352,7 +354,27 @@ class TestPanDistributed:
             pd.DataFrame(rows, columns=["conv_id", "metric", "bucket_s", "value"])
         )
         key = ["conv_id", "metric", "w", "offset"]
-        a = pan_matrix_profile(src, 6, 10).orderBy(key).toPandas()
+        frames = []
+        for (cid, metric), g in src.toPandas().groupby(["conv_id", "metric"]):
+            vals = g.sort_values("bucket_s")["value"].to_numpy(dtype=np.float64)
+            p = PMP(vals).compute(6, 10, MPOpts())
+            for level, w in enumerate(range(6, 11)):
+                if w not in p.pwindows:
+                    continue
+                m = vals.size - w + 1
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "conv_id": cid,
+                            "metric": metric,
+                            "w": w,
+                            "offset": np.arange(m),
+                            "mp": p.pmp[level][:m],
+                            "idx": p.pidx[level][:m],
+                        }
+                    )
+                )
+        a = pd.concat(frames).sort_values(key, ignore_index=True)
         for wpt in (1, 3, 8):
             b = (
                 pan_matrix_profile_distributed(src, 6, 10, windows_per_task=wpt)
@@ -360,6 +382,7 @@ class TestPanDistributed:
                 .toPandas()
             )
             assert len(a) == len(b) > 0, wpt
+            assert (a[key].to_numpy() == b[key].to_numpy()).all(), wpt
             np.testing.assert_allclose(
                 a["mp"].to_numpy(), b["mp"].to_numpy(), atol=1e-9
             )

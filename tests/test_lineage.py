@@ -1,0 +1,29 @@
+"""Lineage / checkpoint-resume tests."""
+
+
+class TestLineage:
+    def test_checkpoint_resume_skips_committed(self, spark, tmp_path):
+        from go_matrixprofile_spark.plans.lineage import checkpoint_stage, read_lineage
+
+        root = str(tmp_path / "ckpt")
+        df1 = spark.createDataFrame(
+            [("c1", 1.0), ("c1", 2.0), ("c2", 3.0)], ["conv_id", "v"]
+        )
+        out1 = checkpoint_stage(df1, root, "tier_1m")
+        assert out1.count() == 3
+        lin = read_lineage(spark, root).toPandas()
+        assert set(lin["partition_key"]) == {"c1", "c2"}
+
+        # rerun with one new partition: committed partitions are skipped
+        df2 = spark.createDataFrame(
+            [("c1", 99.0), ("c3", 4.0)], ["conv_id", "v"]
+        )
+        out2 = checkpoint_stage(df2, root, "tier_1m")
+        pdf = out2.toPandas()
+        # c1 not rewritten (resume semantics): its value stays 1.0/2.0
+        assert sorted(pdf[pdf.conv_id == "c1"]["v"]) == [1.0, 2.0]
+        assert 4.0 in set(pdf["v"])
+        lin = read_lineage(spark, root).toPandas()
+        assert set(lin["partition_key"]) == {"c1", "c2", "c3"}
+        # no duplicate lineage rows per partition
+        assert lin.groupby("partition_key").size().max() == 1
