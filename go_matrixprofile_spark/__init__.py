@@ -4,10 +4,11 @@ A from-scratch re-expression of the capabilities of
 matrix-profile-foundation/go-matrixprofile (reference at /root/reference/)
 as an Apache Spark DataFrame pipeline:
 
-- ``kernels``   — pure NumPy matrix-profile kernels (MPX, STOMP, STAMP, STMP,
+- ``kernels``   — NumPy matrix-profile kernels (MPX, STOMP, STAMP, STMP,
                   annotation vectors, motif/discord/segment discovery, KMP,
-                  PMP, MPDist, streaming update), fixture-parity-tested
-                  against the Go library's golden vectors.
+                  PMP, MPDist, streaming update; the MPX diagonal sweep
+                  compiled in C), fixture-parity-tested against the Go
+                  library's golden vectors.
 - ``operators`` — Spark DataFrame operators: transcript→series derivation,
                   tiered rollup (raw→1m→1h→1d), gap-fill, distributed
                   matrix profile over per-conv_id partitions, dedup,

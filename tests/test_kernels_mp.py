@@ -7,9 +7,13 @@ Fixtures from /root/reference/matrixprofile_test.go (canonical series at
 (matrixprofile_test.go:452/692).
 """
 
+import logging
+import shutil
+
 import numpy as np
 import pytest
 
+from go_matrixprofile_spark.kernels import matrix_profile as mpm
 from go_matrixprofile_spark.kernels import MatrixProfile, MPOpts, compute_mp, mpdist
 from go_matrixprofile_spark.kernels.mass import cross_correlate, distance_profile, mass
 from go_matrixprofile_spark.kernels.util import mov_mean_std
@@ -261,3 +265,45 @@ class TestSaveLoad:
         mp = compute_mp(SIG, None, 4)
         with pytest.raises(ValueError):
             mp.save(str(tmp_path / "x.csv"), "csv")
+
+
+class TestSweepBackend:
+    """_load_sweep falls back to _diag_sweep_numpy, with one WARNING
+    naming the reason, when the library cannot be built."""
+
+    def _load(self, caplog, **kw):
+        with caplog.at_level(logging.INFO, logger=mpm.__name__):
+            sweep = mpm._load_sweep(**kw)
+        return sweep, [r for r in caplog.records if r.name == mpm.__name__]
+
+    def _assert_fallback(self, caplog, monkeypatch, reason, **kw):
+        sweep, records = self._load(caplog, **kw)
+        assert sweep is mpm._diag_sweep_numpy
+        assert [r.levelno for r in records] == [logging.WARNING]
+        assert "NumPy fallback" in records[0].getMessage()
+        assert reason in records[0].getMessage()
+        x = np.random.default_rng(3).normal(size=300).cumsum()
+        want = compute_mp(x, None, 16)
+        monkeypatch.setattr(mpm, "diag_sweep", sweep)
+        got = compute_mp(x, None, 16)
+        assert np.array_equal(got.mp, want.mp) and np.array_equal(got.idx, want.idx)
+
+    def test_missing_compiler(self, tmp_path, caplog, monkeypatch):
+        self._assert_fallback(caplog, monkeypatch, "no-such-cc",
+                              cc="no-such-cc", cache_dir=str(tmp_path / "cache"))
+
+    def test_unwritable_cache_dir(self, tmp_path, caplog, monkeypatch):
+        # a path below a regular file cannot be created, even by root
+        (tmp_path / "file").write_text("")
+        cache = tmp_path / "file" / "cache"
+        self._assert_fallback(caplog, monkeypatch, str(cache), cache_dir=str(cache))
+
+    @pytest.mark.skipif(shutil.which("cc") is None, reason="no C compiler")
+    def test_builds_into_cache_dir(self, tmp_path, caplog):
+        sweep, records = self._load(caplog, cache_dir=str(tmp_path))
+        assert sweep is not mpm._diag_sweep_numpy
+        [lib] = tmp_path.iterdir()
+        assert lib.name.startswith("diag_sweep-") and lib.suffix == ".so"
+        assert [(r.levelno, r.getMessage()) for r in records] == [
+            (logging.INFO, f"diag_sweep: C {lib}")
+        ]

@@ -2,11 +2,14 @@
 table-driven goldens (SURVEY.md §5): structural guarantees that must
 hold for ANY input, not just fixtures."""
 
+import shutil
+
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 from numpy.lib.stride_tricks import sliding_window_view
 
+from go_matrixprofile_spark.kernels import matrix_profile as mpm
 from go_matrixprofile_spark.kernels.matrix_profile import (
     MatrixProfile,
     MPOpts,
@@ -309,11 +312,6 @@ class TestDifferentialBruteForce:
         _assert_profile(corr, valid, m.mp, m.idx, w, _tol(w, x, power=2), False,
                         empty_idx=None)
 
-    @pytest.mark.xfail(
-        strict=True,
-        reason="STOMP's uncentered cumulative-sum statistics and dot "
-        "products cancel catastrophically at mean 1e6 (NaN windows)",
-    )
     def test_stomp_offset_heavy(self):
         x, w = _make_series("walk", 64, 8, 1e6, 0), 8
         corr = _brute_corr(x, x, w)
@@ -321,6 +319,105 @@ class TestDifferentialBruteForce:
         valid = (nb - off <= -(w // 2)) | (nb - off > w // 2)
         m = MatrixProfile(x, None, w).compute(MPOpts(algorithm="stomp"))
         _assert_profile(corr, valid, m.mp, m.idx, w, _tol(w, x), False, empty_idx=None)
+
+
+def _assert_same_on_both_sweeps(run):
+    """run() on the compiled sweep and on _diag_sweep_numpy return equal
+    arrays, NaN-aware and dtype included."""
+    compiled = mpm.diag_sweep
+    if compiled is mpm._diag_sweep_numpy:
+        if shutil.which("cc"):
+            pytest.fail("a C compiler is on PATH but the compiled diag_sweep did not load")
+        pytest.skip("no C compiler: the NumPy sweep is the only one")
+    got = run()
+    mpm.diag_sweep = mpm._diag_sweep_numpy
+    try:
+        want = run()
+    finally:
+        mpm.diag_sweep = compiled
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g.dtype == w.dtype
+        assert np.array_equal(g, w, equal_nan=True)
+
+
+@st.composite
+def _with_nonfinite(draw):
+    """mp_input() with one value replaced by NaN, +inf or -inf."""
+    w, [(x, kind)] = draw(mp_input())
+    x = x.copy()
+    x[draw(st.integers(min_value=0, max_value=x.size - 1))] = draw(
+        st.sampled_from([np.nan, np.inf, -np.inf])
+    )
+    return w, [(x, kind)]
+
+
+class TestCompiledSweepParity:
+    """The compiled diag_sweep and _diag_sweep_numpy give the same bits
+    on every MPX path, on TestDifferentialBruteForce's inputs."""
+
+    @settings(max_examples=40, deadline=None)
+    @given(mp_input())
+    def test_self_join(self, inp):
+        w, [(x, _)] = inp
+
+        def run():
+            out = []
+            for n_jobs in (1, 4):
+                for remap in (False, True):
+                    for euclidean in (True, False):
+                        m = MatrixProfile(x, None, w).compute(
+                            MPOpts(n_jobs=n_jobs, remap_neg_corr=remap, euclidean=euclidean)
+                        )
+                        out += [m.mp, m.idx]
+            return out
+
+        _assert_same_on_both_sweeps(run)
+
+    @settings(max_examples=30, deadline=None)
+    @given(mp_input(n_series=2))
+    def test_ab_join(self, inp):
+        """Both orders of the pair, so len(A) < len(B) and len(A) > len(B)
+        whenever the lengths differ."""
+        w, [(a, _), (b, _)] = inp
+
+        def run():
+            out = []
+            for x, y in ((a, b), (b, a)):
+                for n_jobs in (1, 4):
+                    m = MatrixProfile(x, y, w).compute(MPOpts(n_jobs=n_jobs))
+                    out += [m.mp, m.idx, m.mpb, m.idxb]
+            return out
+
+        _assert_same_on_both_sweeps(run)
+
+    @settings(max_examples=30, deadline=None)
+    @given(mp_input(n_series=2), st.integers(min_value=1, max_value=40))
+    def test_tiles(self, inp, t):
+        """Self-join tiles off the diagonal and every AB tile sweep
+        negative diagonals."""
+        w, [(a, _), (b, _)] = inp
+        _assert_same_on_both_sweeps(
+            lambda: [*_tiles_self(a, w, max(t, w)),
+                     *(v for part in _tiles_ab(a, b, w, max(t, w)) for v in part)]
+        )
+
+    @settings(max_examples=30, deadline=None)
+    @given(_with_nonfinite(), st.integers(min_value=1, max_value=40))
+    def test_nonfinite_input(self, inp, t):
+        """Whatever NaN or ±inf input does to MPX (no policy yet), it
+        does the same on both sweeps."""
+        w, [(x, _)] = inp
+
+        def run():
+            out = []
+            for n_jobs in (1, 4):
+                m = MatrixProfile(x, None, w).compute(MPOpts(n_jobs=n_jobs))
+                out += [m.mp, m.idx]
+            m = MatrixProfile(x, x[::-1], w).compute(MPOpts())
+            return out + [m.mp, m.idx, m.mpb, m.idxb, *_tiles_self(x, w, max(t, w))]
+
+        _assert_same_on_both_sweeps(run)
 
 
 class TestConversions:

@@ -1,4 +1,5 @@
-"""Session factory: driver heap sized to the host, warm-up once per context."""
+"""Session factory: driver heap sized to the host, warm-up once per context,
+the same MPX sweep on the driver and in every Python worker."""
 
 import os
 
@@ -32,3 +33,24 @@ class TestWarmUp:
         again = get_spark("pytest", cores=4, shuffle_partitions=8)
         assert again.sparkContext is spark.sparkContext
         assert jobs() == before
+
+
+class TestKernelBackend:
+    def test_workers_load_the_drivers_sweep(self, spark):
+        """Every Python worker runs the compiled diag_sweep whenever the
+        driver does: a worker that silently fell back to NumPy (other
+        HOME or cache path) would lose the kernel speed-up unseen."""
+        from go_matrixprofile_spark.kernels import matrix_profile as mpm
+
+        def report(it):
+            import pandas as pd
+
+            from go_matrixprofile_spark.kernels import matrix_profile as m
+
+            for _ in it:
+                yield pd.DataFrame({"compiled": [m.diag_sweep is not m._diag_sweep_numpy]})
+
+        n = spark.sparkContext.defaultParallelism
+        rows = spark.range(0, 2 * n, 1, 2 * n).mapInPandas(report, "compiled boolean").collect()
+        assert len(rows) == 2 * n
+        assert {r.compiled for r in rows} == {mpm.diag_sweep is not mpm._diag_sweep_numpy}
