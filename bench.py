@@ -343,13 +343,9 @@ def _scaling_job(spark) -> dict:
         # count the corpus actually read (outside the timed region)
         stats["dedup_docs_per_sec"] = docs.count() / stats["dedup_wall"]
 
-    from go_matrixprofile_spark.operators.profile import (
-        cpu_partitions,
-        matrix_profile_assembled,
-    )
+    from go_matrixprofile_spark.operators.profile import matrix_profile_assembled
 
     arrays = spark.read.parquet(_ensure_scale_arrays(spark))
-    arrays = arrays.repartition(cpu_partitions(arrays), "conv_id", "metric")
     t0 = time.time()
     wins = matrix_profile_assembled(arrays, w=SYNTH_W, opts=MPOpts(algorithm="mpx")).count()
     stats["mp_wall"] = time.time() - t0

@@ -2,8 +2,9 @@
 
 Two physical strategies (chosen by series length, SURVEY.md §7.4):
 
-1. ``matrix_profile`` — whole-series-per-task: groupBy(conv_id, metric)
-   → applyInPandas runs the NumPy kernel on the assembled series. Right
+1. ``matrix_profile`` — whole-series-per-task: each series is assembled
+   to one array row, ``place_series`` range-places the rows on one wave
+   of tasks, and mapInPandas runs the kernel on each series. Right
    for the post-rollup regime where per-conv series are ≤ ~1e6 points:
    parallelism comes from the *number of conversations* (the reference's
    own thread scaling is flat beyond 2 cores — BASELINE.md — so
@@ -85,19 +86,20 @@ SEGMENT_SCHEMA = T.StructType(
 )
 
 
-def _series_values(pdf: pd.DataFrame) -> np.ndarray:
-    return pdf.sort_values("bucket_s")["value"].to_numpy(dtype=np.float64)
+def cpu_partitions(df: DataFrame) -> int:
+    """Partition count for CPU-heavy Arrow-UDF stages: one task per core,
+    so the stage runs in one wave.
 
+    Every Python task pays a fixed start-up cost even when it gets no
+    rows: ~130-165 ms on a 4-vCPU host, most of it PySpark re-reading
+    the directory of pyspark.zip once per zipimporter on each task. More
+    tasks than cores adds waves of that cost, not parallelism.
 
-def cpu_partitions(df: DataFrame, factor: int = 3) -> int:
-    """Partition count for CPU-heavy kernel stages: a few tasks per core.
-
-    AQE sizes partitions by shuffle BYTES, which is the wrong currency
-    for stages whose cost is NumPy compute per row — it happily
-    coalesces a few-MB shuffle to ONE partition and serializes every
-    kernel (observed: identical MP wall-clock at local[4/16/32]).
-    An explicit numbered repartition is exempt from AQE coalescing."""
-    return df.sparkSession.sparkContext.defaultParallelism * factor
+    AQE sizes partitions by shuffle BYTES, the wrong currency for
+    stages whose cost is compute per row: it coalesces a few-MB shuffle
+    to ONE partition and serializes every kernel. An explicit numbered
+    repartition is exempt from AQE coalescing."""
+    return df.sparkSession.sparkContext.defaultParallelism
 
 
 def assemble_series(
@@ -135,6 +137,26 @@ def assemble_series(
     )
 
 
+def place_series(rows: DataFrame, *keys: str) -> DataFrame:
+    """Place one-row-per-series input (array rows, keyed by `keys`,
+    default (conv_id, metric)) on the tasks of a Python kernel stage.
+
+    A range exchange on the keys into cpu_partitions: one wave of
+    tasks, each a contiguous key range, balanced by series count and
+    the same on every run. A fleet of k <= cores series gets k separate
+    tasks (a range exchange never makes more partitions than there are
+    distinct keys). Round-robin from a random start per input
+    partition, and a hash exchange, both put 2 series in one task
+    whenever they collide: on 3 x 16k series at local[3], hash took
+    0.84 s against 0.64 s for range. The rows must be one per series:
+    range bounds come from a row sample, so on long-format points they
+    split unevenly and put neighbouring series together. The exchange
+    evaluates its input twice: one extra job samples the range bounds
+    (behind assemble_series, the assembly aggregation runs twice)."""
+    keys = keys or ("conv_id", "metric")
+    return rows.repartitionByRange(cpu_partitions(rows), *keys)
+
+
 def matrix_profile(
     series: DataFrame,
     w: int,
@@ -158,24 +180,8 @@ def matrix_profile_assembled(
 ) -> DataFrame:
     """MP over pre-assembled array rows (conv_id, metric, vals) — the
     entry point when series are already stored array-per-conv (e.g. a
-    materialized tier), skipping the assembly shuffle.
-
-    The (compact) array rows are round-robined across cpu_partitions
-    before the kernel: the assembly aggregation leaves rows
-    hash-laid-out by conv_id, and for fleets whose series count is near
-    the partition count, hash collisions put 2-3 series in some kernel
-    tasks while others sit empty — the stage makespan becomes 3
-    series-times instead of 2 (measured on the 64×16k bench fleet).
-    The extra exchange moves only one array row per series (MBs), not
-    the long-format points, and the kernel needs no key clustering.
-    Regime note (measured): the repartition pays off for
-    FEW-LARGE-SERIES fleets (the reference's own workload: −20% on
-    64×16k, where one collided task idles half the cluster for a whole
-    kernel-time); for MANY-SMALL-SERIES corpus fleets the keys already
-    balance the partitions (~30+ series each) and it only adds an array
-    shuffle + a stage barrier (−1.1 s on a 10× fleet). Per-fleet
-    kernel-task sizing belongs in the one tile planner planned on
-    ROADMAP.md (direction 3), not in a caller-side switch."""
+    materialized tier), skipping the assembly shuffle. The array rows
+    are placed on the kernel tasks by place_series."""
     opts = opts or MPOpts()
     min_len = max(min_len or 0, w + 1)
 
@@ -198,8 +204,7 @@ def matrix_profile_assembled(
                     }
                 )
 
-    assembled = assembled.repartition(cpu_partitions(assembled))
-    return assembled.mapInPandas(kernel, MP_SCHEMA)
+    return place_series(assembled).mapInPandas(kernel, MP_SCHEMA)
 
 
 def _grid_positions(
@@ -509,7 +514,7 @@ def discover(
     (conv_id, metric) with its length and the floor it missed.
     """
     opts = opts or MPOpts()
-    assembled = assemble_series(series)
+    assembled = place_series(assemble_series(series))
 
     combined_schema = T.StructType(
         [
@@ -593,34 +598,49 @@ def k_matrix_profile(series_multi: DataFrame, w: int) -> DataFrame:
         ]
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        (conv_id,) = key
-        mat = pdf.pivot_table(
-            index="dim", columns="bucket_s", values="value", aggfunc="first"
-        ).sort_index()
-        t = mat.to_numpy(dtype=np.float64)
-        if t.shape[1] <= 2 * w or np.isnan(t).any():
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        kmp = KMP(list(t), w).compute()
-        frames = []
-        for d in range(kmp.mp.shape[0]):
-            n = kmp.mp.shape[1]
-            frames.append(
-                pd.DataFrame(
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            for rec in pdf.itertuples(index=False):
+                cells = pd.DataFrame(
                     {
-                        "conv_id": conv_id,
-                        "level": np.int32(d),
-                        "w": np.int32(w),
-                        "offset": np.arange(n, dtype=np.int32),
-                        "mp": kmp.mp[d],
-                        "idx": kmp.idx[d],
+                        "dim": rec.dims,
+                        "bucket_s": rec.buckets,
+                        "value": np.asarray(rec.vals, dtype=np.float64),
                     }
                 )
-            )
-        return pd.concat(frames, ignore_index=True)
+                mat = cells.pivot_table(
+                    index="dim", columns="bucket_s", values="value", aggfunc="first"
+                ).sort_index()
+                t = mat.to_numpy(dtype=np.float64)
+                if t.shape[1] <= 2 * w or np.isnan(t).any():
+                    continue
+                kmp = KMP(list(t), w).compute()
+                n = kmp.mp.shape[1]
+                for d in range(kmp.mp.shape[0]):
+                    yield pd.DataFrame(
+                        {
+                            "conv_id": rec.conv_id,
+                            "level": np.int32(d),
+                            "w": np.int32(w),
+                            "offset": np.arange(n, dtype=np.int32),
+                            "mp": kmp.mp[d],
+                            "idx": kmp.idx[d],
+                        }
+                    )
 
-    src = series_multi.repartition(cpu_partitions(series_multi), "conv_id")
-    return src.groupBy("conv_id").applyInPandas(kernel, schema)
+    # one row per conv (its cells as three aligned arrays), placed like
+    # every other whole-series kernel input
+    cells = F.collect_list(F.struct("dim", "bucket_s", "value"))
+    rows = (
+        series_multi.repartition(cpu_partitions(series_multi), "conv_id")
+        .groupBy("conv_id")
+        .agg(
+            F.transform(cells, lambda c: c["dim"]).alias("dims"),
+            F.transform(cells, lambda c: c["bucket_s"]).alias("buckets"),
+            F.transform(cells, lambda c: c["value"]).alias("vals"),
+        )
+    )
+    return place_series(rows, "conv_id").mapInPandas(kernel, schema)
 
 
 def pan_matrix_profile_distributed(
@@ -794,30 +814,28 @@ def streaming_update_check(series: DataFrame, w: int, split: float = 0.8) -> Dat
         ]
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id, metric = key
-        vals = _series_values(pdf)
-        cut = int(vals.size * split)
-        if cut < w + 2 or vals.size - cut < 1:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        try:
-            inc = MatrixProfile(vals[:cut], None, w).compute(MPOpts(algorithm="stomp"))
-            inc.update(vals[cut:])
-            full = MatrixProfile(vals, None, w).compute(MPOpts(algorithm="stomp"))
-        except ValueError:
-            # constant query window: the reference's Update errors the
-            # same way (ZNormalize zero-std, util/util.go:33-35) — skip
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        diff = float(np.nanmax(np.abs(inc.mp - full.mp))) if full.mp.size else 0.0
-        return pd.DataFrame(
-            [(conv_id, metric, vals.size, vals.size - cut, diff)],
-            columns=["conv_id", "metric", "n", "n_new", "max_abs_diff"],
-        )
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for rec in pdf.itertuples(index=False):
+                vals = np.asarray(rec.vals, dtype=np.float64)
+                cut = int(vals.size * split)
+                if cut < w + 2 or vals.size - cut < 1:
+                    continue
+                try:
+                    inc = MatrixProfile(vals[:cut], None, w).compute(MPOpts(algorithm="stomp"))
+                    inc.update(vals[cut:])
+                    full = MatrixProfile(vals, None, w).compute(MPOpts(algorithm="stomp"))
+                except ValueError:
+                    # constant query window: the reference's Update errors
+                    # the same way (ZNormalize zero-std, util/util.go:33-35)
+                    # — skip
+                    continue
+                diff = float(np.nanmax(np.abs(inc.mp - full.mp))) if full.mp.size else 0.0
+                rows.append((rec.conv_id, rec.metric, vals.size, vals.size - cut, diff))
+            yield pd.DataFrame(rows, columns=["conv_id", "metric", "n", "n_new", "max_abs_diff"])
 
-    src = series.select("conv_id", "metric", "bucket_s", "value").repartition(
-        cpu_partitions(series), "conv_id", "metric"
-    )
-    return src.groupBy("conv_id", "metric").applyInPandas(kernel, schema)
+    return place_series(assemble_series(series)).mapInPandas(kernel, schema)
 
 
 def matrix_profile_ab(

@@ -129,11 +129,12 @@ def _warm_up(spark: SparkSession) -> None:
             .count()
         )
 
-        # one Arrow/pandas job sized to the FULL worker pool: fork every
-        # Python worker now and pay numpy/pandas import in each, instead
-        # of staggering ~cores forks + imports into the first kernel
-        # stage (an 8-partition warm-up left 3/4 of the pool cold on
-        # local[32])
+        # one Arrow/pandas job of one task per core: forks the whole
+        # Python worker pool in one wave and pays numpy/pandas import in
+        # each worker, instead of staggering the forks + imports into
+        # the first kernel stage. More tasks would only repeat the fixed
+        # per-task cost (see operators.profile.cpu_partitions) in extra
+        # waves.
         def _touch_numpy(it):
             import numpy as np
 
@@ -141,10 +142,8 @@ def _warm_up(spark: SparkSession) -> None:
                 np.asarray(pdf["id"].to_numpy(), dtype=np.float64).sum()
                 yield pdf
 
-        n_workers = max(8, spark.sparkContext.defaultParallelism)
-        spark.range(0, 4 * n_workers, 1, 2 * n_workers).mapInPandas(
-            _touch_numpy, "id long"
-        ).count()
+        n = sc.defaultParallelism
+        spark.range(0, 4 * n, 1, n).mapInPandas(_touch_numpy, "id long").count()
     except Exception:
         # warm-up is best-effort: a failure here must never break
         # session creation (e.g. minimal builds without pandas/Arrow)

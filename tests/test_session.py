@@ -1,10 +1,13 @@
 """Session factory: driver heap sized to the host, warm-up once per context,
 the same MPX sweep on the driver and in every Python worker."""
 
+import logging
 import os
+import weakref
 
 import pytest
 
+from go_matrixprofile_spark import session
 from go_matrixprofile_spark.session import driver_memory, get_spark
 
 
@@ -33,6 +36,49 @@ class TestWarmUp:
         again = get_spark("pytest", cores=4, shuffle_partitions=8)
         assert again.sparkContext is spark.sparkContext
         assert jobs() == before
+
+    def test_arrow_job_is_one_wave(self, spark, monkeypatch, caplog):
+        """The warm-up forks the Python worker pool with one task per
+        core: every Python task pays a fixed start-up cost, so more tasks
+        than cores only adds waves of it. Still one INFO line with the
+        warm-up wall."""
+        if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1":
+            pytest.skip("warm-up disabled by SPARK_GRAFT_NO_WARMUP=1")
+        sc = spark.sparkContext
+        jsc = sc._jsc.sc()
+        group = "test-warm-up-one-wave"
+        monkeypatch.setattr(session, "_warmed", weakref.WeakSet())
+        sc.setJobGroup(group, group)
+        try:
+            with caplog.at_level(logging.INFO, logger=session.__name__):
+                session._warm_up(spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        walls = [r for r in caplog.records if r.getMessage().startswith("session warm-up took")]
+        assert len(walls) == 1
+
+        jsc.listenerBus().waitUntilEmpty(30000)
+        sql = spark._jsparkSession.sharedState().statusStore()
+        conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+        arrow_jobs = set()
+        it = sql.executionsList().iterator()
+        while it.hasNext():
+            e = it.next()
+            if e.description() == group and "MapInPandas" in e.physicalPlanDescription():
+                arrow_jobs |= {int(j) for j in conv.asJava(e.jobs().keySet())}
+        assert arrow_jobs, "no Arrow job in the warm-up"
+        store = jsc.statusStore()
+        widths = []
+        for jid in arrow_jobs:
+            job = store.job(jid)
+            for sid in conv.asJava(job.stageIds()):
+                stage = store.lastStageAttempt(sid)
+                if stage.status().toString() != "SKIPPED":
+                    widths.append(stage.numCompleteTasks())
+        # the Python stage is the job's widest; the rest is the count's
+        # final aggregation
+        assert max(widths) == sc.defaultParallelism, widths
 
 
 class TestKernelBackend:

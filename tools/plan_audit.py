@@ -168,6 +168,35 @@ def main() -> int:
         )
     )
 
+    # 6b. whole-series MP: the kernel stage is fed by a numbered range
+    #     exchange on (conv_id, metric) — one task per core, balanced by
+    #     series count, at most one task per distinct series. Round-robin
+    #     (random start per input partition) and hash exchanges both put
+    #     2 series in one task whenever they collide.
+    from go_matrixprofile_spark.operators.profile import matrix_profile
+    from go_matrixprofile_spark.operators.series import derive_series
+
+    p = plan_of(matrix_profile(derive_series(t), w=8))
+    checks.append(
+        (
+            "matrix_profile: kernel stage range-placed on (conv_id, metric)",
+            p,
+            [
+                (
+                    "rangepartitioning on conv_id, metric",
+                    re.search(
+                        r"rangepartitioning\(conv_id#\d+ ASC NULLS FIRST, metric#\d+ ASC NULLS FIRST, \d+\)",
+                        p,
+                    )
+                    is not None,
+                ),
+                ("contains 'REPARTITION_BY_NUM'", "REPARTITION_BY_NUM" in p),
+                ("absent   'RoundRobinPartitioning'", "RoundRobinPartitioning" not in p),
+                ("Arrow kernel", "MapInPandas" in p),
+            ],
+        )
+    )
+
     # 7. chunked MP: tile join is a hash join on bounded keys; kernel
     #    stage behind an explicit repartition
     check(
@@ -216,8 +245,6 @@ def main() -> int:
     #     exchanges). Formatted plans print each scan node twice
     #     (tree + detail), so 2 physical scans == 4 occurrences;
     #     exchanges are counted by their detail headers.
-    from go_matrixprofile_spark.operators.series import derive_series
-
     p = plan_of(
         derive_series(
             transcripts_from_events(
