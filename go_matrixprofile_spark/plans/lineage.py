@@ -105,9 +105,11 @@ def checkpoint_stage(
     if not _dir_has_data_files(spark, out_path):
         return spark.createDataFrame([], schema=df.schema)
 
+    # read back with the schema that was written: partition-column type
+    # inference would turn conv_id "007" and "7" into the one integer 7
+    out = spark.read.schema(df.schema).parquet(out_path)
     counts = (
-        spark.read.parquet(out_path)
-        .groupBy(F.col(partition_col).cast("string").alias("partition_key"))
+        out.groupBy(F.col(partition_col).cast("string").alias("partition_key"))
         .agg(F.count(F.lit(1)).alias("row_count"))
     )
     new_lineage = counts.select(
@@ -123,4 +125,4 @@ def checkpoint_stage(
         ).select("partition_key")
         new_lineage = new_lineage.join(already, "partition_key", "left_anti")
     new_lineage.write.mode("append").parquet(_lineage_path(root))
-    return spark.read.parquet(out_path)
+    return out

@@ -3,7 +3,9 @@
 Tuned for local[N] testing but written for multi-executor clusters:
 AQE on (runtime re-plan + skew-join splitting), Arrow transport for the
 pandas-UDF kernels, UTC session timezone so timestamp arithmetic is
-oracle-stable.
+oracle-stable. Local sessions start their Python workers from
+``worker_daemon``, which imports the driver's pyspark tree instead of
+re-reading pyspark.zip on every task.
 """
 
 from __future__ import annotations
@@ -13,9 +15,14 @@ import os
 import time
 import weakref
 
+import pyspark
 from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
+
+# the directory holding this package: local workers import the package
+# (and its worker daemon) from here, whatever the driver's cwd
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # contexts already warmed up; a stopped-and-recreated session is a new
 # context and warms up again
@@ -75,7 +82,20 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    if extra_conf.get("spark.master", master).startswith("local"):
+        # workers of a local master see the driver's filesystem: start
+        # them from the package's daemon, which imports the driver's
+        # pyspark tree instead of pyspark.zip (see worker_daemon)
+        builder = builder.config(
+            "spark.python.daemon.module", "go_matrixprofile_spark.worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        log.info(
+            "python workers import pyspark from %s and this package from %s",
+            os.path.dirname(pyspark.__file__),
+            _PACKAGE_PARENT,
+        )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -129,23 +149,29 @@ def _warm_up(spark: SparkSession) -> None:
             .count()
         )
 
-        # one Arrow/pandas job of one task per core: forks the whole
-        # Python worker pool in one wave and pays numpy/pandas import in
-        # each worker, instead of staggering the forks + imports into
-        # the first kernel stage. More tasks would only repeat the fixed
-        # per-task cost (see operators.profile.cpu_partitions) in extra
-        # waves.
-        def _touch_numpy(it):
-            import numpy as np
-
-            for pdf in it:
-                np.asarray(pdf["id"].to_numpy(), dtype=np.float64).sum()
-                yield pdf
-
-        n = sc.defaultParallelism
-        spark.range(0, 4 * n, 1, n).mapInPandas(_touch_numpy, "id long").count()
-    except Exception:
+        _fork_python_workers(spark)
+    except Exception as e:
         # warm-up is best-effort: a failure here must never break
-        # session creation (e.g. minimal builds without pandas/Arrow)
-        pass
+        # session creation, but a worker pool that cannot start would
+        # fail every Python stage after it, so say so
+        first = (str(e).strip().splitlines() or [""])[0]
+        log.warning("session warm-up failed: %s: %s", type(e).__name__, first)
     log.info("session warm-up took %.2f s", time.perf_counter() - t0)
+
+
+def _fork_python_workers(spark: SparkSession) -> None:
+    """One Arrow/pandas job of one task per core: forks the whole Python
+    worker pool in one wave and pays numpy/pandas import in each worker,
+    instead of staggering the forks + imports into the first kernel
+    stage. More tasks would only repeat the fixed per-task cost (see
+    operators.profile.cpu_partitions) in extra waves."""
+
+    def _touch_numpy(it):
+        import numpy as np
+
+        for pdf in it:
+            np.asarray(pdf["id"].to_numpy(), dtype=np.float64).sum()
+            yield pdf
+
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, 4 * n, 1, n).mapInPandas(_touch_numpy, "id long").count()

@@ -27,3 +27,21 @@ class TestLineage:
         assert set(lin["partition_key"]) == {"c1", "c2", "c3"}
         # no duplicate lineage rows per partition
         assert lin.groupby("partition_key").size().max() == 1
+
+    def test_checkpoint_reads_back_the_written_schema(self, spark, tmp_path):
+        """conv_id partition values read back as the strings written:
+        type inference would merge "007" and "7" into the integer 7."""
+        from go_matrixprofile_spark.plans.lineage import checkpoint_stage, read_lineage
+
+        root = str(tmp_path / "ckpt")
+        df = spark.createDataFrame(
+            [("007", 1.0), ("7", 2.0), ("12", 3.0)], "conv_id string, v double"
+        )
+        out = checkpoint_stage(df, root, "filled_1h")
+        assert dict(out.dtypes)["conv_id"] == "string"
+        assert sorted((r.conv_id, r.v) for r in out.collect()) == [
+            ("007", 1.0), ("12", 3.0), ("7", 2.0)
+        ]
+        lin = read_lineage(spark, root).toPandas()
+        assert sorted(lin["partition_key"]) == ["007", "12", "7"]
+        assert set(lin["row_count"]) == {1}

@@ -1,9 +1,14 @@
 """Session factory: driver heap sized to the host, warm-up once per context,
-the same MPX sweep on the driver and in every Python worker."""
+the same MPX sweep on the driver and in every Python worker, and local
+workers that import the driver's pyspark tree and this package from any cwd."""
 
 import logging
 import os
+import subprocess
+import sys
+import textwrap
 import weakref
+import zipfile
 
 import pytest
 
@@ -79,6 +84,141 @@ class TestWarmUp:
         # the Python stage is the job's widest; the rest is the count's
         # final aggregation
         assert max(widths) == sc.defaultParallelism, widths
+
+    def test_failed_warm_up_is_logged(self, spark, monkeypatch, caplog):
+        """A worker pool that cannot start must not pass the warm-up
+        silently: session creation goes on, with one WARNING naming the
+        error's first line."""
+        if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1":
+            pytest.skip("warm-up disabled by SPARK_GRAFT_NO_WARMUP=1")
+
+        def broken(_spark):
+            raise RuntimeError("python worker daemon exited\nstack trace line")
+
+        monkeypatch.setattr(session, "_warmed", weakref.WeakSet())
+        monkeypatch.setattr(session, "_fork_python_workers", broken)
+        with caplog.at_level(logging.INFO, logger=session.__name__):
+            session._warm_up(spark)
+        warnings = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+        assert warnings == ["session warm-up failed: RuntimeError: python worker daemon exited"]
+
+
+class TestWorkerPath:
+    def test_workers_import_the_drivers_pyspark(self, spark):
+        """Local workers import the installed pyspark tree the driver
+        runs, and hold no zipimporter over pyspark.zip or a jar: each
+        one re-reads its archive's directory on every task."""
+        import pyspark
+
+        def report(it):
+            import sys
+
+            import pandas as pd
+            import pyspark
+
+            for _ in it:
+                pass
+            zips = [
+                k
+                for k, v in sys.path_importer_cache.items()
+                if type(v).__name__ == "zipimporter" and ("pyspark.zip" in k or ".jar" in k)
+            ]
+            yield pd.DataFrame({"pyspark": [pyspark.__file__], "zips": [len(zips)]})
+
+        n = spark.sparkContext.defaultParallelism
+        rows = spark.range(0, n, 1, n).mapInPandas(report, "pyspark string, zips int").collect()
+        assert {os.path.dirname(r.pyspark) for r in rows} == {os.path.dirname(pyspark.__file__)}
+        assert {r.zips for r in rows} == {0}
+
+    def test_package_imports_from_any_cwd(self, tmp_path):
+        """A driver started outside the repository, with no PYTHONPATH,
+        still has workers that import the package."""
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = tmp_path / "driver.py"
+        script.write_text(
+            textwrap.dedent(
+                f"""
+                import sys
+                sys.path.insert(0, {root!r})
+                from go_matrixprofile_spark.session import get_spark
+
+                def kernel(it):
+                    import pandas as pd
+                    from go_matrixprofile_spark.kernels import matrix_profile
+                    for _ in it:
+                        pass
+                    yield pd.DataFrame({{"ok": [callable(matrix_profile.diag_sweep)]}})
+
+                spark = get_spark("cwd-test", cores=2, shuffle_partitions=2)
+                rows = spark.range(0, 2, 1, 2).mapInPandas(kernel, "ok boolean").collect()
+                print("WORKERS", sorted(r.ok for r in rows))
+                spark.stop()
+                """
+            )
+        )
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env.update(SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_NO_WARMUP="1")
+        proc = subprocess.run(
+            [sys.executable, str(script)],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        assert "WORKERS [True, True]" in proc.stdout
+
+    def test_add_py_file_mid_session(self, spark, tmp_path):
+        """addPyFile of a .py module and of a zipped package, after the
+        workers are up, imports inside a UDF: PySpark still puts each
+        include on the worker's path and invalidates the import caches."""
+        mod = tmp_path / "gmps_added_module.py"
+        mod.write_text("VALUE = 40\n")
+        pkg_zip = tmp_path / "gmps_added_pkg.zip"
+        with zipfile.ZipFile(pkg_zip, "w") as z:
+            z.writestr("gmps_added_pkg/__init__.py", "VALUE = 2\n")
+        sc = spark.sparkContext
+        n = sc.defaultParallelism
+        spark.range(0, n, 1, n).mapInPandas(lambda it: it, "id long").count()
+        sc.addPyFile(str(mod))
+        sc.addPyFile(str(pkg_zip))
+
+        def use(it):
+            import gmps_added_module
+            import gmps_added_pkg
+            import pandas as pd
+
+            for _ in it:
+                pass
+            yield pd.DataFrame({"v": [gmps_added_module.VALUE + gmps_added_pkg.VALUE]})
+
+        rows = spark.range(0, n, 1, n).mapInPandas(use, "v long").collect()
+        assert [r.v for r in rows] == [42] * n
+
+
+class TestWorkerDaemon:
+    def test_drops_archives_when_pyspark_imports_without_them(self, monkeypatch):
+        import pyspark
+
+        from go_matrixprofile_spark import worker_daemon
+
+        tree = os.path.dirname(os.path.dirname(pyspark.__file__))
+        zip_, jar = "/spark/python/lib/pyspark.zip", "/spark/jars/spark-core.jar"
+        monkeypatch.setattr(sys, "path", ["/cwd", zip_, jar, tree])
+        monkeypatch.setattr(
+            sys, "path_importer_cache",
+            {zip_: "zip", zip_ + "/pyspark/sql": "zip", jar + "/org": "jar", "/other.zip": "zip"},
+        )
+        worker_daemon.drop_archives()
+        assert sys.path == ["/cwd", tree]
+        assert not [k for k in sys.path_importer_cache if k.startswith((zip_, jar))]
+        assert sys.path_importer_cache["/other.zip"] == "zip"
+
+    def test_keeps_the_zip_when_pyspark_is_only_there(self, monkeypatch):
+        from go_matrixprofile_spark import worker_daemon
+
+        path = ["/cwd", "/spark/python/lib/pyspark.zip", "/spark/jars/spark-core.jar"]
+        monkeypatch.setattr(sys, "path", list(path))
+        monkeypatch.setattr(sys, "path_importer_cache", {})
+        worker_daemon.drop_archives()
+        assert sys.path == path
 
 
 class TestKernelBackend:
