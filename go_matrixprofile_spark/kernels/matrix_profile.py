@@ -13,14 +13,14 @@ long series map to separate Spark tasks (see operators/profile.py).
 
 The MPX recurrence lives in ONE place, ``diag_sweep``: the self-join
 (mpxBatch), both AB-join passes (mpxabBatch / mpxbaBatch) and the
-distributed tiles (``mpx_tile_partial``) are thin callers that differ
-only in which streams, seeds and output arrays they pass. ``diag_sweep``
-is diag_sweep.c, compiled with the host's ``cc`` once per host into a
-cache dir and loaded through ctypes when this module is imported (so a
-Spark driver builds it before any task runs and Python workers only
-load it); where that fails it is ``_diag_sweep_numpy``, the NumPy body
-the C loop reproduces bit for bit. The choice is logged once per
-process.
+distributed self-join tiles (``mpx_tile_partial``) are thin callers
+that differ only in which streams, seeds and output arrays they pass.
+``diag_sweep`` is diag_sweep.c, compiled with the host's ``cc`` once
+per host into a cache dir and loaded through ctypes when this module is
+imported (so a Spark driver builds it before any task runs and Python
+workers only load it); where that fails it is ``_diag_sweep_numpy``,
+the NumPy body the C loop reproduces bit for bit. The choice is logged
+once per process.
 
 Parity-critical details preserved (see SURVEY.md §7.4):
 - STOMP/STAMP/STMP min-update uses ``<=`` (latest row wins ties,
@@ -820,31 +820,26 @@ def mpx_tile_partial(
     n_col: int,
     w: int,
     remap_neg_corr: bool = False,
-    self_join: bool = True,
 ):
-    """SCAMP-style 2-D tile partial of the MPX self- or AB-join.
+    """SCAMP-style 2-D tile partial of the MPX self-join.
 
-    The distributed decomposition for mega-series: instead of shipping
+    The distributed decomposition for long series: instead of shipping
     the WHOLE series to every diagonal-batch task (shuffle volume B×n
     and a single-row assembly that hits Spark's 2 GiB ceiling around
     10^8 points), the distance matrix is tiled into (row-range ×
     col-range) blocks and each task receives only the two O(T + w)
     segments its block touches.
 
-    Self-join (default): x covers global positions
-    [r0, r0 + n_row + w - 1) of the series; y covers
-    [c0, c0 + n_col + w - 1); c0 >= r0 (upper triangle). The tile
-    computes corr for all pairs (gi, gj) with gi in the row range,
+    x covers global positions [r0, r0 + n_row + w - 1) of the series;
+    y covers [c0, c0 + n_col + w - 1); c0 >= r0 (upper triangle). The
+    tile computes corr for all pairs (gi, gj) with gi in the row range,
     gj in the col range and gj - gi >= excl = max(1, w//4) — the MPX
     exclusion zone (matrixprofile.go:998-1001). A diagonal tile
     (r0 == c0) sweeps into ONE array, exactly like the whole-series
-    kernel, and returns it as both the row and the col partial.
-
-    AB-join (self_join=False): x is a segment of series A at offset r0,
-    y a segment of series B at offset c0 — independent coordinate
-    systems, ALL pairs valid (no exclusion zone); mp_row carries
-    A-side partials with B-space neighbor indices and mp_col the
-    reverse.
+    kernel, and returns it as both the row and the col partial. An
+    off-diagonal tile whose col range starts more than excl past its
+    row range also holds cells below its own corner diagonal, swept as
+    negative tile diagonals.
 
     Seeds are _centered_seeds of each side (two FFTs when the tile has
     negative diagonals) and the sweep is diag_sweep in ascending global
@@ -858,10 +853,10 @@ def mpx_tile_partial(
     y = np.ascontiguousarray(y, dtype=np.float64)
     nr = max(min(n_row, x.size - w + 1), 0)
     nc = max(min(n_col, y.size - w + 1), 0)
-    one = self_join and r0 == c0
+    one = r0 == c0
     mp_row, idx_row = _partial(nr)
     mp_col, idx_col = (mp_row, idx_row) if one else _partial(nc)
-    d_lo = max(-(nr - 1), max(1, w // 4) - (c0 - r0)) if self_join else -(nr - 1)
+    d_lo = max(-(nr - 1), max(1, w // 4) - (c0 - r0))
     d_hi = nc - 1
     if nr == 0 or nc == 0 or d_lo > d_hi:
         return mp_row, idx_row, mp_col, idx_col

@@ -162,24 +162,6 @@ def minhash_wide(
     )
 
 
-def minhash_signatures(
-    documents: DataFrame, k_shingle: int = 8, n_hashes: int = 8
-) -> DataFrame:
-    """Long-format (doc_id, h_idx, minhash) view of minhash_wide."""
-    wide = minhash_wide(documents, k_shingle, n_hashes)
-    return wide.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("h_idx"), F.col(f"mh{i}").alias("minhash"))
-                    for i in range(n_hashes)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc_id", "e.h_idx", "e.minhash")
-
-
 def minhash_lsh_pairs(
     documents: DataFrame,
     k_shingle: int = 8,

@@ -1,31 +1,17 @@
 """Distributed matrix profile over per-conversation series.
 
-Two physical strategies (chosen by series length, SURVEY.md §7.4):
+``matrix_profile`` runs each series whole in one task: the series is
+assembled to one array row, ``place_series`` range-places the rows on
+one wave of tasks, and mapInPandas runs the kernel on each series.
+Parallelism comes from the *number of conversations* (the reference's
+own thread scaling is flat beyond 2 cores — BASELINE.md — so
+cross-series data parallelism is the scaling axis that matters). The
+other operators here (AB-join, discovery, k-dim MP, pan-MP, MPDist
+pairs, the update check) also hand each kernel call whole series.
 
-1. ``matrix_profile`` — whole-series-per-task: each series is assembled
-   to one array row, ``place_series`` range-places the rows on one wave
-   of tasks, and mapInPandas runs the kernel on each series. Right
-   for the post-rollup regime where per-conv series are ≤ ~1e6 points:
-   parallelism comes from the *number of conversations* (the reference's
-   own thread scaling is flat beyond 2 cores — BASELINE.md — so
-   cross-series data parallelism is the scaling axis that matters).
-
-2. ``matrix_profile_chunked`` — intra-series parallelism for mega
-   threads via SCAMP-style 2-D tiles: the distance matrix's upper
-   triangle splits into blocks, each tile task receives only the two
-   O(T + w) series segments its block touches (never the whole
-   series), computes an exact Pearson-space partial
-   (kernels.mpx_tile_partial, a thin caller of the one MPX sweep
-   kernels.matrix_profile.diag_sweep; a diagonal tile sweeps into a
-   single array like the whole-series kernel), and partials merge with
-   max_by(corr, tie → earliest global diagonal) before one final
-   Pearson→Euclidean conversion. Shuffle volume is O(k·n) per conv and
-   no single row holds a full series, so mega-threads clear both the
-   B×n replication cost and Spark's 2 GiB row ceiling.
-
-``matrix_profile_auto`` routes conversations between the two by
-length; the tile width (= chunk_threshold) fixes per-task work, so
-task count grows with series length instead of task size.
+``matrix_profile_chunked`` splits one long series over several tasks
+with SCAMP-style 2-D tiles (Zimmerman et al., SoCC 2019), so no row
+holds a whole series; its docstring has the plan.
 
 Output schema (FIXTURES.md A.2):
   mp_profile(conv_id, metric, w int, offset int, mp double, idx int)
@@ -53,38 +39,6 @@ MP_SCHEMA = T.StructType(
         T.StructField("idx", T.LongType(), True),
     ]
 )
-
-MOTIF_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("w", T.IntegerType(), False),
-        T.StructField("group", T.IntegerType(), False),
-        T.StructField("idx", T.ArrayType(T.IntegerType()), False),
-        T.StructField("min_dist", T.DoubleType(), False),
-    ]
-)
-
-DISCORD_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("w", T.IntegerType(), False),
-        T.StructField("rank", T.IntegerType(), False),
-        T.StructField("idx", T.IntegerType(), False),
-    ]
-)
-
-SEGMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("w", T.IntegerType(), False),
-        T.StructField("idx", T.IntegerType(), False),
-        T.StructField("cac", T.DoubleType(), False),
-    ]
-)
-
 
 def cpu_partitions(df: DataFrame) -> int:
     """Partition count for CPU-heavy Arrow-UDF stages: one task per core,
@@ -212,115 +166,36 @@ def matrix_profile_assembled(
     return place_series(assembled).mapInPandas(kernel, MP_SCHEMA)
 
 
-def _grid_positions(
-    src: DataFrame, keys: list[str], grid_step: int | None
-) -> DataFrame:
-    """(keys..., value, pos, n): each point's rank within its key group
-    ordered by bucket_s, plus the group size — shared by the self-join
-    and AB tile builders.
-
-    grid_step=None sorts each group with a row_number window: a SINGLE
-    task per group, the last whole-series bottleneck for a 10^8-point
-    mega-thread. With grid_step set, groups verified to be the regular
-    grid {min_b + i*step} get pos derived ARITHMETICALLY — one aggregate
-    + a shuffled join, no per-group sort. A group is that grid iff it
-    has n distinct bucket_s, one residue class mod step, and exactly the
-    right span — pigeonhole leaves no other arrangement. Groups that
-    fail the check fall back to the window sort, so a wrong grid_step
-    degrades to the slow-but-correct path, never to mis-positioned
-    points.
-    """
-    from pyspark.sql.window import Window
-
-    def _window_pos(s: DataFrame) -> DataFrame:
-        wpos = Window.partitionBy(*keys).orderBy("bucket_s")
-        return s.select(
-            *keys,
-            "value",
-            (F.row_number().over(wpos) - 1).cast("long").alias("pos"),
-            F.count("*").over(Window.partitionBy(*keys)).alias("n"),
-        )
-
-    if grid_step is None:
-        return _window_pos(src)
-    step = F.lit(float(grid_step))
-    gstats = src.groupBy(*keys).agg(
-        F.count("*").alias("n"),
-        F.min("bucket_s").alias("min_b"),
-        F.max("bucket_s").alias("max_b"),
-        F.count_distinct(F.col("bucket_s")).alias("n_uniq"),
-        F.count_distinct(F.col("bucket_s") % step).alias("n_res"),
-    )
-    regular = (
-        (F.col("n_uniq") == F.col("n"))
-        & (F.col("n_res") == 1)
-        & (F.col("max_b") - F.col("min_b") == step * (F.col("n") - 1))
-    )
-    joined = src.join(gstats, keys)
-    reg = joined.where(regular).select(
-        *keys,
-        "value",
-        F.round((F.col("bucket_s") - F.col("min_b")) / step).cast("long").alias("pos"),
-        "n",
-    )
-    irr = _window_pos(joined.where(~regular).select(*keys, "bucket_s", "value"))
-    return reg.unionByName(irr)
-
-
-def chunked_tile_inputs(
-    src: DataFrame,
-    w: int,
-    k: int | None = None,
-    tile_points: int | None = None,
-    grid_step: int | None = None,
-) -> DataFrame:
+def chunked_tile_inputs(src: DataFrame, w: int, k: int) -> DataFrame:
     """Build the bounded tile-task table for the chunked matrix profile.
 
     src: (conv_id, metric, bucket_s, value). Output: one row per
     upper-triangular tile (conv_id, metric, r, c, row_vals, col_vals,
     len_a, t_width) where each vals array is bounded by t_width + w - 1
-    points — never the whole series. Stages: window-sort positions,
-    assign each point to the ≤2 overlapping segments that need it,
-    aggregate segments to bounded array rows, cross the tile list with
-    the two segments per tile via equi-joins. All built-ins; the only
-    shuffles are the position sort, the segment aggregation, and the
-    two segment joins — each keyed on bounded (conv, metric, seg) keys.
-
-    Tile sizing, exactly one of:
-    - ``tile_points``: FIXED tile width — the scale knob. Per-task work
-      is then ~tile_points² cells regardless of series length, and the
-      tile count grows with the square of length: a 10^8-point
-      conversation decomposes into uniformly-sized tasks instead of k
-      ever-fatter ones. Use this at corpus scale.
-    - ``k``: tiles per side (t_width = ceil(len_a / k)) — task COUNT is
-      fixed per conversation; fine for bounded exploration.
-
-    ``grid_step``: declare the input a regular grid with this bucket_s
-    spacing (e.g. 3600 for a gap-filled hourly tier). Positions are then
-    derived ARITHMETICALLY — pos = (bucket_s - min_bucket)/step via one
-    aggregate + a shuffled join — instead of a per-(conv, metric)
-    row_number sort, whose single sort task is the last whole-series
-    bottleneck for a 10^8-point mega-thread. Regularity is verified per
-    group (distinct count, span, single residue class); groups that fail
-    fall back to the window sort, so a wrong ``grid_step`` degrades to
-    the slow-but-correct path rather than mis-positioning points
-    (see _grid_positions).
+    points — never the whole series. ``k`` tiles per side: t_width =
+    max(ceil(len_a / k), w), so each conversation gets k(k+1)/2 tiles.
+    Stages: window-sort positions, assign each point to the ≤2
+    overlapping segments that need it, aggregate segments to bounded
+    array rows, cross the tile list with the two segments per tile via
+    equi-joins. All built-ins; the only shuffles are the position sort,
+    the segment aggregation, and the two segment joins — each keyed on
+    bounded (conv, metric, seg) keys.
     """
-    if (k is None) == (tile_points is None):
-        raise ValueError("pass exactly one of k / tile_points")
+    from pyspark.sql.window import Window
 
-    pts = _grid_positions(src, ["conv_id", "metric"], grid_step)
-    pts = pts.where(F.col("n") >= w + 1)
+    by_series = Window.partitionBy("conv_id", "metric")
+    pts = src.select(
+        "conv_id",
+        "metric",
+        "value",
+        (F.row_number().over(by_series.orderBy("bucket_s")) - 1).cast("long").alias("pos"),
+        F.count("*").over(by_series).alias("n"),
+    ).where(F.col("n") >= w + 1)
     # tile width floored at w so the two-candidate segment assignment
     # below stays valid (w - 1 <= T)
-    if tile_points is not None:
-        t_width_col = F.lit(max(int(tile_points), w)).cast("long")
-    else:
-        t_width_col = F.greatest(
-            F.ceil((F.col("n") - w + 1) / k).cast("long"), F.lit(w)
-        )
     pts = pts.withColumn("len_a", F.col("n") - w + 1).withColumn(
-        "t_width", t_width_col
+        "t_width",
+        F.greatest(F.ceil((F.col("n") - w + 1) / k).cast("long"), F.lit(w)),
     )
     # point at pos p feeds segment s iff s*T <= p < (s+1)*T + w - 1:
     # candidates are p//T and p//T - 1 (the latter iff p mod T < w - 1)
@@ -386,8 +261,6 @@ def matrix_profile_chunked(
     n_batches: int = 8,
     opts: MPOpts | None = None,
     value_col: str = "value",
-    tile_points: int | None = None,
-    grid_step: int | None = None,
 ) -> DataFrame:
     """MPX with intra-series parallelism via SCAMP-style 2-D tiles.
 
@@ -414,12 +287,9 @@ def matrix_profile_chunked(
     src = series.select(
         "conv_id", "metric", "bucket_s", F.col(value_col).alias("value")
     )
-    if tile_points is not None:
-        tile_in = chunked_tile_inputs(src, w, tile_points=tile_points, grid_step=grid_step)
-    else:
-        # k tiles per side so that k(k+1)/2 ≈ n_batches tasks per conv
-        k = max(1, int(round(((8 * n_batches + 1) ** 0.5 - 1) / 2)))
-        tile_in = chunked_tile_inputs(src, w, k=k, grid_step=grid_step)
+    # k tiles per side so that k(k+1)/2 ≈ n_batches tasks per conv
+    k = max(1, int(round(((8 * n_batches + 1) ** 0.5 - 1) / 2)))
+    tile_in = chunked_tile_inputs(src, w, k)
     part_schema = T.StructType(
         [
             T.StructField("conv_id", T.StringType(), False),
@@ -908,186 +778,3 @@ def matrix_profile_ab(
     # the kernel tasks (a by-key repartition leaves ~1/e of the slots
     # empty to hash collisions); mapInPandas needs no key clustering
     return joined.repartition(cpu_partitions(joined)).mapInPandas(kernel, schema)
-
-
-def _ab_segments(
-    src: DataFrame, w: int, t_w: int, side: str, grid_step: int | None = None
-) -> DataFrame:
-    """Overlapping fixed-width segments of one AB-join side:
-    (conv_id, seg, vals, len_p) with vals bounded by t_w + w - 1.
-    grid_step: see _grid_positions — arithmetic positions for regular
-    grids instead of a single-task per-conv sort."""
-    pts = _grid_positions(src, ["conv_id"], grid_step).where(F.col("n") >= w + 1)
-    pts = pts.withColumn("len_p", F.col("n") - w + 1)
-    s_hi = (F.col("pos") / t_w).cast("long")
-    seg_candidates = F.array(
-        F.when(s_hi < F.ceil(F.col("len_p") / t_w).cast("long"), s_hi),
-        F.when((s_hi >= 1) & (F.col("pos") % t_w < w - 1), s_hi - 1),
-    )
-    seg_pts = pts.select(
-        "conv_id",
-        "value",
-        "pos",
-        "len_p",
-        F.explode(F.filter(seg_candidates, lambda s: s.isNotNull())).alias("seg"),
-    )
-    return seg_pts.groupBy("conv_id", "seg").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "value"))), lambda s: s["value"]
-        ).alias(f"{side}_vals"),
-        F.first("len_p").alias(f"{side}_len"),
-    )
-
-
-def matrix_profile_ab_chunked(
-    series_a: DataFrame,
-    series_b: DataFrame,
-    w: int,
-    tile_points: int = 4096,
-    grid_step: int | None = None,
-) -> DataFrame:
-    """Tiled AB-join matrix profile: the full A-offsets × B-offsets
-    rectangle splits into fixed-width tiles; each task receives one
-    O(T+w) segment per side (kernels.mpx_tile_partial with
-    self_join=False — no exclusion zone, both directions). Same scale
-    contract as the self-join tiles: per-task work ~tile_points² cells,
-    shuffle volume O((na+nb)·k), no whole-series rows. Output matches
-    matrix_profile_ab: (conv_id, direction ab|ba, w, offset, mp, idx).
-    grid_step: arithmetic positions for regular-grid input (e.g. a
-    gap-filled tier) instead of a single-task per-conv sort — see
-    _grid_positions.
-    """
-    t_w = max(int(tile_points), w)
-    a_src = series_a.select("conv_id", "bucket_s", "value")
-    b_src = series_b.select("conv_id", "bucket_s", "value")
-    a_segs = _ab_segments(a_src, w, t_w, "a", grid_step)
-    b_segs = _ab_segments(b_src, w, t_w, "b", grid_step)
-    tiles = (
-        a_segs.withColumnRenamed("seg", "r")
-        .join(b_segs.withColumnRenamed("seg", "c"), "conv_id")
-        .repartition(cpu_partitions(series_a))
-    )
-
-    part_schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("direction", T.StringType(), False),
-            T.StructField("offset", T.IntegerType(), False),
-            T.StructField("corr", T.DoubleType(), True),
-            T.StructField("idx", T.LongType(), True),
-        ]
-    )
-
-    def tile_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.matrix_profile import mpx_tile_partial
-
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                r0 = int(row.r) * t_w
-                c0 = int(row.c) * t_w
-                n_row = min(t_w, int(row.a_len) - r0)
-                n_col = min(t_w, int(row.b_len) - c0)
-                if n_row <= 0 or n_col <= 0:
-                    continue
-                mpr, idr, mpc, idc = mpx_tile_partial(
-                    np.asarray(row.a_vals, dtype=np.float64),
-                    np.asarray(row.b_vals, dtype=np.float64),
-                    r0,
-                    c0,
-                    n_row,
-                    n_col,
-                    w,
-                    self_join=False,
-                )
-                yield pd.concat(
-                    [
-                        pd.DataFrame(
-                            {
-                                "conv_id": row.conv_id,
-                                "direction": "ab",
-                                "offset": np.arange(r0, r0 + mpr.size, dtype=np.int32),
-                                "corr": mpr,
-                                "idx": idr,
-                            }
-                        ),
-                        pd.DataFrame(
-                            {
-                                "conv_id": row.conv_id,
-                                "direction": "ba",
-                                "offset": np.arange(c0, c0 + mpc.size, dtype=np.int32),
-                                "corr": mpc,
-                                "idx": idc,
-                            }
-                        ),
-                    ],
-                    ignore_index=True,
-                )
-
-    partials = tiles.mapInPandas(tile_kernel, part_schema)
-    # tie rule: smallest signed diagonal d = j_B - i_A wins — the first
-    # diagonal mpx_tile_partial's ascending-d traversal touches, on BOTH
-    # sides of the tile (A side at fixed i visits j ascending; B side at
-    # fixed j visits i descending — both are d ascending with strict >).
-    # For direction 'ab' (offset in A, idx in B) d = idx - offset, so the
-    # key minimizes idx; for 'ba' (offset in B, idx in A) d = offset -
-    # idx, so the key MAXIMIZES idx. The whole-series Go kernel's own AB
-    # tie order (mpxab's descending-j pass before mpxba's ascending-j,
-    # matrixprofile.go:1057-1198) is a pass-structure artifact the tiles
-    # cannot reproduce without order-aware interiors; raw-float AB tie
-    # parity with Go is pinned by matrix_profile_ab (golden fixtures),
-    # and the tiled path pins THIS rule with a tie-specific pytest.
-    tie = F.when(F.col("direction") == "ab", -F.col("idx")).otherwise(F.col("idx"))
-    merged = partials.groupBy("conv_id", "direction", "offset").agg(
-        F.max_by(
-            F.struct("corr", "idx"),
-            F.struct(F.col("corr"), tie.alias("ni")),
-        ).alias("best")
-    )
-    return merged.select(
-        "conv_id",
-        "direction",
-        F.lit(w).cast("int").alias("w"),
-        "offset",
-        F.sqrt(2.0 * w * (1.0 - F.least(F.col("best.corr"), F.lit(1.0)))).alias("mp"),
-        F.col("best.idx").alias("idx"),
-    )
-
-
-def matrix_profile_auto(
-    series: DataFrame,
-    w: int,
-    opts: MPOpts | None = None,
-    value_col: str = "value",
-    chunk_threshold: int = 8192,
-    n_batches: int = 8,
-    grid_step: int | None = None,
-) -> DataFrame:
-    """Skew-aware MP: routes each conversation by series length.
-
-    Mega-threads are the skew hazard of transcript corpora (power-law
-    lengths): one giant conversation as a single task stalls the stage.
-    Short series (< chunk_threshold points) run whole-series-per-task;
-    long ones run as FIXED-WIDTH 2-D tiles (tile_points =
-    chunk_threshold) — per-task work stays ~chunk_threshold² cells no
-    matter how long the conversation, so a 10^8-point mega-thread
-    becomes many uniform tasks instead of a few ever-fatter ones.
-    """
-    opts = opts or MPOpts(algorithm="mpx")
-    src = series.select(
-        "conv_id", "metric", "bucket_s", F.col(value_col).alias("value")
-    )
-    # routing via a computed length column through a NON-broadcast join:
-    # at corpus scale the short-key list is nearly every (conv, metric)
-    # pair — billions of rows — so broadcasting it would funnel the whole
-    # routing table through the driver. A shuffled join on (conv, metric)
-    # re-uses the exact partitioning the downstream series assembly and
-    # tile stages shuffle on anyway.
-    lengths = src.groupBy("conv_id", "metric").agg(F.count("*").alias("n"))
-    routed = src.join(lengths, ["conv_id", "metric"])
-    short = routed.where(F.col("n") < chunk_threshold).drop("n")
-    long = routed.where(F.col("n") >= chunk_threshold).drop("n")
-    prof_short = matrix_profile(short, w, opts, min_len=None)
-    prof_long = matrix_profile_chunked(
-        long, w, opts=opts, tile_points=chunk_threshold, grid_step=grid_step
-    )
-    return prof_short.unionByName(prof_long)

@@ -54,11 +54,14 @@ def _dir_has_data_files(spark: SparkSession, path: str) -> bool:
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
+    """The lineage table under root, or None while it has no data files
+    (a fresh root). Any other read error raises: taken as "nothing
+    committed", it would make checkpoint_stage append every partition
+    again."""
     path = _lineage_path(root)
-    try:
-        return spark.read.parquet(path)
-    except Exception:
+    if not _dir_has_data_files(spark, path):
         return None
+    return spark.read.parquet(path)
 
 
 def checkpoint_stage(

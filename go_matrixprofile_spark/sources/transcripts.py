@@ -60,7 +60,3 @@ transcripts AS (
   FROM events
 )
 """
-
-
-def load_tables(spark, sf_dir: str, names: list[str]) -> dict[str, DataFrame]:
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

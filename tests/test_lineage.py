@@ -1,5 +1,7 @@
 """Lineage / checkpoint-resume tests."""
 
+import pytest
+
 
 class TestLineage:
     def test_checkpoint_resume_skips_committed(self, spark, tmp_path):
@@ -45,3 +47,16 @@ class TestLineage:
         lin = read_lineage(spark, root).toPandas()
         assert sorted(lin["partition_key"]) == ["007", "12", "7"]
         assert set(lin["row_count"]) == {1}
+
+    def test_unreadable_lineage_fails_the_stage(self, spark, tmp_path):
+        """A lineage table that cannot be read raises: taken as "nothing
+        committed yet", the rerun would append every partition again."""
+        from go_matrixprofile_spark.plans.lineage import checkpoint_stage
+
+        root = tmp_path / "ckpt"
+        df = spark.createDataFrame([("c1", 1.0), ("c2", 2.0)], ["conv_id", "v"])
+        checkpoint_stage(df, str(root), "tier_1m")
+        (root / "_lineage" / "0-not-parquet.txt").write_text("not parquet\n")
+        with pytest.raises(Exception, match="0-not-parquet.txt"):
+            checkpoint_stage(df, str(root), "tier_1m")
+        assert spark.read.parquet(str(root / "tier_1m")).count() == 2

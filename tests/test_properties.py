@@ -6,7 +6,7 @@ import shutil
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from numpy.lib.stride_tricks import sliding_window_view
 
 from go_matrixprofile_spark.kernels import matrix_profile as mpm
@@ -237,30 +237,6 @@ def _tiles_self(x, w, t):
     return p2e(corr, w), idx
 
 
-def _tiles_ab(a, b, w, t):
-    """Tiled AB-join merged like matrix_profile_ab_chunked: max corr, ties
-    to the smallest signed diagonal (lowest B idx on the A side, highest
-    A idx on the B side)."""
-    la, lb = a.size - w + 1, b.size - w + 1
-    pa, pb = [], []
-    for r0 in range(0, la, t):
-        for c0 in range(0, lb, t):
-            mpr, idr, mpc, idc = mpx_tile_partial(
-                a[r0 : r0 + t + w - 1], b[c0 : c0 + t + w - 1],
-                r0, c0, min(t, la - r0), min(t, lb - c0), w, self_join=False,
-            )
-            pa.append((r0, mpr, idr))
-            pb.append((c0, mpc, idc))
-    out = []
-    for n, parts, sign in ((la, pa, -1), (lb, pb, 1)):
-        offs = np.concatenate([np.arange(o, o + p.size) for o, p, _ in parts])
-        corr = np.concatenate([p for _, p, _ in parts])
-        idx = np.concatenate([i for _, _, i in parts])
-        corr, idx = _max_by(n, offs, corr, idx, sign * idx)
-        out.append((p2e(corr, w), idx))
-    return out
-
-
 class TestDifferentialBruteForce:
     """Every MP path against an O(n²·w) brute-force Pearson profile, on
     offset-heavy (mean up to 1e6), constant-run, tie-heavy and n = w + 1
@@ -281,19 +257,17 @@ class TestDifferentialBruteForce:
         _assert_profile(corr, valid, mp, idx, w, tol, kind == "ties")
 
     @settings(max_examples=40, deadline=None)
-    @given(mp_input(n_series=2), st.integers(min_value=1, max_value=40))
-    def test_ab_mpx_and_tiles(self, inp, t):
+    @given(mp_input(n_series=2))
+    def test_ab_mpx(self, inp):
         w, [(a, kind_a), (b, kind_b)] = inp
         corr = _brute_corr(a, b, w)
         valid = np.ones(corr.shape, dtype=bool)
         tol = _tol(w, a, b)
         ties = "ties" in (kind_a, kind_b)
-        m1, m4 = (MatrixProfile(a, b, w).compute(MPOpts(n_jobs=j)) for j in (1, 4))
-        (tab, tiab), (tba, tiba) = _tiles_ab(a, b, w, max(t, w))
-        for mp, idx in ((m1.mp, m1.idx), (m4.mp, m4.idx), (tab, tiab)):
-            _assert_profile(corr, valid, mp, idx, w, tol, ties)
-        for mp, idx in ((m1.mpb, m1.idxb), (m4.mpb, m4.idxb), (tba, tiba)):
-            _assert_profile(corr.T, valid.T, mp, idx, w, tol, ties)
+        for n_jobs in (1, 4):
+            m = MatrixProfile(a, b, w).compute(MPOpts(n_jobs=n_jobs))
+            _assert_profile(corr, valid, m.mp, m.idx, w, tol, ties)
+            _assert_profile(corr.T, valid.T, m.mpb, m.idxb, w, tol, ties)
 
     @settings(max_examples=40, deadline=None)
     @given(mp_input(kinds=("walk",)).filter(lambda inp: inp[1][0][0].mean() < 1e5))
@@ -393,13 +367,17 @@ class TestCompiledSweepParity:
 
     @settings(max_examples=30, deadline=None)
     @given(mp_input(n_series=2), st.integers(min_value=1, max_value=40))
+    # 17 windows in tiles of 4: the tile at (r0, c0) = (0, 4) sweeps
+    # d_lo = max(-3, max(1, 4 // 4) - 4) = -3
+    @example((4, [(_make_series("walk", 20, 4, 0.0, 1), "walk"),
+                  (_make_series("ties", 20, 4, 1e3, 2), "ties")]), 4)
     def test_tiles(self, inp, t):
-        """Self-join tiles off the diagonal and every AB tile sweep
-        negative diagonals."""
+        """Self-join tiles off the diagonal sweep negative diagonals
+        whenever their col range starts more than the exclusion zone
+        past their row range."""
         w, [(a, _), (b, _)] = inp
         _assert_same_on_both_sweeps(
-            lambda: [*_tiles_self(a, w, max(t, w)),
-                     *(v for part in _tiles_ab(a, b, w, max(t, w)) for v in part)]
+            lambda: [*_tiles_self(a, w, max(t, w)), *_tiles_self(b, w, max(t, w))]
         )
 
     @settings(max_examples=30, deadline=None)

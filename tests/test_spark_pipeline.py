@@ -293,37 +293,6 @@ class TestMatrixProfileOperator:
         assert "long" in set(segments.toPandas()["conv_id"])
 
 
-class TestAutoRouting:
-    def test_mixed_lengths_route_and_agree(self, spark):
-        """matrix_profile_auto: short series via whole-series tasks, a
-        'mega-thread' via chunked diagonals — values equal either way."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from go_matrixprofile_spark.operators.profile import (
-            matrix_profile,
-            matrix_profile_auto,
-        )
-        from go_matrixprofile_spark.kernels import siggen
-
-        rows = []
-        for conv, n in [("small-a", 300), ("small-b", 420), ("mega", 3000)]:
-            sig = siggen.add(siggen.line(0, 0, n), siggen.noise(1.0, n, rng=hash(conv) % 100))
-            rows.append(
-                pd.DataFrame(
-                    {"conv_id": conv, "metric": "m", "bucket_s": np.arange(n, dtype=float), "value": sig}
-                )
-            )
-        df = spark.createDataFrame(pd.concat(rows))
-        auto = (
-            matrix_profile_auto(df, w=16, chunk_threshold=1000, n_batches=4)
-            .orderBy("conv_id", "offset")
-            .toPandas()
-        )
-        whole = matrix_profile(df, w=16).orderBy("conv_id", "offset").toPandas()
-        assert len(auto) == len(whole)
-        np.testing.assert_allclose(auto["mp"].to_numpy(), whole["mp"].to_numpy(), atol=1e-7)
-
-
 class TestGoldenDiscoveryThroughSpark:
     def test_motif_fixture_end_to_end(self, spark, series_raw):
         """Planted golden motif conversation through the Spark discover
@@ -346,38 +315,3 @@ class TestGoldenDiscoveryThroughSpark:
             [0.1459619228330262, 0.3352336136782056, 0.46369664551715467],
             atol=1e-7,
         )
-
-
-class TestJsonlSource:
-    def test_roundtrip_and_corrupt_quarantine(self, spark, transcripts, tmp_path):
-        """JSONL source: write → read round-trips the transcript corpus
-        exactly (incl. microsecond timestamps); a malformed line is
-        quarantined to _corrupt_record, not fatal, and excluded from the
-        clean view."""
-        from go_matrixprofile_spark.sources.jsonl import (
-            read_transcripts_jsonl,
-            write_transcripts_jsonl,
-        )
-
-        from pyspark.sql import functions as F
-
-        path = str(tmp_path / "tx.jsonl")
-        write_transcripts_jsonl(transcripts, path)
-        back = read_transcripts_jsonl(spark, path)
-        cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        a = transcripts.select(cols).orderBy("conv_id", "turn_idx").toPandas()
-        b = back.select(cols).orderBy("conv_id", "turn_idx").toPandas()
-        pd.testing.assert_frame_equal(a, b)
-
-        # inject a malformed line alongside the good files
-        (tmp_path / "tx.jsonl" / "bad.json").write_text(
-            '{"conv_id": "x", "turn_idx": not-json}\n'
-        )
-        clean = read_transcripts_jsonl(spark, path)
-        quarantined = read_transcripts_jsonl(spark, path, keep_corrupt=True)
-        assert clean.count() == len(a)
-        # Spark disallows plans that reference ONLY the corrupt column
-        # on a raw JSON scan (count() prunes to just the filter column);
-        # materialize full rows, as a dead-letter sink would
-        bad = quarantined.toPandas()
-        assert bad["_corrupt_record"].notna().sum() == 1

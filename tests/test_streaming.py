@@ -240,107 +240,6 @@ class TestCompactExclusion:
         assert not marker.exists()
 
 
-class TestStatefulStreamingMP:
-    def test_stateful_update_equals_recompute(self, spark, tmp_path):
-        """The reference's Update API as applyInPandasWithState: per-conv
-        GroupState carries the series + profile across micro-batches;
-        the final streamed profile must equal a full batch recompute
-        (matrixprofile_test.go:706-762 through Structured Streaming)."""
-        import pandas as pd
-
-        from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile, MPOpts
-        from go_matrixprofile_spark.streaming.stateful import (
-            latest_profiles,
-            stream_matrix_profile,
-        )
-
-        w = 8
-        in_dir = str(tmp_path / "pts")
-        out_dir = str(tmp_path / "prof")
-        ckpt = str(tmp_path / "ckpt")
-        rng = np.random.default_rng(5)
-        series = {
-            f"conv-{c}": np.abs(rng.normal(10, 4, 60)) + rng.random(60)
-            for c in range(3)
-        }
-
-        def write_points(lo, hi, mode):
-            rows = []
-            for cid, vals in series.items():
-                for i in range(lo, hi):
-                    rows.append((cid, float(i), float(vals[i])))
-            spark.createDataFrame(
-                pd.DataFrame(rows, columns=["conv_id", "bucket_s", "value"])
-            ).write.mode(mode).parquet(in_dir)
-
-        # batch 1: first 40 points (written before the stream is built —
-        # the file source requires the path to exist)
-        write_points(0, 40, "overwrite")
-        sink = stream_matrix_profile(spark, in_dir, ckpt, w=w)
-        q = sink.format("parquet").option("path", out_dir).trigger(availableNow=True).start()
-        q.awaitTermination(120)
-        # batch 2: the remaining 20 stream in
-        write_points(40, 60, "append")
-        q = sink.format("parquet").option("path", out_dir).trigger(availableNow=True).start()
-        q.awaitTermination(120)
-
-        got = latest_profiles(spark, out_dir).orderBy("conv_id", "offset").toPandas()
-        assert set(got["seq"]) == {2}  # second update generation
-        for cid, vals in series.items():
-            want = MatrixProfile(vals, None, w).compute(MPOpts(algorithm="stomp"))
-            g = got[got.conv_id == cid]
-            assert len(g) == want.mp.size
-            np.testing.assert_allclose(g["mp"].to_numpy(), want.mp, atol=1e-9)
-
-    def test_frozen_conv_emits_marker(self, spark, tmp_path):
-        """A conversation past max_points must not stall silently: each
-        batch that delivers points to a frozen conversation yields one
-        marker row (offset -1, idx = dropped count). Markers surface via
-        frozen_markers; latest_profiles stays marker-free so readers
-        never see NaN profile rows (r03 advisor finding)."""
-        import pandas as pd
-
-        from go_matrixprofile_spark.streaming.stateful import (
-            frozen_markers,
-            latest_profiles,
-            stream_matrix_profile,
-        )
-
-        w = 8
-        in_dir = str(tmp_path / "pts")
-        out_dir = str(tmp_path / "prof")
-        ckpt = str(tmp_path / "ckpt")
-        rng = np.random.default_rng(9)
-        vals = np.abs(rng.normal(10, 4, 50)) + rng.random(50)
-
-        def write_points(lo, hi, mode):
-            rows = [("conv-f", float(i), float(vals[i])) for i in range(lo, hi)]
-            spark.createDataFrame(
-                pd.DataFrame(rows, columns=["conv_id", "bucket_s", "value"])
-            ).write.mode(mode).parquet(in_dir)
-
-        # batch 1 fills state to max_points; batch 2 hits the freeze
-        write_points(0, 30, "overwrite")
-        sink = stream_matrix_profile(spark, in_dir, ckpt, w=w, max_points=30)
-        q = sink.format("parquet").option("path", out_dir).trigger(availableNow=True).start()
-        q.awaitTermination(120)
-        write_points(30, 50, "append")
-        q = sink.format("parquet").option("path", out_dir).trigger(availableNow=True).start()
-        q.awaitTermination(120)
-
-        marker = frozen_markers(spark, out_dir).toPandas()
-        assert len(marker) == 1
-        assert int(marker["idx"].iloc[0]) == 20  # dropped points, visible
-        assert marker["mp"].isna().all()
-        # latest_profiles: ONLY the last real profile (seq 1, 30 points),
-        # no NaN marker rows interleaved
-        latest = latest_profiles(spark, out_dir).toPandas()
-        assert (latest["offset"] >= 0).all()
-        assert not latest["mp"].isna().any()
-        assert len(latest) == 30 - w + 1
-        assert set(latest["seq"]) == {1}
-
-
 class TestStreamDedup:
     def test_first_seen_kept_state_survives_restart(self, spark, tmp_path):
         """Streaming exact dedup: one survivor per distinct text within

@@ -127,55 +127,16 @@ def main() -> int:
         must=["partial_sum", "hashpartitioning"],
     )
 
-    # 6. MP auto-routing: length routing via a computed-n column through
-    #    a NON-broadcast shuffled join (at corpus scale the routing key
-    #    list is nearly every (conv, metric) pair — a broadcast would
-    #    pull billions of rows through the driver)
-    from go_matrixprofile_spark.operators.profile import matrix_profile_auto
-    from go_matrixprofile_spark.operators.series import turn_rate_series
+    # 6. whole-series MP: the kernel stage is fed by a numbered range
+    #    exchange on (conv_id, metric) — one task per core, balanced by
+    #    series count, at most one task per distinct series. Round-robin
+    #    (random start per input partition) and hash exchanges both put
+    #    2 series in one task whenever they collide.
+    from go_matrixprofile_spark.operators.profile import matrix_profile
+    from go_matrixprofile_spark.operators.series import derive_series
     from go_matrixprofile_spark.sources.transcripts import transcripts_from_events
 
     t = transcripts_from_events(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    # disable the planner's size-based broadcasting for this one plan:
-    # at sf0.01 the length table genuinely fits the 10MB threshold, so a
-    # BroadcastHashJoin here would be the PLANNER's (correct, stats-based)
-    # choice — the invariant is that no broadcast survives when the
-    # threshold is off, i.e. nothing is FORCED via F.broadcast and the
-    # plan degrades to a shuffled join at corpus scale
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        auto = matrix_profile_auto(turn_rate_series(t, 3600), w=8)
-        auto_plan = plan_of(auto)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-    routing_shuffled = ("SortMergeJoin" in auto_plan) or (
-        "ShuffledHashJoin" in auto_plan
-    )
-    checks.append(
-        (
-            "matrix_profile_auto: non-broadcast length-column routing",
-            auto_plan,
-            [
-                ("routing join is SortMerge/ShuffledHash", routing_shuffled),
-                ("partial_count length agg", "partial_count" in auto_plan),
-                (
-                    "no forced broadcast (threshold off)",
-                    "BroadcastHashJoin" not in auto_plan,
-                ),
-                ("absent   'CartesianProduct'", "CartesianProduct" not in auto_plan),
-            ],
-        )
-    )
-
-    # 6b. whole-series MP: the kernel stage is fed by a numbered range
-    #     exchange on (conv_id, metric) — one task per core, balanced by
-    #     series count, at most one task per distinct series. Round-robin
-    #     (random start per input partition) and hash exchanges both put
-    #     2 series in one task whenever they collide.
-    from go_matrixprofile_spark.operators.profile import matrix_profile
-    from go_matrixprofile_spark.operators.series import derive_series
-
     p = plan_of(matrix_profile(derive_series(t), w=8))
     checks.append(
         (
@@ -203,28 +164,6 @@ def main() -> int:
         "matrix_profile_chunked: hash joins + pinned repartition",
         qs["mp_chunked_oracle"](spark, sf_dir),
         must=["hashpartitioning", "REPARTITION_BY_NUM"],
-        must_not=["CartesianProduct"],
-    )
-
-    # 7b. chunked MP on a declared regular grid: positions derive
-    #     arithmetically — NO window sort anywhere in the plan (the
-    #     per-conv row_number over a 10^8-point mega-thread was the last
-    #     single-task whole-series stage)
-    from go_matrixprofile_spark.operators.profile import matrix_profile_chunked
-
-    grid_src = spark.range(4096).select(
-        F.lit("g").alias("conv_id"),
-        F.lit("m").alias("metric"),
-        (F.col("id") * 3600).cast("double").alias("bucket_s"),
-        F.sin(F.col("id") / 17.0).alias("value"),
-    )
-    # (the plan still CONTAINS a Window node — it is the zero-row
-    # irregular-fallback branch of the union; regular groups take the
-    # min/max/count-distinct aggregate + join path asserted here)
-    check(
-        "matrix_profile_chunked(grid_step): arithmetic position stats agg",
-        matrix_profile_chunked(grid_src, w=64, tile_points=1024, grid_step=3600),
-        must=["hashpartitioning", "REPARTITION_BY_NUM", "partial_min", "partial_max"],
         must_not=["CartesianProduct"],
     )
 
