@@ -1,5 +1,6 @@
 """NumPy matrix-profile kernels (no Spark dependency); the MPX diagonal
-sweep runs compiled C when the host can build it (matrix_profile.diag_sweep).
+sweep runs compiled C, vectorized, when the host can build it
+(matrix_profile.diag_sweep).
 
 Semantics match matrix-profile-foundation/go-matrixprofile; every public
 function cites the reference file:line it reproduces. These kernels run

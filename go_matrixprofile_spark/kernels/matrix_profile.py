@@ -18,9 +18,13 @@ that differ only in which streams, seeds and output arrays they pass.
 ``diag_sweep`` is diag_sweep.c, compiled with the host's ``cc`` once
 per host into a cache dir and loaded through ctypes when this module is
 imported (so a Spark driver builds it before any task runs and Python
-workers only load it); where that fails it is ``_diag_sweep_numpy``,
-the NumPy body the C loop reproduces bit for bit. The choice is logged
-once per process.
+workers only load it). The library runs 8 diagonals' correlation chains
+as vector lanes, then each diagonal's compares in the one-loop order;
+it holds an AVX and an SSE2 build of that (one portable build off
+x86-64) and ``sweep_path`` names the widest this CPU runs. Where the
+library cannot be built or loaded, ``diag_sweep`` is
+``_diag_sweep_numpy``, the NumPy body every compiled path reproduces
+bit for bit. The choice is logged once per process.
 
 Parity-critical details preserved (see SURVEY.md §7.4):
 - STOMP/STAMP/STMP min-update uses ``<=`` (latest row wins ties,
@@ -684,9 +688,10 @@ def _diag_sweep_numpy(xs, ys, seeds, d_lo, d_hi, mp_x, idx_x, mp_y, idx_y, x0=0,
     This NumPy body is the fallback when the compiled sweep
     (diag_sweep.c) cannot be built or loaded, and the reference the
     parity tests hold it to. Per diagonal it is one cumsum plus eight
-    vector ops; the compiled loop does the same arithmetic cell by cell,
-    5.6x faster single-threaded at 16,384 points / w=128 and 20x at
-    1,000 / w=24 (4-vCPU x86-64 host).
+    vector ops; the compiled sweep does the same arithmetic cell by
+    cell, 8 diagonals at a time. Single-threaded on a 4-vCPU x86-64
+    host it is 12x faster with AVX (6x with SSE2) at 16,384 points /
+    w=128, and 28x (20x) at 1,000 / w=24.
     """
     _, sigx, dfx, dgx = xs
     _, sigy, dfy, dgy = ys
@@ -724,15 +729,15 @@ _C_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "diag_sweep
 _CFLAGS = ("-O3", "-fPIC", "-shared", "-ffp-contract=off")
 
 
-def _c_sweep(lib: ctypes.CDLL):
-    """Wrap the library's diag_sweep with _diag_sweep_numpy's signature."""
+def _c_sweep(fn, group: int):
+    """Wrap one of the library's sweep paths with _diag_sweep_numpy's
+    signature; group is the library's diag_sweep_group."""
     vec = np.ctypeslib.ndpointer(np.float64, ndim=1, flags="C_CONTIGUOUS,ALIGNED")
     out = np.ctypeslib.ndpointer(np.float64, ndim=1, flags="C_CONTIGUOUS,ALIGNED,WRITEABLE")
     out_idx = np.ctypeslib.ndpointer(np.int64, ndim=1, flags="C_CONTIGUOUS,ALIGNED,WRITEABLE")
     i64 = ctypes.c_int64
-    fn = lib.diag_sweep
     fn.argtypes = [vec, vec, vec, i64, vec, vec, vec, i64, vec, i64, i64,
-                   out, out_idx, out, out_idx, i64, i64, ctypes.c_int]
+                   out, out_idx, out, out_idx, i64, i64, ctypes.c_int, out]
     fn.restype = None
 
     def diag_sweep(xs, ys, seeds, d_lo, d_hi, mp_x, idx_x, mp_y, idx_y, x0=0, y0=0,
@@ -741,7 +746,9 @@ def _c_sweep(lib: ctypes.CDLL):
         same order with the same float operations, hence the same bits.
         The argtypes reject any array that is not C-contiguous float64 /
         int64 (outputs writeable); the bounds C would index by are
-        checked here."""
+        checked here. The scratch C writes to is allocated here, at the
+        size it needs: (group + 1) * min(nx, ny) doubles for the kept
+        correlation rows and their cell indices."""
         seeds = np.asarray(seeds, dtype=np.float64)
         nx, ny = mp_x.size, mp_y.size
         if d_lo <= d_hi and not (
@@ -758,20 +765,32 @@ def _c_sweep(lib: ctypes.CDLL):
                 f"not fit profiles of {nx} x {ny} windows and their streams"
             )
         fn(*xs[1:], nx, *ys[1:], ny, seeds, d_lo, d_hi, mp_x, idx_x, mp_y, idx_y,
-           x0, y0, bool(remap))
+           x0, y0, bool(remap), np.empty((group + 1) * min(nx, ny)))
 
     return diag_sweep
 
 
-def _load_sweep(cc: str = "cc", cache_dir: str | None = None):
-    """The compiled diag_sweep, or _diag_sweep_numpy when the library
-    cannot be built or loaded (no compiler, a cache dir that cannot be
-    written). The library is built once per host into cache_dir (default
+def _c_sweeps(lib: ctypes.CDLL) -> dict:
+    """{path: wrapped sweep} for the library's paths this CPU runs, as
+    diag_sweep_paths names them, best first."""
+    group = ctypes.c_int.in_dll(lib, "diag_sweep_group").value
+    lib.diag_sweep_paths.argtypes = []
+    lib.diag_sweep_paths.restype = ctypes.c_char_p
+    paths = lib.diag_sweep_paths().decode().split()
+    return {p: _c_sweep(getattr(lib, f"diag_sweep_{p}"), group) for p in paths}
+
+
+def _load_sweeps(cc: str = "cc", cache_dir: str | None = None) -> dict:
+    """{path: sweep} for the compiled sweep paths this CPU runs, best
+    first ("avx", "sse2"; "generic" off x86-64), or {"numpy":
+    _diag_sweep_numpy} when the library cannot be built or loaded (no
+    compiler, a cache dir that cannot be written). The library is built
+    once per host into cache_dir (default
     ${XDG_CACHE_HOME:-~/.cache}/go_matrixprofile_spark) under a name keyed
     by a hash of the C source and flags; it is compiled to a temp file
     and renamed into place, so processes that build it at the same
-    time are safe. Logs the choice: INFO with the library path, or one
-    WARNING with the reason."""
+    time are safe. Logs the choice: INFO with the library path and the
+    path dispatched to, or one WARNING with the reason."""
     if cache_dir is None:
         base = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
         cache_dir = os.path.join(base, "go_matrixprofile_spark")
@@ -781,12 +800,12 @@ def _load_sweep(cc: str = "cc", cache_dir: str | None = None):
         path = os.path.join(cache_dir, f"diag_sweep-{key}.so")
         if not os.path.exists(path):
             _build(cc, path)
-        sweep = _c_sweep(ctypes.CDLL(path))
+        sweeps = _c_sweeps(ctypes.CDLL(path))
     except OSError as e:
         log.warning("diag_sweep: NumPy fallback: %s", e)
-        return _diag_sweep_numpy
-    log.info("diag_sweep: C %s", path)
-    return sweep
+        return {"numpy": _diag_sweep_numpy}
+    log.info("diag_sweep: C %s (%s)", path, next(iter(sweeps)))
+    return sweeps
 
 
 def _build(cc: str, path: str) -> None:
@@ -807,8 +826,9 @@ def _build(cc: str, path: str) -> None:
 
 # Built (once per host) and loaded at import, so a Spark driver that
 # imports this module has the library in the cache before any task runs
-# and Python workers only dlopen it.
-diag_sweep = _load_sweep()
+# and Python workers only dlopen it. sweep_path names the one dispatched to.
+_SWEEPS = _load_sweeps()
+sweep_path, diag_sweep = next(iter(_SWEEPS.items()))
 
 
 def mpx_tile_partial(

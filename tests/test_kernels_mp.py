@@ -8,6 +8,7 @@ Fixtures from /root/reference/matrixprofile_test.go (canonical series at
 """
 
 import logging
+import platform
 import shutil
 
 import numpy as np
@@ -268,23 +269,23 @@ class TestSaveLoad:
 
 
 class TestSweepBackend:
-    """_load_sweep falls back to _diag_sweep_numpy, with one WARNING
+    """_load_sweeps falls back to _diag_sweep_numpy, with one WARNING
     naming the reason, when the library cannot be built."""
 
     def _load(self, caplog, **kw):
         with caplog.at_level(logging.INFO, logger=mpm.__name__):
-            sweep = mpm._load_sweep(**kw)
-        return sweep, [r for r in caplog.records if r.name == mpm.__name__]
+            sweeps = mpm._load_sweeps(**kw)
+        return sweeps, [r for r in caplog.records if r.name == mpm.__name__]
 
     def _assert_fallback(self, caplog, monkeypatch, reason, **kw):
-        sweep, records = self._load(caplog, **kw)
-        assert sweep is mpm._diag_sweep_numpy
+        sweeps, records = self._load(caplog, **kw)
+        assert sweeps == {"numpy": mpm._diag_sweep_numpy}
         assert [r.levelno for r in records] == [logging.WARNING]
         assert "NumPy fallback" in records[0].getMessage()
         assert reason in records[0].getMessage()
         x = np.random.default_rng(3).normal(size=300).cumsum()
         want = compute_mp(x, None, 16)
-        monkeypatch.setattr(mpm, "diag_sweep", sweep)
+        monkeypatch.setattr(mpm, "diag_sweep", sweeps["numpy"])
         got = compute_mp(x, None, 16)
         assert np.array_equal(got.mp, want.mp) and np.array_equal(got.idx, want.idx)
 
@@ -300,10 +301,14 @@ class TestSweepBackend:
 
     @pytest.mark.skipif(shutil.which("cc") is None, reason="no C compiler")
     def test_builds_into_cache_dir(self, tmp_path, caplog):
-        sweep, records = self._load(caplog, cache_dir=str(tmp_path))
-        assert sweep is not mpm._diag_sweep_numpy
+        """The INFO line names the library and the path dispatched to: the
+        widest one this CPU runs."""
+        sweeps, records = self._load(caplog, cache_dir=str(tmp_path))
         [lib] = tmp_path.iterdir()
         assert lib.name.startswith("diag_sweep-") and lib.suffix == ".so"
+        paths = [["avx", "sse2"], ["sse2"]] if platform.machine() == "x86_64" else [["generic"]]
+        assert list(sweeps) in paths
+        path = next(iter(sweeps))
         assert [(r.levelno, r.getMessage()) for r in records] == [
-            (logging.INFO, f"diag_sweep: C {lib}")
+            (logging.INFO, f"diag_sweep: C {lib} ({path})")
         ]

@@ -296,23 +296,26 @@ class TestDifferentialBruteForce:
 
 
 def _assert_same_on_both_sweeps(run):
-    """run() on the compiled sweep and on _diag_sweep_numpy return equal
-    arrays, NaN-aware and dtype included."""
+    """run() on every compiled sweep path this CPU runs (AVX and SSE2 on
+    an AVX host) and on _diag_sweep_numpy return equal arrays, NaN-aware
+    and dtype included."""
     compiled = mpm.diag_sweep
     if compiled is mpm._diag_sweep_numpy:
         if shutil.which("cc"):
             pytest.fail("a C compiler is on PATH but the compiled diag_sweep did not load")
         pytest.skip("no C compiler: the NumPy sweep is the only one")
-    got = run()
-    mpm.diag_sweep = mpm._diag_sweep_numpy
     try:
+        mpm.diag_sweep = mpm._diag_sweep_numpy
         want = run()
+        for path, sweep in mpm._SWEEPS.items():
+            mpm.diag_sweep = sweep
+            got = run()
+            assert len(got) == len(want), path
+            for g, w in zip(got, want):
+                assert g.dtype == w.dtype, path
+                assert np.array_equal(g, w, equal_nan=True), path
     finally:
         mpm.diag_sweep = compiled
-    assert len(got) == len(want)
-    for g, w in zip(got, want):
-        assert g.dtype == w.dtype
-        assert np.array_equal(g, w, equal_nan=True)
 
 
 @st.composite
@@ -332,6 +335,12 @@ class TestCompiledSweepParity:
 
     @settings(max_examples=40, deadline=None)
     @given(mp_input())
+    # the compiled sweep runs d >= 0 in groups of 8 diagonals. 95 windows,
+    # excl 1: 94 diagonals, 11 groups and 6 left over; n_jobs=4 batches
+    # start at d = 12, 28, 48, inside the groups that start at 9, 25, 41
+    @example((2, [(_make_series("walk", 96, 2, 0.0, 7), "walk")]))
+    # 8 windows, excl 1: 7 diagonals, fewer than one group
+    @example((4, [(_make_series("ties", 11, 4, 1e3, 8), "ties")]))
     def test_self_join(self, inp):
         w, [(x, _)] = inp
 
@@ -350,6 +359,11 @@ class TestCompiledSweepParity:
 
     @settings(max_examples=30, deadline=None)
     @given(mp_input(n_series=2))
+    # 27 and 67 windows: one pass's diagonals all get shorter, the other's
+    # keep 27 cells up to d = 40, so the group at 40 has a first diagonal
+    # of 27 cells and a last of 20
+    @example((4, [(_make_series("walk", 30, 4, 0.0, 9), "walk"),
+                  (_make_series("const", 70, 4, 1e6, 10), "const")]))
     def test_ab_join(self, inp):
         """Both orders of the pair, so len(A) < len(B) and len(A) > len(B)
         whenever the lengths differ."""

@@ -223,9 +223,10 @@ class TestWorkerDaemon:
 
 class TestKernelBackend:
     def test_workers_load_the_drivers_sweep(self, spark):
-        """Every Python worker runs the compiled diag_sweep whenever the
-        driver does: a worker that silently fell back to NumPy (other
-        HOME or cache path) would lose the kernel speed-up unseen."""
+        """Every Python worker dispatches to the same diag_sweep path as
+        the driver: a worker that silently fell back to NumPy (other HOME
+        or cache path) or to a narrower vector path would lose kernel
+        speed unseen."""
         from go_matrixprofile_spark.kernels import matrix_profile as mpm
 
         def report(it):
@@ -234,9 +235,9 @@ class TestKernelBackend:
             from go_matrixprofile_spark.kernels import matrix_profile as m
 
             for _ in it:
-                yield pd.DataFrame({"compiled": [m.diag_sweep is not m._diag_sweep_numpy]})
+                yield pd.DataFrame({"path": [m.sweep_path]})
 
         n = spark.sparkContext.defaultParallelism
-        rows = spark.range(0, 2 * n, 1, 2 * n).mapInPandas(report, "compiled boolean").collect()
+        rows = spark.range(0, 2 * n, 1, 2 * n).mapInPandas(report, "path string").collect()
         assert len(rows) == 2 * n
-        assert {r.compiled for r in rows} == {mpm.diag_sweep is not mpm._diag_sweep_numpy}
+        assert {r.path for r in rows} == {mpm.sweep_path}
