@@ -745,10 +745,11 @@ def q_kmp_oracle(spark, sf_dir):
 
 def q_pmp_oracle(spark, sf_dir):
     """ORACLE-CHECKED pan matrix profile (pmp.go:119-161): one MPX
-    profile per window in [6, 10] over the bounded latency series,
-    computed with (conv, window) task granularity
-    (pan_matrix_profile_distributed) — vs a window-parameterized
-    quadratic SQL twin with MPX's max(1, w/4) exclusion zone."""
+    profile per window in [6, 10] over the bounded latency series, all
+    windows of a series in one kernel call on the whole series
+    (pan_matrix_profile_distributed → kernels.pmp.PMP) — vs a
+    window-parameterized quadratic SQL twin with MPX's max(1, w/4)
+    exclusion zone."""
     prof = pan_matrix_profile_distributed(_latency40(spark, sf_dir), 6, 10)
     return prof.select("conv_id", "w", "offset", F.round("mp", 4).alias("mp"))
 

@@ -75,7 +75,8 @@ class MPOpts:
 
     Defaults: MPX, sample 1.0, Euclidean. n_jobs defaults to 1 (each
     Spark task is single-threaded; intra-series parallelism comes from
-    diagonal batches mapped to separate tasks, not threads).
+    the SCAMP tiles of operators.profile.matrix_profile_chunked, each
+    its own task, not threads).
     ``seed`` is an extension: the reference's STAMP uses unseeded
     rand.Perm (matrixprofile.go:684), so its sampled output is
     irreproducible; we require a seed for determinism.

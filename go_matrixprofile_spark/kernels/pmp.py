@@ -3,7 +3,11 @@
 Window sizes are ordered by recursive binary split of [lower, upper]
 (midpoint-spread priority) and truncated by sample_pct on that ORDER,
 not on the sorted list (pmp.go:119-161) — a sampled pan-MP covers
-spread-out windows first.
+spread-out windows first. Each window is one MatrixProfile.compute with
+the caller's options, so every algorithm, sampling and output space of
+the single-window profile applies per level; with MPX that is the
+compiled diagonal sweep. ``operators.profile.pan_matrix_profile_distributed``
+runs this class on each whole series.
 """
 
 from __future__ import annotations
@@ -13,117 +17,9 @@ import json
 import numpy as np
 
 from .matrix_profile import MatrixProfile, MPOpts
-from .util import binary_split, mu_invn, p2e
+from .util import binary_split
 
 _MAXINT = np.iinfo(np.int64).max
-
-
-def pmp_fused(
-    a: np.ndarray, windows, opts: MPOpts | None = None
-) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-    """Multi-window MPX self-join sharing per-diagonal product scans.
-
-    The faithful pan-MP kernel (PMP.compute → MatrixProfile._mpx,
-    pmp.go:119-161) recomputes every diagonal's dot stream from scratch
-    for EVERY window size. Here the pair products a[k]·a[k+d] and their
-    prefix sum are computed once per diagonal d and each window's
-    centered correlation derives from range sums of that shared scan:
-
-        Q_w(i) = P_d[i+w-1] - P_d[i-1]           (raw sliding dot)
-        c_w(i) = Q_w(i) - w·mu_w(i)·mu_w(i+d)    (centering identity)
-        corr   = c_w(i) · inv_w(i) · inv_w(i+d)
-
-    The series is globally centered (a ← a − mean(a)) before the product
-    scan: Pearson of z-normalized windows is shift-invariant, and without
-    the shift the Q − w·mu·mu subtraction catastrophically cancels for
-    series with large mean/std ratio (17% relative error at mean≈1e6,
-    total corruption at 1e9 vs the faithful df/dg kernel). With the
-    shift the two kernels agree to ≤5e-9 at mean 1e6 (pinned by pytest).
-
-    Two wins over per-window compute: the shared product+cumsum pass
-    amortizes across the window batch, and (the bigger one at fleet
-    scale) the operator ships each conversation's array ONCE per window
-    batch instead of once per window.
-
-    Per-window semantics match _mpx: exclusion zone max(1, w//4),
-    diagonals ascending with strict > (earliest diagonal wins ties,
-    diagonal-side touch before offset-side), MuInvN zero-sigma guard,
-    and (corr -inf, idx MAXINT) for offsets with no candidate outside
-    the exclusion zone. Values differ from the faithful kernel only by
-    accumulation order (direct range sums vs the df/dg recurrence,
-    ~1e-12 relative); Go-fixture parity stays pinned on the faithful
-    kernel, and equivalence of the two is pinned by pytest.
-
-    It keeps its own loop rather than calling matrix_profile.diag_sweep:
-    one product scan per diagonal serves every window, which the
-    per-window df/dg recurrence cannot share.
-
-    Returns {w: (mp, idx)} in Euclidean or Pearson space per opts.
-    """
-    opts = opts or MPOpts()
-    a = np.ascontiguousarray(a, dtype=np.float64)
-    # global centering: shift-invariant for z-normed Pearson, and required
-    # to keep the Q - w*mu_i*mu_j subtraction numerically stable for
-    # offset-heavy series (see docstring)
-    a = a - a.mean()
-    n = a.size
-    ws = sorted({int(w) for w in windows})
-    out: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    stats: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    mps: dict[int, np.ndarray] = {}
-    idxs: dict[int, np.ndarray] = {}
-    lens: dict[int, int] = {}
-    excls: dict[int, int] = {}
-    for w in ws:
-        if w < 2 or w > n:
-            raise ValueError(
-                "subsequence length must be in [2, len(series)] for pan-MP"
-            )
-        la = n - w + 1
-        excl = max(1, w // 4)
-        stats[w] = mu_invn(a, w)
-        mps[w] = np.full(la, -np.inf)
-        idxs[w] = np.full(la, _MAXINT, dtype=np.int64)
-        lens[w] = la
-        excls[w] = excl
-    if ws:
-        remap = opts.remap_neg_corr
-        d_lo = min(excls[w] for w in ws)
-        d_hi = max(lens[w] for w in ws) - 1
-        prod = np.empty(n - d_lo)
-        for d in range(d_lo, d_hi + 1):
-            m = n - d
-            np.multiply(a[:m], a[d:], out=prod[:m])
-            pref = np.cumsum(prod[:m])
-            for w in ws:
-                la, excl = lens[w], excls[w]
-                if d < excl or d >= la:
-                    continue
-                omax = la - d
-                mu, sig = stats[w]
-                c = pref[w - 1 : w - 1 + omax].copy()
-                c[1:] -= pref[: omax - 1]
-                c -= float(w) * mu[:omax] * mu[d : d + omax]
-                c *= sig[:omax]
-                c *= sig[d : d + omax]
-                if remap:
-                    np.abs(c, out=c)
-                mp, mpidx = mps[w], idxs[w]
-                seg = mp[d : d + omax]
-                upd = np.nonzero(c > seg)[0]
-                if upd.size:
-                    seg[upd] = c[upd]
-                    mpidx[d + upd] = upd
-                upd = np.nonzero(c > mp[:omax])[0]
-                if upd.size:
-                    mp[upd] = c[upd]
-                    mpidx[upd] = upd + d
-        for w in ws:
-            mp = mps[w]
-            if opts.euclidean:
-                mp = p2e(mp, w)
-            out[w] = (mp, idxs[w])
-    return out
 
 
 class PMP:

@@ -5,9 +5,10 @@ assembled to one array row, ``place_series`` range-places the rows on
 one wave of tasks, and mapInPandas runs the kernel on each series.
 Parallelism comes from the *number of conversations* (the reference's
 own thread scaling is flat beyond 2 cores — BASELINE.md — so
-cross-series data parallelism is the scaling axis that matters). The
-other operators here (AB-join, discovery, k-dim MP, pan-MP, MPDist
-pairs, the update check) also hand each kernel call whole series.
+cross-series data parallelism is the scaling axis that matters).
+Discovery, k-dim MP, pan-MP (``kernels.pmp.PMP``: one profile per
+window) and the update check place their series the same way; the
+AB-join and MPDist pairs also hand each kernel call whole series.
 
 ``matrix_profile_chunked`` splits one long series over several tasks
 with SCAMP-style 2-D tiles (Zimmerman et al., SoCC 2019), so no row
@@ -28,6 +29,8 @@ from pyspark.sql import types as T
 
 from ..kernels.kmp import KMP
 from ..kernels.matrix_profile import MatrixProfile, MPOpts, mpdist
+from ..kernels.pmp import PMP
+from ..kernels.util import binary_split
 
 MP_SCHEMA = T.StructType(
     [
@@ -523,63 +526,31 @@ def pan_matrix_profile_distributed(
     lower_m: int,
     upper_m: int,
     opts: MPOpts | None = None,
-    windows_per_task: int = 8,
 ) -> DataFrame:
-    """Pan-MP with (conv, window-batch) task granularity and a FUSED
-    multi-window kernel.
+    """Pan-MP per (conv_id, metric): kernels.pmp.PMP on each whole series.
 
-    The reference (pmp.go:119-161) loops mp.Compute over windows inside
-    one call; run as ONE per-conv task that is fine for a wide fleet,
-    but a few long conversations leave cores idle while each task
-    grinds through the whole window range. Here the window dimension
-    becomes data: the per-conv array
-    crosses with the broadcast window-BATCH list (binary_split order +
-    sample_pct truncation, pmp.go:119-121, chunked into
-    ``windows_per_task`` groups) and each (conv, metric, batch) is its
-    own task running kernels.pmp.pmp_fused — one shared product+cumsum
-    pass per diagonal feeds every window in the batch (~1.4x the
-    per-window kernel at 4k/32 windows), and each conversation's array
-    ships once per BATCH instead of once per window (shuffle volume
-    ÷ windows_per_task; the dominant win at fleet scale).
-
-    ``windows_per_task`` trades task granularity against amortization:
-    1 reproduces the old (conv, window) layout; len(windows) puts each
-    conv in a single task. Values match the faithful kernel to
-    accumulation order (pinned ≤1e-9 by pytest; the driver oracle
-    rounds at 4 decimals).
+    PMP runs one MatrixProfile.compute per window (pmp.go:119-161), in
+    binary_split order truncated by sample_pct, with ``opts`` applied to
+    every window; one level per computed window is emitted. A series is
+    in the pan-MP iff it fits the largest window (at least upper_m + 2
+    points). Series are assembled and placed as in matrix_profile: one
+    array row per series, range-placed on one wave of tasks. An empty
+    window list is rejected when the plan is built.
     """
-    from ..kernels.pmp import pmp_fused
-    from ..kernels.util import binary_split
-
     opts = opts or MPOpts()
     windows = binary_split(lower_m, upper_m)
-    windows = windows[: int(len(windows) * opts.sample_pct)]
-    if not windows:
+    if not windows[: int(len(windows) * opts.sample_pct)]:
         raise ValueError("Need more than one subsequence window for pmp")
-    wpt = max(1, int(windows_per_task))
-    batches = [
-        (b, [int(x) for x in windows[i : i + wpt]])
-        for b, i in enumerate(range(0, len(windows), wpt))
-    ]
-    # no pre-repartition: the cross join below is followed by its own
-    # per-(conv, batch) numbered repartition
-    assembled = assemble_series(series, repartition=False)
-    spark = series.sparkSession
-    wdf = spark.createDataFrame(batches, "batch int, ws array<int>")
-    tasks = assembled.crossJoin(F.broadcast(wdf)).repartition(
-        cpu_partitions(series)
-    )
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             for row in pdf.itertuples(index=False):
                 vals = np.asarray(row.vals, dtype=np.float64)
-                # whole-conv gate: a conv is in the pan-MP iff it fits
-                # the LARGEST window
                 if vals.size < upper_m + 2:
                     continue
-                fused = pmp_fused(vals, list(row.ws), opts)
-                for w, (mp, idx) in fused.items():
+                p = PMP(vals).compute(lower_m, upper_m, opts)
+                for w in p.pwindows:
+                    mp = p.pmp[w - lower_m]
                     yield pd.DataFrame(
                         {
                             "conv_id": row.conv_id,
@@ -587,11 +558,11 @@ def pan_matrix_profile_distributed(
                             "w": np.int32(w),
                             "offset": np.arange(mp.size, dtype=np.int32),
                             "mp": mp,
-                            "idx": idx,
+                            "idx": p.pidx[w - lower_m],
                         }
                     )
 
-    return tasks.mapInPandas(kernel, MP_SCHEMA)
+    return place_series(assemble_series(series)).mapInPandas(kernel, MP_SCHEMA)
 
 
 def mpdist_pairs(
@@ -619,16 +590,7 @@ def mpdist_pairs(
             [(c,) for c in conv_ids], "conv_id string"
         )
         src = src.join(F.broadcast(keys), "conv_id", "left_semi")
-    assembled = (
-        src.groupBy("conv_id", "metric")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("bucket_s", "value"))),
-                lambda s: s["value"],
-            ).alias("vals")
-        )
-        .where(F.size("vals") > w * 2)
-    )
+    assembled = assemble_series(src, repartition=False).where(F.size("vals") > w * 2)
     ranked = (
         assembled
         if conv_ids is not None

@@ -6,6 +6,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from go_matrixprofile_spark.kernels.matrix_profile import MPOpts
+
 
 class TestTilePlumbing:
     def test_mega_thread_segments_bounded(self, spark):
@@ -51,7 +53,7 @@ class TestTilePlumbing:
         """Tile decomposition reproduces the whole-series MPX profile on
         a 16,384-point series (values to 1e-9, indices exactly)."""
         from go_matrixprofile_spark.kernels import siggen
-        from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile, MPOpts
+        from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile
         from go_matrixprofile_spark.operators.profile import matrix_profile_chunked
 
         n, w = 16384, 64
@@ -89,7 +91,7 @@ class TestTileEdgeCases:
         indices must still equal the whole-series kernel. Conversation
         "off" is the same series shifted to mean ~1e3: tile seeds must
         not cancel on an offset-heavy series."""
-        from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile, MPOpts
+        from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile
         from go_matrixprofile_spark.operators.profile import matrix_profile_chunked
 
         w = 8
@@ -145,7 +147,7 @@ class TestTieOrder:
         differently per path.)"""
         import pandas as pd
 
-        from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile, MPOpts
+        from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile
         from go_matrixprofile_spark.operators.profile import matrix_profile_chunked
 
         n, w = 120, 8
@@ -170,13 +172,13 @@ class TestTieOrder:
 
 
 class TestPanDistributed:
-    def test_equals_per_conv_pan(self, spark):
-        """(conv, window-batch) task granularity with the fused
-        multi-window kernel reproduces the NumPy pan-MP kernel run per
-        collected series: values to accumulation order (1e-9), indices
-        exactly."""
+    """pan_matrix_profile_distributed runs kernels.pmp.PMP on each whole
+    series: its rows equal PMP's levels per collected series exactly
+    (keys, mp and idx, no tolerance), for every option PMP reads."""
+
+    @staticmethod
+    def _assert_equals_pmp(spark, opts):
         from go_matrixprofile_spark.kernels import siggen
-        from go_matrixprofile_spark.kernels.matrix_profile import MPOpts
         from go_matrixprofile_spark.kernels.pmp import PMP
         from go_matrixprofile_spark.operators.profile import (
             pan_matrix_profile_distributed,
@@ -197,33 +199,42 @@ class TestPanDistributed:
         frames = []
         for (cid, metric), g in src.toPandas().groupby(["conv_id", "metric"]):
             vals = g.sort_values("bucket_s")["value"].to_numpy(dtype=np.float64)
-            p = PMP(vals).compute(6, 10, MPOpts())
-            for level, w in enumerate(range(6, 11)):
-                if w not in p.pwindows:
-                    continue
-                m = vals.size - w + 1
+            p = PMP(vals).compute(6, 10, opts)
+            for w in p.pwindows:
                 frames.append(
                     pd.DataFrame(
                         {
                             "conv_id": cid,
                             "metric": metric,
                             "w": w,
-                            "offset": np.arange(m),
-                            "mp": p.pmp[level][:m],
-                            "idx": p.pidx[level][:m],
+                            "offset": np.arange(vals.size - w + 1),
+                            "mp": p.pmp[w - 6],
+                            "idx": p.pidx[w - 6],
                         }
                     )
                 )
         a = pd.concat(frames).sort_values(key, ignore_index=True)
-        for wpt in (1, 3, 8):
-            b = (
-                pan_matrix_profile_distributed(src, 6, 10, windows_per_task=wpt)
-                .orderBy(key)
-                .toPandas()
-            )
-            assert len(a) == len(b) > 0, wpt
-            assert (a[key].to_numpy() == b[key].to_numpy()).all(), wpt
-            np.testing.assert_allclose(
-                a["mp"].to_numpy(), b["mp"].to_numpy(), atol=1e-9
-            )
-            assert (a["idx"].to_numpy() == b["idx"].to_numpy()).all(), wpt
+        b = (
+            pan_matrix_profile_distributed(src, 6, 10, opts)
+            .orderBy(key)
+            .toPandas()
+        )
+        assert len(a) == len(b) > 0
+        assert (a[key].to_numpy() == b[key].to_numpy()).all()
+        np.testing.assert_array_equal(a["mp"].to_numpy(), b["mp"].to_numpy())
+        np.testing.assert_array_equal(a["idx"].to_numpy(), b["idx"].to_numpy())
+
+    def test_equals_per_conv_pan(self, spark):
+        self._assert_equals_pmp(spark, MPOpts())
+
+    @pytest.mark.parametrize(
+        "opts",
+        [
+            MPOpts(algorithm="stomp"),
+            MPOpts(sample_pct=0.6, seed=1),
+            MPOpts(euclidean=False, remap_neg_corr=True),
+        ],
+        ids=["stomp", "sampled", "pearson-remap"],
+    )
+    def test_equals_pmp_for_opts(self, spark, opts):
+        self._assert_equals_pmp(spark, opts)

@@ -46,6 +46,7 @@ KERNELS = {
     "matrix_profile_assembled": lambda spark, k: P.matrix_profile_assembled(_arrays(spark, k), w=16),
     "discover": lambda spark, k: P.discover(_long(spark, k), w=16)[2],
     "k_matrix_profile": lambda spark, k: P.k_matrix_profile(_dims(spark, k), w=16),
+    "pan_matrix_profile_distributed": lambda spark, k: P.pan_matrix_profile_distributed(_long(spark, k), 14, 16),
     "streaming_update_check": lambda spark, k: P.streaming_update_check(_long(spark, k), w=16),
 }
 

@@ -4,7 +4,6 @@ import numpy as np
 import pytest
 
 from go_matrixprofile_spark.kernels import KMP, PMP, MPOpts
-from go_matrixprofile_spark.kernels.matrix_profile import MatrixProfile
 
 
 T3 = [
@@ -98,103 +97,3 @@ class TestPMP:
         assert back.pwindows == p.pwindows
         for a, b in zip(back.pmp, p.pmp):
             np.testing.assert_allclose(a, b, atol=0)
-
-
-class TestPMPFused:
-    """The fused multi-window kernel ≡ per-window MatrixProfile._mpx."""
-
-    def test_matches_per_window(self):
-        from go_matrixprofile_spark.kernels import siggen
-        from go_matrixprofile_spark.kernels.pmp import pmp_fused
-
-        n = 300
-        a = siggen.add(
-            siggen.sin(1.0, 4, 0, 0, 60, n / 60)[:n], siggen.noise(0.3, n, 5)
-        )
-        windows = list(range(6, 40))
-        fused = pmp_fused(a, windows)
-        for w in windows:
-            mp = MatrixProfile(a, None, w).compute(MPOpts(algorithm="mpx"))
-            fm, fi = fused[w]
-            np.testing.assert_allclose(fm, mp.mp, atol=1e-9, err_msg=str(w))
-            np.testing.assert_array_equal(fi, mp.idx, err_msg=str(w))
-
-    def test_constant_series_exact(self):
-        # every window constant: zero-sigma guard -> corr exactly 0,
-        # idx is purely the earliest-diagonal / diagonal-side tie rule
-        from go_matrixprofile_spark.kernels.pmp import pmp_fused
-
-        c = np.full(60, 7.0)
-        for w in (4, 8, 16):
-            fm, fi = pmp_fused(c, [w])[w]
-            mp = MatrixProfile(c, None, w).compute(MPOpts(algorithm="mpx"))
-            np.testing.assert_array_equal(fm, mp.mp)
-            np.testing.assert_array_equal(fi, mp.idx)
-
-    def test_zone_exceeds_profile(self):
-        # excl = w//4 > len_a: the faithful kernel's only batch returns
-        # None and the merge leaves (inf, MAXINT) — fused must match
-        from go_matrixprofile_spark.kernels.pmp import pmp_fused
-
-        a = np.arange(18, dtype=np.float64)
-        w = 16  # la = 3, excl = 4 > 3
-        fm, fi = pmp_fused(a, [w])[w]
-        mp = MatrixProfile(a, None, w).compute(MPOpts(algorithm="mpx"))
-        np.testing.assert_array_equal(fm, mp.mp)
-        np.testing.assert_array_equal(fi, mp.idx)
-
-    def test_large_mean_offset(self):
-        # ADVICE r3 (high): without global centering the Q - w*mu_i*mu_j
-        # subtraction catastrophically cancels at mean/std >> 1 (17% rel
-        # error at mean 1e6, total corruption at 1e9). Centering restores
-        # <=5e-9 agreement with the faithful df/dg kernel.
-        from go_matrixprofile_spark.kernels import siggen
-        from go_matrixprofile_spark.kernels.pmp import pmp_fused
-
-        n = 300
-        base = siggen.add(
-            siggen.sin(1.0, 4, 0, 0, 60, n / 60)[:n], siggen.noise(0.3, n, 11)
-        )
-        # at mean 1e6 the faithful kernel is still accurate: fused must
-        # agree with it to ~1e-6 (pre-fix error was 17% relative) with
-        # idx exact
-        fused = pmp_fused(base + 1e6, [8, 16, 24])
-        for w in (8, 16, 24):
-            mp = MatrixProfile(base + 1e6, None, w).compute(
-                MPOpts(algorithm="mpx")
-            )
-            fm, fi = fused[w]
-            np.testing.assert_allclose(fm, mp.mp, atol=1e-6, err_msg=f"w={w}")
-            np.testing.assert_array_equal(fi, mp.idx, err_msg=f"w={w}")
-        # at mean 1e9 the faithful kernel ITSELF cancels (~6e-5 err), so
-        # ground truth is the faithful kernel on the pre-centered series
-        # (z-normed Pearson is shift-invariant); the only remaining error
-        # is the ~2.4e-7 ulp of representing base+1e9 in float64
-        fused = pmp_fused(base + 1e9, [8, 16, 24])
-        for w in (8, 16, 24):
-            truth = MatrixProfile(base, None, w).compute(
-                MPOpts(algorithm="mpx")
-            )
-            fm, _ = fused[w]
-            np.testing.assert_allclose(
-                fm, truth.mp, atol=1e-4, err_msg=f"w={w}"
-            )
-
-    def test_remap_and_pearson_space(self):
-        from go_matrixprofile_spark.kernels import siggen
-        from go_matrixprofile_spark.kernels.pmp import pmp_fused
-
-        n = 120
-        a = siggen.add(
-            siggen.sin(1.0, 3, 0, 0, 40, n / 40)[:n], siggen.noise(0.2, n, 9)
-        )
-        for opts in (
-            MPOpts(algorithm="mpx", remap_neg_corr=True),
-            MPOpts(algorithm="mpx", euclidean=False),
-        ):
-            fused = pmp_fused(a, [8, 12], opts)
-            for w in (8, 12):
-                mp = MatrixProfile(a, None, w).compute(opts)
-                fm, fi = fused[w]
-                np.testing.assert_allclose(fm, mp.mp, atol=1e-9)
-                np.testing.assert_array_equal(fi, mp.idx)

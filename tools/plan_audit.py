@@ -132,30 +132,37 @@ def main() -> int:
     #    series count, at most one task per distinct series. Round-robin
     #    (random start per input partition) and hash exchanges both put
     #    2 series in one task whenever they collide.
-    from go_matrixprofile_spark.operators.profile import matrix_profile
+    from go_matrixprofile_spark.operators.profile import (
+        matrix_profile,
+        pan_matrix_profile_distributed,
+    )
     from go_matrixprofile_spark.operators.series import derive_series
     from go_matrixprofile_spark.sources.transcripts import transcripts_from_events
 
+    def range_placed(name, df, absent=()):
+        p = plan_of(df)
+        rng = r"rangepartitioning\(conv_id#\d+ ASC NULLS FIRST, metric#\d+ ASC NULLS FIRST, \d+\)"
+        results = [
+            ("rangepartitioning on conv_id, metric", re.search(rng, p) is not None),
+            ("contains 'REPARTITION_BY_NUM'", "REPARTITION_BY_NUM" in p),
+        ]
+        results += [(f"absent   '{m}'", m not in p) for m in ("RoundRobinPartitioning", *absent)]
+        results.append(("Arrow kernel", "MapInPandas" in p))
+        checks.append((name, p, results))
+
     t = transcripts_from_events(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    p = plan_of(matrix_profile(derive_series(t), w=8))
-    checks.append(
-        (
-            "matrix_profile: kernel stage range-placed on (conv_id, metric)",
-            p,
-            [
-                (
-                    "rangepartitioning on conv_id, metric",
-                    re.search(
-                        r"rangepartitioning\(conv_id#\d+ ASC NULLS FIRST, metric#\d+ ASC NULLS FIRST, \d+\)",
-                        p,
-                    )
-                    is not None,
-                ),
-                ("contains 'REPARTITION_BY_NUM'", "REPARTITION_BY_NUM" in p),
-                ("absent   'RoundRobinPartitioning'", "RoundRobinPartitioning" not in p),
-                ("Arrow kernel", "MapInPandas" in p),
-            ],
-        )
+    range_placed(
+        "matrix_profile: kernel stage range-placed on (conv_id, metric)",
+        matrix_profile(derive_series(t), w=8),
+    )
+
+    # 6b. pan-MP: the same whole-series placement — every window of a
+    #     series runs in the one kernel call that gets the series, so the
+    #     window list never becomes a join side.
+    range_placed(
+        "pan_matrix_profile_distributed: kernel stage range-placed on (conv_id, metric)",
+        pan_matrix_profile_distributed(derive_series(t), 6, 10),
+        absent=("BroadcastNestedLoopJoin", "CartesianProduct"),
     )
 
     # 7. chunked MP: tile join is a hash join on bounded keys; kernel
