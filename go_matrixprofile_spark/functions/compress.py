@@ -205,9 +205,3 @@ def decompress_values(buf: bytes) -> np.ndarray:
         prev = prev ^ xor
         out[i] = prev
     return out.view(np.float64)
-
-
-def compression_ratio(ts: np.ndarray, vals: np.ndarray) -> float:
-    raw = 16 * len(ts)
-    comp = len(compress_ts(ts)) + len(compress_values(vals))
-    return raw / comp if comp else 0.0

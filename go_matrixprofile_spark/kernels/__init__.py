@@ -15,7 +15,6 @@ from .util import (
     mu_invn,
     sum2s,
     binary_split,
-    diag_batching_scheme,
     p2e,
     e2p,
 )
@@ -33,7 +32,6 @@ __all__ = [
     "mu_invn",
     "sum2s",
     "binary_split",
-    "diag_batching_scheme",
     "p2e",
     "e2p",
     "cross_correlate",

@@ -30,8 +30,9 @@ def arc_curve(mp_idx: np.ndarray) -> np.ndarray:
     return np.cumsum(marks[:n])
 
 
-def iac(x: float, n: int) -> float:
-    """Ideal arc curve -(sqrt(2/n)(x-n/2))² + n/2 (iac, discover.go:41-43)."""
+def iac(x, n: int):
+    """Ideal arc curve -(sqrt(2/n)(x-n/2))² + n/2 at x, a position or an
+    array of them (iac, discover.go:41-43)."""
     return -((np.sqrt(2.0 / n) * (x - n / 2.0)) ** 2) + n / 2.0
 
 
@@ -42,8 +43,7 @@ def discover_segments_from_idx(mp_idx: np.ndarray) -> tuple[int, float, np.ndarr
     n = histo.size
     pos = np.arange(n, dtype=np.float64)
     with np.errstate(divide="ignore", invalid="ignore"):
-        ideal = -((np.sqrt(2.0 / n) * (pos - n / 2.0)) ** 2) + n / 2.0
-        cac = np.minimum(1.0, histo / ideal)
+        cac = np.minimum(1.0, histo / iac(pos, n))
     if n > 0:
         cac[0] = min(1.0, float(n))
         cac[-1] = min(1.0, float(n))

@@ -3,13 +3,12 @@
 NumPy reimplementation of the reference's MatrixProfile
 (matrixprofile.go in matrix-profile-foundation/go-matrixprofile), with
 the MPX hot loop compiled in C (see below). The
-reference parallelizes with goroutine batches merged over channels; here
-each batch is a vectorized NumPy pass and batches are folded
-sequentially in batch order, which reproduces the reference's
-merge-order tie semantics exactly (mergeMPResults,
-matrixprofile.go:607-661). Inside Spark this module
-runs per conv_id inside Arrow-batched pandas UDFs; 2-D tiles of one
-long series map to separate Spark tasks (see operators/profile.py).
+reference splits each join into goroutine batches merged over channels
+(mergeMPResults, matrixprofile.go:607-661); here each join is one
+vectorized pass, folded once into the result (_merge), which is the
+reference at one goroutine. Inside Spark this module runs per conv_id
+inside Arrow-batched pandas UDFs; 2-D tiles of one long series map to
+separate Spark tasks (see operators/profile.py).
 
 The MPX recurrence lives in ONE place, ``diag_sweep``: the self-join
 (mpxBatch), both AB-join passes (mpxabBatch / mpxbaBatch) and the
@@ -52,12 +51,10 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .av import create_av
 from .discover import discover_segments_from_idx
 from .mass import calculate_distance_profile, cross_correlate, distance_profile
 from .util import (
     apply_exclusion_zone,
-    diag_batching_scheme,
     e2p,
     mov_mean_std,
     mu_invn,
@@ -73,10 +70,12 @@ _MAXINT = np.iinfo(np.int64).max
 class MPOpts:
     """Options mirroring MPOpts (matrixprofile.go:350-370).
 
-    Defaults: MPX, sample 1.0, Euclidean. n_jobs defaults to 1 (each
-    Spark task is single-threaded; intra-series parallelism comes from
-    the SCAMP tiles of operators.profile.matrix_profile_chunked, each
-    its own task, not threads).
+    Defaults: MPX, sample 1.0, Euclidean. The reference's NJobs
+    (goroutine count) has no counterpart: each join runs as one pass
+    in one thread, and parallelism comes from Spark tasks, one per
+    series or per SCAMP tile of one long series
+    (operators.profile.matrix_profile_chunked; Zimmerman et al., SoCC
+    2019).
     ``seed`` is an extension: the reference's STAMP uses unseeded
     rand.Perm (matrixprofile.go:684), so its sampled output is
     irreproducible; we require a seed for determinism.
@@ -84,7 +83,6 @@ class MPOpts:
 
     algorithm: str = "mpx"
     sample_pct: float = 1.0
-    n_jobs: int = 1
     euclidean: bool = True
     remap_neg_corr: bool = False
     seed: int = 0
@@ -179,26 +177,18 @@ class MatrixProfile:
     def _alloc(self, length: int) -> tuple[np.ndarray, np.ndarray]:
         return np.full(length, np.inf), np.full(length, _MAXINT, dtype=np.int64)
 
-    def _merge(self, results, euclidean: bool, ba: bool = False) -> None:
-        """Fold batch partials in batch order (mergeMPResults, matrixprofile.go:607-661)."""
-        for res in results:
-            if res is None:
+    def _merge(self, bmp, bidx, bmpb=None, bidxb=None, euclidean: bool = True) -> None:
+        """Fold one partial into the result (mergeMPResults,
+        matrixprofile.go:607-661). A NaN cell never wins the compare, so
+        it comes out as the empty cell: distance inf (corr -inf) and idx
+        MAXINT."""
+        for part, pidx, mp, idx in ((bmp, bidx, self.mp, self.idx),
+                                    (bmpb, bidxb, self.mpb, self.idxb)):
+            if part is None:
                 continue
-            bmp, bidx, bmpb, bidxb = res
-            if bmp is not None:
-                if euclidean:
-                    m = bmp <= self.mp
-                else:
-                    m = np.abs(bmp) < np.abs(self.mp)
-                self.mp[m] = bmp[m]
-                self.idx[m] = bidx[m]
-            if bmpb is not None:
-                if euclidean:
-                    m = bmpb <= self.mpb
-                else:
-                    m = np.abs(bmpb) < np.abs(self.mpb)
-                self.mpb[m] = bmpb[m]
-                self.idxb[m] = bidxb[m]
+            m = part <= mp if euclidean else np.abs(part) < np.abs(mp)
+            mp[m] = part[m]
+            idx[m] = pidx[m]
 
     # STMP — naive O(n² log n) ordered join (matrixprofile.go:514-544)
     def _stmp(self) -> None:
@@ -223,33 +213,15 @@ class MatrixProfile:
         self._init_caches()
         n_prof = self.n - self.w + 1
         self.mp, self.idx = self._alloc(n_prof)
-        rng = np.random.default_rng(self.opts.seed)
-        rand_idx = rng.permutation(self.a.size - self.w + 1)
-        n_jobs = max(1, self.opts.n_jobs)
-        batch_size = (self.a.size - self.w + 1) // n_jobs + 1
-        results = [
-            self._stamp_batch(b, batch_size, self.opts.sample_pct, rand_idx)
-            for b in range(n_jobs)
-        ]
-        self._merge(results, euclidean=True)
-
-    def _stamp_batch(self, idx, batch_size, sample, rand_idx):
-        if idx * batch_size + self.w > self.a.size:
-            return None
-        n_prof = self.n - self.w + 1
-        mp, mpidx = self._alloc(n_prof)
-        for i in range(int(batch_size * sample)):
-            g = idx * batch_size + i
-            if g >= rand_idx.size:
-                break
-            row = int(rand_idx[g])
+        rows = self.a.size - self.w + 1
+        rand_idx = np.random.default_rng(self.opts.seed).permutation(rows)
+        for row in rand_idx[: int((rows + 1) * self.opts.sample_pct)]:
             prof = distance_profile(
-                self.a, self.b, self.w, row, self._b_std, self.self_join, self._bf
+                self.a, self.b, self.w, int(row), self._b_std, self.self_join, self._bf
             )
-            m = prof <= mp
-            mp[m] = prof[m]
-            mpidx[m] = row
-        return mp, mpidx, None, None
+            m = prof <= self.mp
+            self.mp[m] = prof[m]
+            self.idx[m] = row
 
     # STOMP — ordered O(n²) with incremental dot recurrence (matrixprofile.go:763-876)
     def _stomp(self) -> None:
@@ -259,26 +231,13 @@ class MatrixProfile:
         with a large mean."""
         a = _centered(self.a)
         b = a if self.self_join else _centered(self.b)
-        caches = (a, b, *mov_mean_std(a, self.w), *mov_mean_std(b, self.w), np.fft.rfft(b))
-        n_prof = self.n - self.w + 1
-        self.mp, self.idx = self._alloc(n_prof)
-        n_jobs = max(1, self.opts.n_jobs)
-        batch_size = (self.a.size - self.w + 1) // n_jobs + 1
-        results = [self._stomp_batch(i, batch_size, *caches) for i in range(n_jobs)]
-        self._merge(results, euclidean=True)
-
-    def _stomp_batch(self, idx, batch_size, a, b, a_mean, a_std, b_mean, b_std, bf):
         w = self.w
-        if idx * batch_size + w > a.size:
-            return None
-        start = idx * batch_size
         n, n_prof = self.n, self.n - w + 1
-        dot = cross_correlate(a[start : start + w], b, bf)
-        profile = calculate_distance_profile(
-            dot, start, w, a_mean, a_std, b_mean, b_std, self.self_join
-        )
-        mp = profile.copy()
-        mpidx = np.full(profile.size, start, dtype=np.int64)
+        (a_mean, a_std), (b_mean, b_std) = mov_mean_std(a, w), mov_mean_std(b, w)
+        self.mp, self.idx = self._alloc(n_prof)
+        dot = cross_correlate(a[:w], b, np.fft.rfft(b))
+        mp = calculate_distance_profile(dot, 0, w, a_mean, a_std, b_mean, b_std, self.self_join)
+        mpidx = np.zeros(mp.size, dtype=np.int64)
         # preallocated buffers for the O(1)-per-cell row recurrence
         # (dot[j] = dot[j-1] - B[j-1]·A[row-1] + B[j+w-1]·A[row+w-1],
         # matrixprofile.go:851-862) and the distance conversion
@@ -293,10 +252,7 @@ class MatrixProfile:
         wbs = float(w) * b_std
         two_w = 2.0 * float(w)
         zone = w // 2
-        for i in range(1, batch_size):
-            row = start + i
-            if row - 1 >= a.size or row + w - 1 >= a.size:
-                break
+        for row in range(1, a.size - w + 1):
             np.multiply(b_tail, a[row + w - 1], out=diff)
             np.multiply(b_head, a[row - 1], out=tb)
             diff -= tb
@@ -320,15 +276,14 @@ class MatrixProfile:
             if upd.size:
                 mp[upd] = t1[upd]
                 mpidx[upd] = row
-        return mp, mpidx, None, None
+        self._merge(mp, mpidx)
 
     # MPX — diagonal-traversal Pearson-space join (matrixprofile.go:878-1198)
     def _mpx(self) -> None:
-        """Every pass is diag_sweep over one diagonal batch; partials fold
-        in batch order (_merge), so n_jobs only changes the tie order the
-        way Go's goroutine batches do."""
+        """A self-join is one diag_sweep over every diagonal past the
+        exclusion zone; an AB join is two, one per side the diagonals
+        start on. Each sweep's partial folds into the result (_merge)."""
         w, opts = self.w, self.opts
-        n_jobs = max(1, opts.n_jobs)
         # Pearson space starts from the empty partial so that a cell with
         # no neighbor stays corr -inf (distance inf) through the |corr| merge
         alloc = self._alloc if opts.euclidean else _partial
@@ -344,14 +299,10 @@ class MatrixProfile:
             # cell precedes its x-side touch, Go's order (mpxBatch)
             excl = max(1, w // 4)
             seeds = _centered_seeds(self.a, self.a, xa[0], xa[0], w)
-            results = []
-            for start, size in diag_batching_scheme(len_a, n_jobs):
-                mp, idx = _partial(len_a)
-                d_lo, d_hi = start + excl, min(start + size + excl, len_a) - 1
-                diag_sweep(xa, xa, seeds[d_lo:], d_lo, d_hi, mp, idx, mp, idx,
-                           remap=opts.remap_neg_corr)
-                results.append((finish(mp), idx, None, None))
-            self._merge(results, opts.euclidean)
+            mp, idx = _partial(len_a)
+            diag_sweep(xa, xa, seeds[excl:], excl, len_a - 1, mp, idx, mp, idx,
+                       remap=opts.remap_neg_corr)
+            self._merge(finish(mp), idx, euclidean=opts.euclidean)
             return
 
         xb = _diff_streams(self.b, w)
@@ -365,15 +316,11 @@ class MatrixProfile:
             # accumulate serially like Go's c +=
             first = x[:w] - xs[0][0]
             ly = ys[0].size
-            results = []
-            for start, size in diag_batching_scheme(ly, n_jobs):
-                d_hi = min(start + size, ly) - 1
-                seeds = [np.dot(y[d : d + w] - ys[0][d], first) for d in range(start, d_hi + 1)]
-                px, py = _partial(xs[0].size), _partial(ly)
-                diag_sweep(xs, ys, seeds, start, d_hi, *px, *py, remap=opts.remap_neg_corr)
-                (mpa, ia), (mpb, ib) = (py, px) if ys is xa else (px, py)
-                results.append((finish(mpa), ia, finish(mpb), ib))
-            self._merge(results, opts.euclidean)
+            seeds = [np.dot(y[d : d + w] - ys[0][d], first) for d in range(ly)]
+            px, py = _partial(xs[0].size), _partial(ly)
+            diag_sweep(xs, ys, seeds, 0, ly - 1, *px, *py, remap=opts.remap_neg_corr)
+            (mpa, ia), (mpb, ib) = (py, px) if ys is xa else (px, py)
+            self._merge(finish(mpa), ia, finish(mpb), ib, opts.euclidean)
 
     # -------------------------------------------------------------- streaming
 
@@ -584,7 +531,6 @@ class MatrixProfile:
                 else {
                     "algorithm": self.opts.algorithm,
                     "sample_pct": self.opts.sample_pct,
-                    "n_jobs": self.opts.n_jobs,
                     "euclidean": self.opts.euclidean,
                     "remap_negative_correlation": self.opts.remap_neg_corr,
                 },
@@ -607,7 +553,6 @@ class MatrixProfile:
             mp.opts = MPOpts(
                 algorithm=o["algorithm"],
                 sample_pct=o["sample_pct"],
-                n_jobs=o["n_jobs"],
                 euclidean=o["euclidean"],
                 remap_neg_corr=o["remap_negative_correlation"],
             )

@@ -17,35 +17,6 @@ def sin(amp, freq, phase, offset, sample_rate, duration_sec) -> np.ndarray:
     return amp * np.sin(2.0 * np.pi * freq * i / sample_rate + phase) + offset
 
 
-def sawtooth(amp, freq, phase, offset, sample_rate, duration_sec) -> np.ndarray:
-    """-2A/π · atan(cot(π·f·i/fs)) + offset  (siggen/siggen.go:22-29)."""
-    n = int(sample_rate * duration_sec)
-    i = np.arange(n, dtype=np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out = -2.0 * amp / np.pi * np.arctan(1.0 / np.tan(i / sample_rate * np.pi * freq)) + offset
-    return out
-
-
-def square(amp, freq, phase, offset, sample_rate, duration_sec) -> np.ndarray:
-    """Sign of a sine, scaled (siggen/siggen.go:33-49)."""
-    n = int(sample_rate * duration_sec)
-    i = np.arange(n, dtype=np.float64)
-    val = np.sin(2.0 * np.pi * freq * i / sample_rate + phase)
-    return np.where(val > 0, amp, np.where(val < 0, -amp, 0.0)) + offset
-
-
-def rect(amp, offset, width, sample_rate, duration_sec) -> np.ndarray:
-    """Rectangular pulse (siggen/siggen.go:53-76)."""
-    n = int(sample_rate * duration_sec)
-    out = np.zeros(n)
-    start = int((offset - width / 2.0) / sample_rate)
-    end = int((offset + width / 2.0) / sample_rate)
-    start = min(max(start, 0), n - 1)
-    end = min(max(end, 0), n - 1)
-    out[start:end] = amp
-    return out
-
-
 def line(slope, offset, n: int) -> np.ndarray:
     """slope·i + offset  (siggen/siggen.go:79-85)."""
     return slope * np.arange(n, dtype=np.float64) + offset

@@ -129,32 +129,6 @@ def binary_split(lb: int, ub: int) -> list[int]:
     return res
 
 
-def diag_batching_scheme(l: int, p: int) -> list[tuple[int, int]]:
-    """Balance p batches over a triangular diagonal workload.
-
-    util/util.go:244-262. Returns [(start_idx, size), ...]; batch i gets
-    ~l(l+1)/2p matrix cells. Later batches cover more diagonals because
-    later diagonals are shorter. Golden fixture: (33,4) ->
-    [(0,3),(3,6),(9,7),(16,18)] (util/util_test.go:167-192).
-    """
-    num_elem = float(l * (l + 1)) / float(2 * p)
-    sizes = [0] * p
-    pi = 0
-    acc = 0
-    for i in range(l + 1):
-        acc += i
-        sizes[p - pi - 1] += 1
-        if float(acc) > num_elem:
-            acc = 0
-            pi += 1
-    batches = []
-    idx = 0
-    for i in range(p):
-        batches.append((idx, sizes[i]))
-        idx += sizes[i]
-    return batches
-
-
 def p2e(mp: np.ndarray, w: int) -> np.ndarray:
     """Pearson → z-normalized Euclidean, capping rho at 1.  util/util.go:266-274."""
     capped = np.minimum(mp, 1.0)

@@ -125,55 +125,3 @@ def train_bpe_distributed(
             vocab = vocab.localCheckpoint(eager=True)
     return merges
 
-
-# ------------------------------------------------------------- vocab artifact
-
-_MERGES_VERSION = 1
-
-
-def save_merges(merges: list[tuple[str, str]], path: str) -> None:
-    """Persist an ordered merges table as a JSON artifact.
-
-    Mirrors the reference's persistence surface (JSON whole-object
-    snapshots, matrixprofile.go:159-201): train once with
-    ``train_bpe_distributed``, save, and every later job applies the
-    identical replace chain from the artifact without re-scanning the
-    corpus. The merges list is a DRIVER-side parameter by nature — it
-    parameterizes the JVM replace chain built on the driver
-    (operators/text.token_counts_bpe) — so the artifact is plain
-    driver IO, not a DataFrame write; at ≤ a few thousand rows it is
-    bytes, not data.
-    """
-    import json
-
-    for x, y in merges:
-        if not x or not y:
-            raise ValueError("merges entries must be non-empty symbol pairs")
-    doc = {
-        "version": _MERGES_VERSION,
-        "n_merges": len(merges),
-        "pretokenizer": "wordish-lower-v1",
-        "merges": [[x, y] for x, y in merges],
-    }
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(doc, f, indent=1)
-
-
-def load_merges(path: str) -> list[tuple[str, str]]:
-    """Load a ``save_merges`` artifact back into the ordered
-    ``[(x, y), ...]`` list consumed by ``token_counts_bpe(documents,
-    merges=...)`` and ``functions.bpe.apply_bpe``. Raises on unknown
-    artifact versions rather than silently mis-tokenizing."""
-    import json
-
-    with open(path, "r", encoding="utf-8") as f:
-        doc = json.load(f)
-    if doc.get("version") != _MERGES_VERSION:
-        raise ValueError(
-            f"unsupported merges artifact version {doc.get('version')!r} "
-            f"(expected {_MERGES_VERSION})"
-        )
-    merges = [(x, y) for x, y in doc["merges"]]
-    if len(merges) != doc.get("n_merges", len(merges)):
-        raise ValueError("merges artifact is corrupt: n_merges mismatch")
-    return merges

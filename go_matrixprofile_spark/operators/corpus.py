@@ -122,124 +122,6 @@ def split_documents(
     )
 
 
-def split_documents_text(
-    documents: DataFrame,
-    budget: int = 2048,
-    counts: DataFrame | None = None,
-    fill_target: float = 0.9,
-    max_passes: int = 4,
-) -> DataFrame:
-    """Materialize the actual text chunks for oversized documents:
-    (doc_id, chunk_idx, chunk_text) such that EVERY chunk re-tokenizes
-    to <= budget BPE tokens and the chunks concatenate back to the
-    exact original text — the text-level companion of
-    ``split_documents`` (which does the token accounting for packing).
-
-    Character boundaries only approximate token boundaries, so one
-    char-proportional cut cannot hard-guarantee the budget (token
-    density varies inside a document). The operator therefore iterates:
-    split char-proportionally at ceil(n/(budget·fill_target)) pieces,
-    RE-TOKENIZE every chunk with the same JVM replace chain, and
-    re-split only the violators — terminating, at the final pass, with
-    plain budget-CHAR windows, which are compliant by construction
-    (every BPE token consumes at least one character, so a chunk of
-    <= budget chars has <= budget tokens). Every pass's recount is one
-    shuffle-free projection + one (doc_id, offset) join; violators are
-    a vanishing fraction after pass 1, and the per-pass driver check is
-    a limit(1).count() scalar. Chunk offsets are preserved through the
-    loop so the final chunk_idx renumbering keeps document order and
-    exact reassembly.
-
-    counts: a (doc_id, n_bpe_tokens) DataFrame — defaults to
-    ``token_counts_bpe(documents)``.
-    """
-    from pyspark.sql.window import Window
-
-    from .text import token_counts_bpe
-
-    if budget <= 0:
-        raise ValueError("budget must be positive")
-    if not 0.0 < fill_target <= 1.0:
-        raise ValueError("fill_target must be in (0, 1]")
-    if counts is None:
-        counts = token_counts_bpe(documents).select("doc_id", "n_bpe_tokens")
-    eff = max(int(budget * fill_target), 1)
-
-    def csplit(df: DataFrame, by_chars: bool = False) -> DataFrame:
-        """(doc_id, off, txt, n_tok) -> char-proportional pieces keyed
-        by absolute char offset; by_chars splits into budget-char
-        windows instead (the guaranteed-compliant fallback)."""
-        ln = F.length("txt").cast("long")
-        if by_chars:
-            k = F.greatest(F.floor((ln + budget - 1) / budget), F.lit(1))
-        else:
-            n = F.col("n_tok").cast("long")
-            k = F.greatest(F.floor((n + eff - 1) / eff), F.lit(1))
-        staged = df.select(
-            "doc_id",
-            "off",
-            "txt",
-            ln.alias("_l"),
-            k.alias("_k"),
-            F.explode(F.sequence(F.lit(0), (k - 1).cast("int"))).alias("_i"),
-        )
-        s = (F.col("_i").cast("long") * F.col("_l") / F.col("_k")).cast("long")
-        e = ((F.col("_i") + 1).cast("long") * F.col("_l") / F.col("_k")).cast(
-            "long"
-        )
-        return staged.select(
-            "doc_id",
-            (F.col("off") + s).alias("off"),
-            F.col("txt")
-            .substr((s + 1).cast("int"), (e - s).cast("int"))
-            .alias("txt"),
-        )
-
-    def recount(chunks: DataFrame) -> DataFrame:
-        """Attach the chunk's own BPE token count (same replace chain,
-        keyed by (doc_id, off) carried through a struct id)."""
-        tmp = chunks.select(
-            F.struct("doc_id", "off").alias("doc_id"),
-            F.col("txt").alias("text"),
-        )
-        c = token_counts_bpe(tmp).select(
-            F.col("doc_id.doc_id").alias("doc_id"),
-            F.col("doc_id.off").alias("off"),
-            F.col("n_bpe_tokens").alias("n_tok"),
-        )
-        return chunks.join(c, ["doc_id", "off"])
-
-    base = (
-        documents.select("doc_id", "text")
-        .join(counts, "doc_id")
-        .select(
-            "doc_id",
-            F.lit(0).cast("long").alias("off"),
-            F.col("text").alias("txt"),
-            F.col("n_bpe_tokens").alias("n_tok"),
-        )
-    )
-    chunks = csplit(base)
-    for p in range(max_passes):
-        counted = recount(chunks)
-        violators = counted.where(F.col("n_tok") > budget)
-        if violators.limit(1).count() == 0:
-            break
-        keep = counted.where(F.col("n_tok") <= budget).select(
-            "doc_id", "off", "txt"
-        )
-        # last pass: budget-char windows — compliant by construction
-        resplit = csplit(violators, by_chars=(p == max_passes - 1))
-        chunks = keep.unionByName(resplit)
-    w = Window.partitionBy("doc_id").orderBy("off")
-    return chunks.select(
-        "doc_id",
-        (F.row_number().over(w) - 1).alias("chunk_idx"),
-        F.col("txt").alias("chunk_text"),
-        "off",
-    )
-
-
 PACK_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

@@ -26,8 +26,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-
 METRIC_TEXT_LEN = "text_len"
 METRIC_LATENCY = "inter_turn_latency_s"
 METRIC_TURN_RATE = "turn_rate"

@@ -91,32 +91,6 @@ def knn_brute_cosine(
     )
 
 
-def lsh_signatures(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
-    """Random-hyperplane sign signature per vector.
-
-    Plane p's component for dimension d is md5-derived ±1 — the same
-    construction is written in the oracle SQL, so signatures are
-    engine-portable without shipping plane matrices. The plane matrix
-    is constant, so it is evaluated ONCE in Python at plan-build time
-    and embedded as literal arrays (_plane_components) instead of
-    re-deriving dim×n_planes md5 values per row; the input is spread
-    to cluster parallelism first (no-op for well-split sources).
-    """
-    dim = _embedding_dim(embeddings)
-    e = F.col("embedding")
-    sig = None
-    for p in range(n_planes):
-        comp = F.lit(_plane_components(p, dim))
-        dot = F.aggregate(
-            F.zip_with(e, comp, lambda x, c: x.cast("double") * c),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(dot > 0, F.lit(1)).otherwise(F.lit(0)) * (2**p)
-        sig = bit if sig is None else sig + bit
-    return spread_input(embeddings).select("vec_id", sig.cast("int").alias("bucket"))
-
-
 def lsh_band_buckets(
     embeddings: DataFrame, n_tables: int = 4, band_size: int = 4
 ) -> DataFrame:
@@ -125,9 +99,10 @@ def lsh_band_buckets(
     Table t owns planes [t*band_size, (t+1)*band_size); its bucket is
     the band's sign-bit signature. Multi-table = recall (a near pair
     only needs to agree on ONE full band); band_size = block size
-    control (2^band_size buckets per table). Global plane index p uses
-    the same md5("p_d") ±1 construction as lsh_signatures, so the SQL
-    oracle shares one plane definition.
+    control (2^band_size buckets per table). Plane p's component for
+    dimension d is md5("p_d")-derived ±1 (_plane_components), the same
+    construction the SQL oracle writes, so buckets are engine-portable
+    without shipping plane matrices.
 
     At corpus scale this replaces single-table bucketing whose
     2^n_planes buckets produce quadratic per-bucket blocks; here each
@@ -247,7 +222,6 @@ def _lloyd_mean_update(
 def ivf_assign(
     embeddings: DataFrame,
     n_centroids: int = 16,
-    centroids: DataFrame | None = None,
     refine: int = 0,
     centroid_round: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -267,11 +241,6 @@ def ivf_assign(
     Returns (centroids, assignments) where assignments = (vec_id,
     centroid_id): one broadcast join + per-row argmax over n_centroids
     cosines, all JVM built-ins.
-
-    centroids: a precomputed (centroid_id, ce) table — e.g. from
-    ``load_ann_index`` — to assign against a SAVED quantizer instead
-    of re-deriving one (train once, serve forever); ``refine`` is
-    ignored when given.
     """
     from pyspark.sql.window import Window
 
@@ -280,16 +249,15 @@ def ivf_assign(
     embeddings = spread_input(embeddings)
 
     def assign_to(cents_df: DataFrame) -> DataFrame:
-        # dim guard: wrong-dimension centroids (e.g. a stale artifact)
-        # would null-pad every cosine into NULL and rank garbage
+        # dim guard: a centroid of another length (a ragged embedding
+        # column) would null-pad every cosine into NULL and rank garbage
         sim = F.when(
             F.size("embedding") == F.size("ce"),
             F.round(_cosine(F.col("embedding"), F.col("ce")), 6),
         ).otherwise(
             F.assert_true(
                 F.lit(False),
-                "centroid dimension != embedding dimension "
-                "(artifact from a different embedding space?)",
+                "centroid dimension != embedding dimension",
             ).cast("double")
         )
         scored = embeddings.crossJoin(F.broadcast(cents_df)).select(
@@ -304,8 +272,6 @@ def ivf_assign(
             .select("vec_id", "centroid_id")
         )
 
-    if centroids is not None:
-        return centroids, assign_to(centroids)
     cents = embeddings.where(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("ce")
     )
@@ -323,7 +289,6 @@ def knn_ivf_cosine(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    centroids: DataFrame | None = None,
     refine: int = 0,
     centroid_round: int | None = None,
 ) -> DataFrame:
@@ -334,8 +299,7 @@ def knn_ivf_cosine(
     from pyspark.sql.window import Window
 
     cents, assigns = ivf_assign(
-        embeddings, n_centroids, centroids=centroids,
-        refine=refine, centroid_round=centroid_round,
+        embeddings, n_centroids, refine=refine, centroid_round=centroid_round
     )
     q_emb = embeddings.where(F.col("vec_id") < n_queries)
     # query → its n_probe closest centroids
@@ -448,7 +412,6 @@ def pq_codes(
     dim: int = 64,
     refine: int = 0,
     centroid_round: int | None = None,
-    codebooks: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization codebooks + codes (deterministic).
 
@@ -496,26 +459,6 @@ def pq_codes(
     sv = embeddings.select("vec_id", subs).select(
         "vec_id", "e.sub", F.col("e.v").alias("xe")
     )
-    if codebooks is not None:
-        # serve from a SAVED quantizer (load_ann_index): assign codes
-        # against the given (sub, code, ce) table, no seed/refine.
-        # Shape guard: a codebook trained with different (dim, m_sub)
-        # would zip_with-null-pad every distance into NULL and return
-        # plausible garbage — fail loudly instead
-        checked = codebooks.select(
-            "sub",
-            "code",
-            F.when(F.size("ce") == sub_len, F.col("ce"))
-            .otherwise(
-                F.assert_true(
-                    F.lit(False),
-                    f"codebook entry length != dim/m_sub = {sub_len} "
-                    "(artifact trained with different dim/m_sub?)",
-                ).cast("array<double>")
-            )
-            .alias("ce"),
-        )
-        return checked, _pq_assign(sv, checked)
     if refine > 0:
         # materialize the subvector explode ONCE: each Lloyd iteration
         # re-reads sv (assignment) and chains joins on the previous cb —
@@ -545,7 +488,6 @@ def knn_pq_adc(
     dim: int = 64,
     refine: int = 0,
     centroid_round: int | None = None,
-    codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """PQ ANN via asymmetric distance computation: approximate
     ||q - x||^2 = sum over subvectors of ||q_s - codebook[code_s(x)]||^2.
@@ -562,10 +504,7 @@ def knn_pq_adc(
     sub_len = dim // m_sub
     from pyspark.sql.window import Window
 
-    cb, codes = pq_codes(
-        embeddings, m_sub, k_codes, dim, refine, centroid_round,
-        codebooks=codebooks,
-    )
+    cb, codes = pq_codes(embeddings, m_sub, k_codes, dim, refine, centroid_round)
     q_subs = (
         embeddings.where(F.col("vec_id") < n_queries)
         .select(
@@ -601,90 +540,3 @@ def knn_pq_adc(
         .select("qid", "rank", "nid", "dist")
     )
 
-
-_ANN_INDEX_VERSION = "ann-index-v1"
-
-
-def save_ann_index(
-    path: str,
-    centroids: DataFrame | None = None,
-    codebooks: DataFrame | None = None,
-) -> None:
-    """Persist the trained ANN quantizers as a JSON artifact (train
-    once, serve forever — the same persistence surface as the BPE
-    merges artifact, operators/bpe_train.save_merges).
-
-    centroids: an ``ivf_assign`` (centroid_id, ce) table; codebooks: a
-    ``pq_codes`` (sub, code, ce) table. Either may be omitted. Both
-    are PARAMETER tables (tens to thousands of rows — they broadcast
-    in every serving plan), so the artifact is driver bytes, not data:
-    each table folds to ONE driver row via collect_list before the
-    write, never a row-by-row collect of corpus data.
-    """
-    import json
-
-    doc: dict = {"version": _ANN_INDEX_VERSION, "shapes": {}}
-    if centroids is not None:
-        row = centroids.agg(
-            F.array_sort(
-                F.collect_list(F.struct("centroid_id", "ce"))
-            ).alias("a")
-        ).first()
-        doc["centroids"] = [
-            {"centroid_id": r["centroid_id"], "ce": [float(x) for x in r["ce"]]}
-            for r in (row["a"] or [])
-        ]
-        if doc["centroids"]:
-            doc["shapes"]["n_centroids"] = len(doc["centroids"])
-            doc["shapes"]["dim"] = len(doc["centroids"][0]["ce"])
-    if codebooks is not None:
-        row = codebooks.agg(
-            F.array_sort(F.collect_list(F.struct("sub", "code", "ce"))).alias("a")
-        ).first()
-        doc["codebooks"] = [
-            {"sub": r["sub"], "code": r["code"], "ce": [float(x) for x in r["ce"]]}
-            for r in (row["a"] or [])
-        ]
-        if doc["codebooks"]:
-            subs = {r["sub"] for r in doc["codebooks"]}
-            doc["shapes"]["m_sub"] = len(subs)
-            doc["shapes"]["sub_len"] = len(doc["codebooks"][0]["ce"])
-            doc["shapes"]["k_codes"] = sum(
-                1 for r in doc["codebooks"] if r["sub"] == min(subs)
-            )
-    if "centroids" not in doc and "codebooks" not in doc:
-        raise ValueError("nothing to save: pass centroids and/or codebooks")
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(doc, f)
-
-
-def load_ann_index(
-    spark, path: str
-) -> tuple[DataFrame | None, DataFrame | None]:
-    """Load a ``save_ann_index`` artifact back as (centroids,
-    codebooks) DataFrames (None for an absent table) — feed them to
-    ``knn_ivf_cosine(centroids=...)`` / ``knn_pq_adc(codebooks=...)``
-    to serve against the saved quantizers without retraining. Raises
-    on unknown artifact versions rather than silently mis-indexing."""
-    import json
-
-    with open(path, "r", encoding="utf-8") as f:
-        doc = json.load(f)
-    if doc.get("version") != _ANN_INDEX_VERSION:
-        raise ValueError(
-            f"unsupported ann-index artifact version {doc.get('version')!r} "
-            f"(expected {_ANN_INDEX_VERSION})"
-        )
-    cents = None
-    if "centroids" in doc:
-        cents = spark.createDataFrame(
-            [(r["centroid_id"], [float(x) for x in r["ce"]]) for r in doc["centroids"]],
-            "centroid_id long, ce array<double>",
-        )
-    cb = None
-    if "codebooks" in doc:
-        cb = spark.createDataFrame(
-            [(r["sub"], r["code"], [float(x) for x in r["ce"]]) for r in doc["codebooks"]],
-            "sub int, code long, ce array<double>",
-        )
-    return cents, cb

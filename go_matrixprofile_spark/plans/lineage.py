@@ -21,8 +21,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-LINEAGE_COLS = ["stage", "partition_key", "row_count", "wall_ms", "input_version"]
-
 
 def _lineage_path(root: str) -> str:
     return os.path.join(root, "_lineage")

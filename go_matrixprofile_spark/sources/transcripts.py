@@ -47,16 +47,3 @@ def transcripts_from_events(events: DataFrame) -> DataFrame:
         "ts",
     )
 
-
-# The same derivation as an ANSI-SQL CTE for the DuckDB oracle.
-TRANSCRIPTS_SQL_CTE = """
-transcripts AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         event_type AS role,
-         props AS text,
-         CAST(NULL AS VARCHAR) AS tool,
-         ts
-  FROM events
-)
-"""

@@ -1,2 +1,2 @@
-"""Streaming ingestion: incremental-batch (reference Update semantics)
-and Structured Streaming (file source → tier rollup) variants."""
+"""Streaming ingestion: incremental-batch recompute with the
+reference's Update semantics."""

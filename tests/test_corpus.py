@@ -119,48 +119,6 @@ class TestPackSequences:
         keys = list(zip(d7["seq_id"], d7["seq_offset"]))
         assert keys == sorted(keys)
 
-    def test_split_documents_text_materializes_chunks(self, spark):
-        """Text-level splitting: chunks concatenate back to the exact
-        original text, chunk count follows the token arithmetic, and a
-        re-tokenization of every individual chunk stays within the
-        budget (the fill_target margin absorbs density variation)."""
-        from go_matrixprofile_spark.functions.bpe import count_tokens
-        from go_matrixprofile_spark.operators.corpus import split_documents_text
-
-        rng = np.random.default_rng(47)
-        words = ["the", "running", "engineers", "data", "a1!", "systems",
-                 "understanding", "12", "again", "watch"]
-        texts = [
-            " ".join(rng.choice(words, size=int(rng.integers(1, 400))))
-            for _ in range(40)
-        ]
-        docs = spark.createDataFrame(
-            pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-        )
-        budget = 64
-        got = (
-            split_documents_text(docs, budget=budget)
-            .orderBy("doc_id", "chunk_idx")
-            .toPandas()
-        )
-        joined = got.groupby("doc_id")["chunk_text"].apply("".join)
-        eff = int(budget * 0.9)
-        for i, t in enumerate(texts):
-            assert joined[i] == t, i
-            n = count_tokens(t)
-            k = (got["doc_id"] == i).sum()
-            # in-budget docs stay whole; chunk count never falls below
-            # the token arithmetic's lower bound
-            if n <= eff:
-                assert k == 1, (i, n, k)
-            assert k >= max(-(-n // budget), 1), (i, n, k)
-        # HARD guarantee: every chunk re-tokenizes within the budget
-        # (iterative re-split with a budget-char-window final fallback)
-        for r in got.itertuples():
-            assert count_tokens(r.chunk_text) <= budget, (
-                r.doc_id, r.chunk_idx, count_tokens(r.chunk_text)
-            )
-
     def test_composes_with_build_corpus(self, spark):
         from go_matrixprofile_spark.operators.corpus import (
             build_corpus,

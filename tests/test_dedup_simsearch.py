@@ -563,92 +563,16 @@ class TestPQRefine:
         assert "LogicalRDD" in plan or "Scan ExistingRDD" in plan, plan[:500]
 
 
-class TestAnnIndexArtifact:
-    def test_save_load_serve_roundtrip(self, spark, tmp_path):
-        """Train-once-serve-forever: the saved IVF centroids + PQ
-        codebooks reload into DataFrames that reproduce the EXACT
-        knn results of the freshly-trained quantizers; unknown
-        artifact versions are refused."""
-        import json
-
-        import numpy as np
-        import pandas as pd
-
-        from go_matrixprofile_spark.operators.simsearch import (
-            ivf_assign,
-            knn_ivf_cosine,
-            knn_pq_adc,
-            load_ann_index,
-            pq_codes,
-            save_ann_index,
-        )
-
-        rng = np.random.default_rng(3)
-        emb = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "vec_id": range(120),
-                    "embedding": [rng.normal(0, 1, 64).tolist() for _ in range(120)],
-                }
-            )
-        )
-        cents, _ = ivf_assign(emb, n_centroids=8)
-        cb, _ = pq_codes(emb, m_sub=4, k_codes=8, dim=64, refine=1,
-                         centroid_round=6)
-        path = str(tmp_path / "ann.json")
-        save_ann_index(path, centroids=cents, codebooks=cb)
-
-        lc, lcb = load_ann_index(spark, path)
-        fresh_ivf = knn_ivf_cosine(emb, n_queries=4, k=3, n_centroids=8).toPandas()
-        served_ivf = knn_ivf_cosine(
-            emb, n_queries=4, k=3, centroids=lc
-        ).toPandas()
-        key = ["qid", "rank"]
-        pd.testing.assert_frame_equal(
-            fresh_ivf.sort_values(key).reset_index(drop=True),
-            served_ivf.sort_values(key).reset_index(drop=True),
-            check_dtype=False,
-        )
-        # served PQ (loaded refined codebooks, no retraining) == fresh
-        # refined PQ: the refine step is skipped entirely at serve time
-        fresh_pq = knn_pq_adc(
-            emb, n_queries=4, k=3, m_sub=4, k_codes=8, refine=1,
-            centroid_round=6,
-        ).toPandas()
-        served_pq = knn_pq_adc(
-            emb, n_queries=4, k=3, m_sub=4, k_codes=8, codebooks=lcb
-        ).toPandas()
-        pd.testing.assert_frame_equal(
-            fresh_pq.sort_values(key).reset_index(drop=True),
-            served_pq.sort_values(key).reset_index(drop=True),
-            check_dtype=False,
-        )
-        # version gate
-        doc = json.load(open(path))
-        doc["version"] = "ann-index-v999"
-        bad = str(tmp_path / "bad.json")
-        json.dump(doc, open(bad, "w"))
-        with pytest.raises(ValueError, match="version"):
-            load_ann_index(spark, bad)
-        with pytest.raises(ValueError, match="nothing to save"):
-            save_ann_index(str(tmp_path / "empty.json"))
-
-
 class TestIvfRefine:
-    def test_lloyd_refinement_recovers_clusters(self, spark, tmp_path):
+    def test_lloyd_refinement_recovers_clusters(self, spark):
         """Spherical k-means on the IVF centroids: refined assignments
-        recover planted clusters the first-N seed centroids mix up,
+        recover planted clusters the first-N seed centroids mix up, and
         the mean best-cosine objective is non-decreasing in refine
-        depth, and saved refined centroids serve identically."""
+        depth."""
         import numpy as np
         import pandas as pd
 
-        from go_matrixprofile_spark.operators.simsearch import (
-            ivf_assign,
-            knn_ivf_cosine,
-            load_ann_index,
-            save_ann_index,
-        )
+        from go_matrixprofile_spark.operators.simsearch import ivf_assign
 
         rng = np.random.default_rng(17)
         # 3 well-separated direction clusters, 40 vectors each,
@@ -691,76 +615,4 @@ class TestIvfRefine:
         assert (purity == 1).all()
         assert a3.groupby("truth")["centroid_id"].nunique().eq(1).all()
 
-        # artifact roundtrip of REFINED centroids serves identically
-        cents, _ = ivf_assign(emb, n_centroids=3, refine=3, centroid_round=6)
-        path = str(tmp_path / "ivf.json")
-        save_ann_index(path, centroids=cents)
-        lc, _ = load_ann_index(spark, path)
-        fresh = knn_ivf_cosine(
-            emb, n_queries=3, k=4, n_centroids=3, n_probe=1, refine=3,
-            centroid_round=6,
-        ).toPandas()
-        served = knn_ivf_cosine(
-            emb, n_queries=3, k=4, n_probe=1, centroids=lc
-        ).toPandas()
-        key = ["qid", "rank"]
-        pd.testing.assert_frame_equal(
-            fresh.sort_values(key).reset_index(drop=True),
-            served.sort_values(key).reset_index(drop=True),
-            check_dtype=False,
-        )
 
-
-class TestAnnShapeGuards:
-    def test_mismatched_artifact_fails_loudly(self, spark, tmp_path):
-        """Serving a saved quantizer with mismatched shape parameters
-        raises instead of ranking all-NULL distances into plausible
-        garbage (dim guard for IVF centroids, sub_len guard for PQ
-        codebooks); the artifact records its shapes."""
-        import json
-
-        import numpy as np
-        import pandas as pd
-        import pytest as _pytest
-
-        from go_matrixprofile_spark.operators.simsearch import (
-            ivf_assign,
-            knn_ivf_cosine,
-            knn_pq_adc,
-            load_ann_index,
-            pq_codes,
-            save_ann_index,
-        )
-
-        rng = np.random.default_rng(5)
-        emb64 = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "vec_id": range(40),
-                    "embedding": [rng.normal(0, 1, 64).tolist() for _ in range(40)],
-                }
-            )
-        )
-        cents, _ = ivf_assign(emb64, n_centroids=4)
-        cb, _ = pq_codes(emb64, m_sub=8, k_codes=8, dim=64)
-        path = str(tmp_path / "ann.json")
-        save_ann_index(path, centroids=cents, codebooks=cb)
-        shapes = json.load(open(path))["shapes"]
-        assert shapes == {
-            "n_centroids": 4, "dim": 64, "m_sub": 8, "sub_len": 8, "k_codes": 8,
-        }
-        lc, lcb = load_ann_index(spark, path)
-        # wrong m_sub at serve time (trained 8, served 4 -> sub_len 16 != 8)
-        with _pytest.raises(Exception, match="dim/m_sub|assert"):
-            knn_pq_adc(emb64, n_queries=2, k=2, m_sub=4, codebooks=lcb).count()
-        # wrong embedding dim vs saved centroids
-        emb32 = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "vec_id": range(40),
-                    "embedding": [rng.normal(0, 1, 32).tolist() for _ in range(40)],
-                }
-            )
-        )
-        with _pytest.raises(Exception, match="dimension|assert"):
-            knn_ivf_cosine(emb32, n_queries=2, k=2, centroids=lc).count()

@@ -17,7 +17,8 @@ import pytest
 from go_matrixprofile_spark.kernels import matrix_profile as mpm
 from go_matrixprofile_spark.kernels import MatrixProfile, MPOpts, compute_mp, mpdist
 from go_matrixprofile_spark.kernels.mass import cross_correlate, distance_profile, mass
-from go_matrixprofile_spark.kernels.util import mov_mean_std
+from go_matrixprofile_spark.kernels.matrix_profile import mpx_tile_partial
+from go_matrixprofile_spark.kernels.util import mov_mean_std, p2e
 
 SIG = np.array([0.0, 0.99, 1.0, 0.0, 0.0, 0.98, 1.0, 0.0, 0.0, 0.96, 1.0, 0.0])
 WANT_MP = np.array(
@@ -127,24 +128,75 @@ class TestDistanceProfile:
             distance_profile(t, t, 4, 9, b_std, self_join=True)
 
 
-@pytest.mark.parametrize("algo", ["stmp", "stamp", "stomp", "mpx"])
-@pytest.mark.parametrize("n_jobs", [1, 2, 4, 100])
+def _tiled_mpx(x, w, k, remap_neg_corr=False):
+    """Self-join MPX split into SCAMP tiles, k per side, and merged like
+    operators.profile.matrix_profile_chunked: max corr, then the
+    earliest global diagonal, then the lower idx."""
+    la = x.size - w + 1
+    t = max(-(-la // k), w)
+    best = [(-np.inf, -np.inf, -np.inf)] * la
+    for r0 in range(0, la, t):
+        for c0 in range(r0, la, t):
+            mpr, idr, mpc, idc = mpx_tile_partial(
+                x[r0 : r0 + t + w - 1], x[c0 : c0 + t + w - 1],
+                r0, c0, min(t, la - r0), min(t, la - c0), w, remap_neg_corr,
+            )
+            sides = [(r0, mpr, idr)] + ([(c0, mpc, idc)] if r0 != c0 else [])
+            for o, corr, idx in sides:
+                for i, (c, j) in enumerate(zip(corr, idx), start=o):
+                    best[i] = max(best[i], (c, -abs(int(j) - i), -int(j)))
+    corr = np.array([b[0] for b in best])
+    return p2e(corr, w), np.array([-b[2] for b in best], dtype=np.int64)
+
+
+@pytest.mark.parametrize(
+    "k,algo",
+    [(1, "stmp"), (1, "stamp"), (1, "stomp"), (1, "mpx"), (2, "mpx"), (4, "mpx"), (100, "mpx")],
+)
 class TestCanonicalFixture:
     """matrixprofile_test.go:404-704 — identical MP/Idx for every
-    algorithm and for n_jobs ∈ {1,2,4,100} (parallelism invariance)."""
+    algorithm and at every parallelism (the reference's n_jobs ∈
+    {1,2,4,100}). Here STMP, STAMP and STOMP run as one task; MPX also
+    splits into k SCAMP tiles per side, one Spark task each."""
 
-    def test_canonical(self, algo, n_jobs):
+    def test_canonical(self, k, algo):
         tol = 1e-4 if algo == "mpx" else 1e-7
-        mp = compute_mp(SIG, None, 4, MPOpts(algorithm=algo, n_jobs=n_jobs))
-        np.testing.assert_allclose(mp.mp, WANT_MP, atol=tol)
-        np.testing.assert_array_equal(mp.idx, WANT_IDX)
+        if k == 1:
+            m = compute_mp(SIG, None, 4, MPOpts(algorithm=algo))
+            mp, idx = m.mp, m.idx
+        else:
+            mp, idx = _tiled_mpx(SIG, 4, k)
+        np.testing.assert_allclose(mp, WANT_MP, atol=tol)
+        np.testing.assert_array_equal(idx, WANT_IDX)
 
 
 class TestStompConstantSeries:
     # matrixprofile_test.go:548-549: constant series → all +Inf (or NaN) profile
     def test_constant(self):
+        """Pins the exact non-finite output. Every distance is NaN (0/0),
+        and a NaN cell of the partial folds into the result as inf with
+        idx MAXINT. Cells 0 and 1 sit in row 0's exclusion zone, so they
+        hold inf from the start and take the last row whose zone covers
+        them (inf <= inf)."""
         mp = compute_mp(np.ones(16), None, 4, MPOpts(algorithm="stomp"))
-        assert not np.isfinite(mp.mp).any()
+        maxint = np.iinfo(np.int64).max
+        np.testing.assert_array_equal(mp.mp, np.full(13, np.inf))
+        np.testing.assert_array_equal(mp.idx, [2, 3] + [maxint] * 11)
+
+
+class TestMpxNanInput:
+    """A NaN in the series poisons every window's correlation through
+    the running sums, and each NaN cell folds into the result as the
+    empty cell: distance inf (Euclidean) or corr -inf (Pearson), idx
+    MAXINT, at every offset."""
+
+    @pytest.mark.parametrize("euclidean,want", [(True, np.inf), (False, -np.inf)])
+    def test_walk_with_one_nan(self, euclidean, want):
+        x = np.random.default_rng(0).normal(size=400).cumsum()
+        x[200] = np.nan
+        mp = compute_mp(x, None, 16, MPOpts(euclidean=euclidean))
+        np.testing.assert_array_equal(mp.mp, np.full(385, want))
+        np.testing.assert_array_equal(mp.idx, np.full(385, np.iinfo(np.int64).max))
 
 
 class TestMpxAbJoin:
@@ -182,14 +234,12 @@ class TestMpxRemapNegCorr:
 
     def test_remap_parallel_values(self):
         # The reference only pins remap Idx at p=1 (matrixprofile_test.go:
-        # 641-644): remapped |corr| ties resolve differently across batch
-        # merges. Values must still be invariant at any p.
-        for n_jobs in (2, 4, 100):
-            mp = compute_mp(
-                self.SER, None, 4, MPOpts(algorithm="mpx", remap_neg_corr=True, n_jobs=n_jobs)
-            )
+        # 641-644): remapped |corr| ties resolve differently across tile
+        # merges. Values must still be invariant at any tiling.
+        for k in (2, 4, 100):
+            mp, _ = _tiled_mpx(self.SER, 4, k, remap_neg_corr=True)
             want = [1.0183, 1.0183, 0.8739, 0, 0, 1.2060, 0.8739, 0, 0]
-            np.testing.assert_allclose(mp.mp, want, atol=1e-4)
+            np.testing.assert_allclose(mp, want, atol=1e-4)
 
 
 class TestStampSampling:

@@ -8,7 +8,6 @@ import pytest
 
 from go_matrixprofile_spark.kernels import (
     binary_split,
-    diag_batching_scheme,
     apply_exclusion_zone,
     e2p,
     mov_mean_std,
@@ -86,18 +85,6 @@ class TestBinarySplit:
     )
     def test_golden(self, lb, ub, want):
         assert binary_split(lb, ub) == want
-
-
-class TestDiagBatchingScheme:
-    # util/util_test.go:167-192
-    def test_golden(self):
-        assert diag_batching_scheme(33, 4) == [(0, 3), (3, 6), (9, 7), (16, 18)]
-
-    def test_covers_all_diagonals(self):
-        for l, p in [(10, 1), (100, 7), (33, 4), (5, 5)]:
-            batches = diag_batching_scheme(l, p)
-            assert sum(s for _, s in batches) == l + 1
-            assert batches[0][0] == 0
 
 
 class TestExclusionZone:

@@ -250,9 +250,8 @@ class TestDifferentialBruteForce:
         off, nb = np.indices(corr.shape)
         valid = np.abs(nb - off) >= max(1, w // 4)
         tol = _tol(w, x)
-        for n_jobs in (1, 4):
-            m = MatrixProfile(x, None, w).compute(MPOpts(n_jobs=n_jobs))
-            _assert_profile(corr, valid, m.mp, m.idx, w, tol, kind == "ties")
+        m = MatrixProfile(x, None, w).compute(MPOpts())
+        _assert_profile(corr, valid, m.mp, m.idx, w, tol, kind == "ties")
         mp, idx = _tiles_self(x, w, max(t, w))
         _assert_profile(corr, valid, mp, idx, w, tol, kind == "ties")
 
@@ -264,10 +263,9 @@ class TestDifferentialBruteForce:
         valid = np.ones(corr.shape, dtype=bool)
         tol = _tol(w, a, b)
         ties = "ties" in (kind_a, kind_b)
-        for n_jobs in (1, 4):
-            m = MatrixProfile(a, b, w).compute(MPOpts(n_jobs=n_jobs))
-            _assert_profile(corr, valid, m.mp, m.idx, w, tol, ties)
-            _assert_profile(corr.T, valid.T, m.mpb, m.idxb, w, tol, ties)
+        m = MatrixProfile(a, b, w).compute(MPOpts())
+        _assert_profile(corr, valid, m.mp, m.idx, w, tol, ties)
+        _assert_profile(corr.T, valid.T, m.mpb, m.idxb, w, tol, ties)
 
     @settings(max_examples=40, deadline=None)
     @given(mp_input(kinds=("walk",)).filter(lambda inp: inp[1][0][0].mean() < 1e5))
@@ -318,6 +316,32 @@ def _assert_same_on_both_sweeps(run):
         mpm.diag_sweep = compiled
 
 
+def _self_join_ranges(x, w, starts, remap=False):
+    """diag_sweep's self-join partials (mp, idx) over consecutive diagonal
+    ranges: from the exclusion zone up to the first start, from each
+    start up to the next, and from the last up to the final diagonal.
+    Starts outside the swept diagonals are dropped."""
+    xs = mpm._diff_streams(x, w)
+    n = xs[0].size
+    excl = max(1, w // 4)
+    seeds = mpm._centered_seeds(x, x, xs[0], xs[0], w)
+    bounds = [excl, *(d for d in starts if excl < d < n), n]
+    out = []
+    for d_lo, d_end in zip(bounds, bounds[1:]):
+        if d_lo < d_end:
+            mp, idx = mpm._partial(n)
+            mpm.diag_sweep(xs, xs, seeds[d_lo:], d_lo, d_end - 1, mp, idx, mp, idx,
+                           remap=remap)
+            out += [mp, idx]
+    return out
+
+
+# the compiled sweep runs d >= 0 in groups of 8 diagonals from the first
+# one it is given. With excl 1 a whole self-join's groups start at 1, 9,
+# 17, ..., so ranges starting at 12, 28 and 48 begin inside them
+_RANGE_STARTS = (12, 28, 48)
+
+
 @st.composite
 def _with_nonfinite(draw):
     """mp_input() with one value replaced by NaN, +inf or -inf."""
@@ -335,9 +359,9 @@ class TestCompiledSweepParity:
 
     @settings(max_examples=40, deadline=None)
     @given(mp_input())
-    # the compiled sweep runs d >= 0 in groups of 8 diagonals. 95 windows,
-    # excl 1: 94 diagonals, 11 groups and 6 left over; n_jobs=4 batches
-    # start at d = 12, 28, 48, inside the groups that start at 9, 25, 41
+    # 95 windows, excl 1: 94 diagonals, 11 groups and 6 left over; the
+    # sub-range sweeps start at d = 12, 28, 48, inside the groups that
+    # start at 9, 25, 41
     @example((2, [(_make_series("walk", 96, 2, 0.0, 7), "walk")]))
     # 8 windows, excl 1: 7 diagonals, fewer than one group
     @example((4, [(_make_series("ties", 11, 4, 1e3, 8), "ties")]))
@@ -346,13 +370,13 @@ class TestCompiledSweepParity:
 
         def run():
             out = []
-            for n_jobs in (1, 4):
-                for remap in (False, True):
-                    for euclidean in (True, False):
-                        m = MatrixProfile(x, None, w).compute(
-                            MPOpts(n_jobs=n_jobs, remap_neg_corr=remap, euclidean=euclidean)
-                        )
-                        out += [m.mp, m.idx]
+            for remap in (False, True):
+                for euclidean in (True, False):
+                    m = MatrixProfile(x, None, w).compute(
+                        MPOpts(remap_neg_corr=remap, euclidean=euclidean)
+                    )
+                    out += [m.mp, m.idx]
+                out += _self_join_ranges(x, w, _RANGE_STARTS, remap)
             return out
 
         _assert_same_on_both_sweeps(run)
@@ -372,9 +396,8 @@ class TestCompiledSweepParity:
         def run():
             out = []
             for x, y in ((a, b), (b, a)):
-                for n_jobs in (1, 4):
-                    m = MatrixProfile(x, y, w).compute(MPOpts(n_jobs=n_jobs))
-                    out += [m.mp, m.idx, m.mpb, m.idxb]
+                m = MatrixProfile(x, y, w).compute(MPOpts())
+                out += [m.mp, m.idx, m.mpb, m.idxb]
             return out
 
         _assert_same_on_both_sweeps(run)
@@ -402,10 +425,8 @@ class TestCompiledSweepParity:
         w, [(x, _)] = inp
 
         def run():
-            out = []
-            for n_jobs in (1, 4):
-                m = MatrixProfile(x, None, w).compute(MPOpts(n_jobs=n_jobs))
-                out += [m.mp, m.idx]
+            m = MatrixProfile(x, None, w).compute(MPOpts())
+            out = [m.mp, m.idx, *_self_join_ranges(x, w, _RANGE_STARTS)]
             m = MatrixProfile(x, x[::-1], w).compute(MPOpts())
             return out + [m.mp, m.idx, m.mpb, m.idxb, *_tiles_self(x, w, max(t, w))]
 

@@ -156,48 +156,6 @@ class TestBPETrainDistributed:
         for i, t in enumerate(texts):
             assert int(got["n_bpe_tokens"].iloc[i]) == count_tokens(t, merges), t
 
-    def test_vocab_artifact_roundtrip(self, spark, tmp_path):
-        """save_merges/load_merges: the persisted vocabulary must apply
-        the identical replace chain (train once, tokenize forever)."""
-        import pandas as pd
-
-        from go_matrixprofile_spark.operators.bpe_train import (
-            load_merges,
-            save_merges,
-            train_bpe_distributed,
-        )
-        from go_matrixprofile_spark.operators.text import token_counts_bpe
-
-        texts = [
-            "the running engineers are testing the new training data",
-            "reading and writing every day",
-        ]
-        docs = spark.createDataFrame(
-            pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-        )
-        merges = train_bpe_distributed(docs, 12)
-        path = str(tmp_path / "vocab.json")
-        save_merges(merges, path)
-        loaded = load_merges(path)
-        assert loaded == merges
-        a = token_counts_bpe(docs, merges=merges).orderBy("doc_id").toPandas()
-        b = token_counts_bpe(docs, merges=loaded).orderBy("doc_id").toPandas()
-        assert (a["n_bpe_tokens"] == b["n_bpe_tokens"]).all()
-
-    def test_vocab_artifact_version_gate(self, tmp_path):
-        """Unknown artifact versions raise instead of mis-tokenizing."""
-        import json
-
-        import pytest as _pytest
-
-        from go_matrixprofile_spark.operators.bpe_train import load_merges
-
-        path = str(tmp_path / "bad.json")
-        with open(path, "w", encoding="utf-8") as f:
-            json.dump({"version": 99, "merges": [["a", "b"]]}, f)
-        with _pytest.raises(ValueError, match="version"):
-            load_merges(path)
-
 
 class TestLangID:
     def test_non_marker_sentences_labeled(self, spark):

@@ -26,8 +26,10 @@ import io
 import re
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def plan_of(df) -> str:
@@ -585,7 +587,7 @@ def main() -> int:
         lines += ["", "```", excerpt, "```", ""]
         print(("OK  " if ok else "FAIL") + " " + name)
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines))
     print(f"\n{'ALL PLAN INVARIANTS HOLD' if failures == 0 else f'{failures} FAILURES'} -> PLANS.md")
     return 1 if failures else 0
