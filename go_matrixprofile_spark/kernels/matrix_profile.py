@@ -675,26 +675,42 @@ _C_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "diag_sweep
 _CFLAGS = ("-O3", "-fPIC", "-shared", "-ffp-contract=off")
 
 
+def _ptr(a, dtype, writeable: bool = False) -> int:
+    """Address of a 1-D C-contiguous aligned array of dtype (writeable
+    if asked), for the compiled sweep; TypeError for any other array."""
+    f = a.flags
+    if not (
+        a.dtype == dtype and a.ndim == 1 and f.c_contiguous and f.aligned
+        and (f.writeable or not writeable)
+    ):
+        raise TypeError(
+            f"diag_sweep: want a 1-D C-contiguous aligned{' writeable' if writeable else ''} "
+            f"{np.dtype(dtype)} array, got {a.dtype} ndim={a.ndim} "
+            f"c_contiguous={f.c_contiguous} aligned={f.aligned} writeable={f.writeable}"
+        )
+    return a.ctypes.data
+
+
 def _c_sweep(fn, group: int):
     """Wrap one of the library's sweep paths with _diag_sweep_numpy's
     signature; group is the library's diag_sweep_group."""
-    vec = np.ctypeslib.ndpointer(np.float64, ndim=1, flags="C_CONTIGUOUS,ALIGNED")
-    out = np.ctypeslib.ndpointer(np.float64, ndim=1, flags="C_CONTIGUOUS,ALIGNED,WRITEABLE")
-    out_idx = np.ctypeslib.ndpointer(np.int64, ndim=1, flags="C_CONTIGUOUS,ALIGNED,WRITEABLE")
-    i64 = ctypes.c_int64
-    fn.argtypes = [vec, vec, vec, i64, vec, vec, vec, i64, vec, i64, i64,
-                   out, out_idx, out, out_idx, i64, i64, ctypes.c_int, out]
+    p, i64 = ctypes.c_void_p, ctypes.c_int64
+    fn.argtypes = [p, p, p, i64, p, p, p, i64, p, i64, i64,
+                   p, p, p, p, i64, i64, ctypes.c_int, p]
     fn.restype = None
+    f8, i8 = np.dtype(np.float64), np.dtype(np.int64)
 
     def diag_sweep(xs, ys, seeds, d_lo, d_hi, mp_x, idx_x, mp_y, idx_y, x0=0, y0=0,
                    remap=False):
         """_diag_sweep_numpy compiled (diag_sweep.c): the same cells in the
         same order with the same float operations, hence the same bits.
-        The argtypes reject any array that is not C-contiguous float64 /
-        int64 (outputs writeable); the bounds C would index by are
-        checked here. The scratch C writes to is allocated here, at the
-        size it needs: (group + 1) * min(nx, ny) doubles for the kept
-        correlation rows and their cell indices."""
+        Every array is checked here once and passed as a raw pointer:
+        TypeError unless 1-D, C-contiguous and aligned, float64 (idx
+        arrays int64), the four outputs writeable. The bounds C would
+        index by are checked here too (ValueError). The scratch C writes
+        to is allocated here, at the size it needs: (group + 1) *
+        min(nx, ny) doubles for the kept correlation rows and their cell
+        indices."""
         seeds = np.asarray(seeds, dtype=np.float64)
         nx, ny = mp_x.size, mp_y.size
         if d_lo <= d_hi and not (
@@ -710,8 +726,18 @@ def _c_sweep(fn, group: int):
                 f"diag_sweep: diagonals [{d_lo}, {d_hi}] with {seeds.size} seeds do "
                 f"not fit profiles of {nx} x {ny} windows and their streams"
             )
-        fn(*xs[1:], nx, *ys[1:], ny, seeds, d_lo, d_hi, mp_x, idx_x, mp_y, idx_y,
-           x0, y0, bool(remap), np.empty((group + 1) * min(nx, ny)))
+        # a self-join passes the same arrays as both sides: their
+        # addresses are taken once
+        in_x = [_ptr(a, f8) for a in xs[1:]]
+        in_y = in_x if ys is xs else [_ptr(a, f8) for a in ys[1:]]
+        out_x = (_ptr(mp_x, f8, True), _ptr(idx_x, i8, True))
+        out_y = out_x if mp_y is mp_x and idx_y is idx_x else (
+            _ptr(mp_y, f8, True), _ptr(idx_y, i8, True))
+        # a name keeps the scratch alive through the call: only its
+        # address goes to C
+        scratch = np.empty((group + 1) * min(nx, ny))
+        fn(*in_x, nx, *in_y, ny, _ptr(seeds, f8), d_lo, d_hi, *out_x, *out_y,
+           x0, y0, bool(remap), scratch.ctypes.data)
 
     return diag_sweep
 

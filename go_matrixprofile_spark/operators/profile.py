@@ -85,17 +85,18 @@ def assemble_series(
     aliases the folded literal into a fresh grouping attribute the
     partitioning does not match), which silently doubled the shuffle.
     Callers that do their own downstream repartition pass
-    repartition=False."""
+    repartition=False. The aggregate is SQL text: one py4j call, not
+    one per Column node."""
     src = (
         series.repartition(cpu_partitions(series), "conv_id")
         if repartition
         else series
     )
     return src.groupBy("conv_id", "metric").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("bucket_s", F.col(value_col).alias("v")))),
-            lambda s: s["v"],
-        ).alias("vals")
+        F.expr(
+            f"transform(array_sort(collect_list(struct(bucket_s, `{value_col}` AS v))), "
+            "s -> s.v) AS vals"
+        )
     )
 
 

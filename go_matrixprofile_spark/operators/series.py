@@ -31,6 +31,16 @@ METRIC_LATENCY = "inter_turn_latency_s"
 METRIC_TURN_RATE = "turn_rate"
 
 
+def ts_seconds_sql(col: str = "ts") -> str:
+    """SQL text of ts_seconds(col). The divisor is a DOUBLE literal
+    (``D`` suffix): a bare ``1000000.0`` is DECIMAL in Spark SQL and
+    rounds some values differently in the last bits."""
+    return (
+        f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', "
+        f"CAST({col} AS TIMESTAMP_NTZ)) / 1000000.0D"
+    )
+
+
 def ts_seconds(col: str = "ts") -> Column:
     """Epoch seconds (double, µs precision) from TIMESTAMP or
     TIMESTAMP_NTZ, independent of session timezone.
@@ -38,18 +48,13 @@ def ts_seconds(col: str = "ts") -> Column:
     NTZ wall-clock values are measured against the NTZ epoch;
     instant timestamps cast through NTZ in the session zone (our own
     sessions are pinned UTC in session.get_spark)."""
-    return (
-        F.expr(
-            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', "
-            f"CAST({col} AS TIMESTAMP_NTZ))"
-        )
-        / F.lit(1000000.0)
-    )
+    return F.expr(ts_seconds_sql(col))
 
 
-def bucket_of(col: Column, seconds: int) -> Column:
-    """Tumbling bucket start (epoch seconds, long) via floor division."""
-    return (F.floor(col / seconds) * seconds).cast("long")
+def bucket_sql(sec: str, seconds: int) -> str:
+    """SQL text of the tumbling bucket start (epoch seconds, BIGINT) of
+    the epoch-seconds expression `sec`, via floor division."""
+    return f"CAST(FLOOR({sec} / {seconds}) * {seconds} AS BIGINT)"
 
 
 def text_len_series(transcripts: DataFrame) -> DataFrame:
@@ -82,16 +87,19 @@ def inter_turn_latency_series(transcripts: DataFrame) -> DataFrame:
 
 
 def turn_rate_series(transcripts: DataFrame, bucket_seconds: int = 60) -> DataFrame:
-    """value = turns per tumbling bucket (defined at bucket granularity)."""
+    """value = turns per tumbling bucket (defined at bucket granularity).
+
+    A count per (conv_id, bucket). On input not partitioned on conv_id
+    Spark splits it into a partial count before a (conv_id, bucket)
+    exchange and the final count after it."""
     return (
         transcripts.groupBy(
-            "conv_id", bucket_of(ts_seconds(), bucket_seconds).alias("bucket_s")
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("value"))
-        .select(
+            "conv_id", F.expr(f"{bucket_sql(ts_seconds_sql(), bucket_seconds)} AS bucket_s")
+        ).agg(F.expr("CAST(count(1) AS DOUBLE) AS value"))
+        .selectExpr(
             "conv_id",
-            F.lit(METRIC_TURN_RATE).alias("metric"),
-            F.col("bucket_s").cast("double").alias("bucket_s"),
+            f"'{METRIC_TURN_RATE}' AS metric",
+            "CAST(bucket_s AS DOUBLE) AS bucket_s",
             "value",
         )
     )
@@ -125,68 +133,49 @@ def sessionize(transcripts: DataFrame, gap_seconds: float = 1800.0) -> DataFrame
 
 
 def derive_series(transcripts: DataFrame) -> DataFrame:
-    """All three metrics in one long-format series table.
+    """All three metrics in one long-format series table, in two legs.
 
-    Fused plan (r06): text_len and inter-turn latency come from one
-    per-conv window projection (an explode of two metric structs goes
-    long); turn_rate is max(row_number) per (conv_id, bucket) — a
-    stacked Window whose (conv_id, bucket) partitioning is satisfied by
-    hashpartitioning(conv_id), replacing the former leg's dedicated
-    (conv_id, bucket) pre-aggregation exchange; the rate leg's scan
-    survives as a column-pruned 3-column read (no text payload) because
-    Catalyst prunes the two legs' exchanges into different column sets.
-    max(row_number within bucket) is exactly count(*) per bucket —
-    integer semantics, bit-identical to turn_rate_series (which remains
-    the oracle-checked single-metric path); measured 3 → 2 Exchanges
-    and −0.9 s on the bench rollup region, values exceptAll-equal both
-    ways. A fully-fused single-leg variant (turn_rate attached to each
-    bucket's first turn via count().over + explode of three structs:
-    ONE scan, ONE exchange, no Union) was measured ~0.25 s SLOWER on
-    the same region — the extra (conv_id, bucket) sort and the 3-struct
-    explode outweigh the saved narrow scan at this shape — and was
-    rejected; noted here because at payload-dominated corpus scale that
-    trade-off may invert."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    sec = ts_seconds()
-    bkt = bucket_of(sec, 60)
-    wb = Window.partitionBy("conv_id", bkt).orderBy("turn_idx")
-    pts = transcripts.select(
+    text_len and inter-turn latency come from one per-conv window
+    projection, and an inline of two metric structs takes it long. The
+    rate leg is turn_rate_series at 60 s over a conv_id repartition,
+    and Catalyst prunes its scan to conv_id and ts (no text payload).
+    Each leg crosses one exchange on every input, 2 in all, and both
+    hash on conv_id alone, so a rollup keyed on conv_id after the Union
+    needs none. A rate leg stacked on the latency window
+    (max(row_number) per bucket) shares that window's exchange only on
+    input already hash-partitioned on conv_id (transcripts_from_events);
+    on a Parquet transcript table, the production input, it takes a
+    (conv_id, bucket) exchange for its window and another for its
+    aggregate. turn_rate_series without the repartition (a partial
+    count before a (conv_id, bucket) exchange) also makes 2 exchanges,
+    but the Union then keeps no partitioning and the rollup shuffles
+    every series row again: bench.py's q_rollup region at sf0.1 took
+    2.5-3.2 s against 2.0-2.4 s on a 4-vCPU host. Its partial count
+    saves little, as a minute bucket holds 1.001 turns on average on
+    the sf0.01 events.
+
+    The projections are SQL text (selectExpr): building the plan then
+    costs one py4j call per projection, not one per Column node.
+
+    A single-leg variant (turn_rate attached to each bucket's first
+    turn via count().over + explode of three structs: one scan, one
+    exchange, no Union) was measured ~0.25 s slower on the bench rollup
+    region: the extra (conv_id, bucket) sort and the 3-struct explode
+    outweighed the saved narrow scan at this shape. At payload-dominated
+    corpus scale that trade-off may invert."""
+    sec = ts_seconds_sql()
+    per_turn = transcripts.selectExpr(
         "conv_id",
-        sec.alias("sec"),
-        F.length("text").cast("double").alias("len"),
-        (sec - F.lag(sec).over(w)).alias("lat"),
-        F.row_number().over(wb).alias("rnb"),
-        bkt.alias("bkt"),
+        f"{sec} AS sec",
+        "CAST(length(text) AS DOUBLE) AS len",
+        f"{sec} - lag({sec}) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS lat",
     )
-    two = (
-        pts.select(
-            "conv_id",
-            F.col("sec").alias("bucket_s"),
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(METRIC_TEXT_LEN).alias("metric"),
-                        F.col("len").alias("value"),
-                    ),
-                    F.struct(
-                        F.lit(METRIC_LATENCY).alias("metric"),
-                        F.col("lat").alias("value"),
-                    ),
-                )
-            ).alias("e"),
-        )
-        .select("conv_id", "e.metric", "bucket_s", "e.value")
-        # drops exactly the first-turn latency rows (len is never null)
-        .where(F.col("value").isNotNull())
+    two = per_turn.selectExpr(
+        "conv_id",
+        "inline(array("
+        f"named_struct('metric', '{METRIC_TEXT_LEN}', 'bucket_s', sec, 'value', len), "
+        f"named_struct('metric', '{METRIC_LATENCY}', 'bucket_s', sec, 'value', lat)))",
     )
-    rate = (
-        pts.groupBy("conv_id", "bkt")
-        .agg(F.max("rnb").cast("double").alias("value"))
-        .select(
-            "conv_id",
-            F.lit(METRIC_TURN_RATE).alias("metric"),
-            F.col("bkt").cast("double").alias("bucket_s"),
-            "value",
-        )
-    )
-    return two.unionByName(rate)
+    # drops exactly the first-turn latency rows (len is never null)
+    two = two.where("value IS NOT NULL")
+    return two.unionByName(turn_rate_series(transcripts.repartition("conv_id"), 60))

@@ -362,3 +362,63 @@ class TestSweepBackend:
         assert [(r.levelno, r.getMessage()) for r in records] == [
             (logging.INFO, f"diag_sweep: C {lib} ({path})")
         ]
+
+
+@pytest.mark.skipif(mpm.diag_sweep is mpm._diag_sweep_numpy, reason="no compiled sweep")
+class TestCompiledSweepArguments:
+    """The compiled sweep gets raw pointers, so its wrapper checks every
+    array once: wrong dtype, non-contiguous and read-only outputs raise
+    instead of reaching C."""
+
+    W = 8
+
+    def _args(self):
+        x = np.random.default_rng(4).normal(size=40).cumsum()
+        xs = mpm._diff_streams(x, self.W)
+        n = xs[0].size
+        seeds = mpm._centered_seeds(x, x, xs[0], xs[0], self.W)[2:]
+        mp, idx = mpm._partial(n)
+        return dict(xs=xs, ys=xs, seeds=seeds, d_lo=2, d_hi=n - 1,
+                    mp_x=mp, idx_x=idx, mp_y=mp, idx_y=idx)
+
+    @pytest.mark.parametrize("path", list(mpm._SWEEPS))
+    @pytest.mark.parametrize("arg", ["stream", "mp_x", "idx_y"])
+    def test_rejects_wrong_dtype(self, path, arg):
+        a = self._args()
+        if arg == "stream":
+            a["ys"] = (a["xs"][0], a["xs"][1].astype(np.float32), *a["xs"][2:])
+        else:
+            a[arg] = a[arg].astype(np.float32 if arg == "mp_x" else np.int32)
+        with pytest.raises(TypeError, match="float64|int64"):
+            mpm._SWEEPS[path](**a)
+
+    @pytest.mark.parametrize("path", list(mpm._SWEEPS))
+    @pytest.mark.parametrize("arg", ["stream", "seeds", "idx_x"])
+    def test_rejects_non_contiguous(self, path, arg):
+        a = self._args()
+        strided = lambda v: np.repeat(v, 2)[::2]  # noqa: E731 - same values, stride 2
+        if arg == "stream":
+            a["xs"] = (a["xs"][0], a["xs"][1], strided(a["xs"][2]), a["xs"][3])
+        else:
+            a[arg] = strided(a[arg])
+        assert not (a["xs"][2] if arg == "stream" else a[arg]).flags.c_contiguous
+        with pytest.raises(TypeError, match="C-contiguous"):
+            mpm._SWEEPS[path](**a)
+
+    @pytest.mark.parametrize("path", list(mpm._SWEEPS))
+    @pytest.mark.parametrize("arg", ["mp_x", "idx_y"])
+    def test_rejects_read_only_output(self, path, arg):
+        a = self._args()
+        a[arg] = a[arg].copy()
+        a[arg].flags.writeable = False
+        with pytest.raises(TypeError, match="writeable"):
+            mpm._SWEEPS[path](**a)
+
+    @pytest.mark.parametrize("path", list(mpm._SWEEPS))
+    def test_read_only_inputs_are_read(self, path):
+        a, b = self._args(), self._args()
+        for v in (*a["xs"], a["seeds"]):
+            v.flags.writeable = False
+        mpm._SWEEPS[path](**a)
+        mpm._SWEEPS[path](**b)
+        assert np.array_equal(a["mp_x"], b["mp_x"]) and np.array_equal(a["idx_x"], b["idx_x"])

@@ -82,6 +82,49 @@ class TestSeries:
         assert len(got) == len(want)
         np.testing.assert_allclose(got["value"].to_numpy(), want["value"].to_numpy(), atol=1e-9)
 
+    @pytest.mark.parametrize("shape", ["parquet_table", "transcripts_from_events"])
+    def test_bit_identical_to_single_metric_paths(
+        self, spark, transcripts, transcripts_pd, tmp_path, shape
+    ):
+        """On both input shapes (a Parquet transcript table, and
+        transcripts_from_events output, which arrives hash-partitioned on
+        conv_id) the two-leg plan gives the bits of the single-metric
+        operators: text_len and latency as their own window projections
+        compute them, and turn_rate as whole counts per minute bucket,
+        checked against the pandas reference exactly."""
+        from go_matrixprofile_spark.sources.transcripts import transcripts_from_events
+
+        if shape == "parquet_table":
+            transcripts.write.parquet(str(tmp_path / "t"))
+            t = spark.read.parquet(str(tmp_path / "t"))
+        else:
+            ev = transcripts.selectExpr(
+                "dense_rank() OVER (ORDER BY conv_id) AS user_id", "role AS event_type",
+                "text AS props", "ts", "CAST(turn_idx AS BIGINT) AS event_id",
+            )
+            t = transcripts_from_events(ev)
+        key = ["conv_id", "metric", "bucket_s", "value"]
+        got = S.derive_series(t).toPandas().sort_values(key, ignore_index=True)
+        want = (
+            S.text_len_series(t)
+            .unionByName(S.inter_turn_latency_series(t))
+            .unionByName(S.turn_rate_series(t, 60))
+            .toPandas()
+            .sort_values(key, ignore_index=True)
+        )
+        assert list(got.columns) == key
+        assert got.equals(want)
+
+        rate = got[got["metric"] == "turn_rate"].drop(columns="metric")
+        ref = REF.derive_series_pandas(transcripts_pd)
+        ref = ref[ref["metric"] == "turn_rate"].drop(columns="metric")
+        if shape == "transcripts_from_events":
+            user_id = {c: str(i + 1) for i, c in enumerate(sorted(ref["conv_id"].unique()))}
+            ref = ref.assign(conv_id=ref["conv_id"].map(user_id))
+        cols = ["conv_id", "bucket_s", "value"]
+        ref = ref[cols].sort_values(cols, ignore_index=True)
+        assert rate[cols].sort_values(cols, ignore_index=True).equals(ref)
+
     def test_fixture_text_len_series(self, series_raw):
         vals = (
             series_raw.where(

@@ -2,41 +2,143 @@
 the document stages composed into a Structured Streaming query."""
 
 import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from go_matrixprofile_spark.sources import datagen
 
 
+TRANSCRIPT_DDL = (
+    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+)
+W = 8
+
+
+@pytest.fixture(scope="module")
+def split_store(spark, tmp_path_factory):
+    """A Parquet transcript store holding the first 80% of each
+    conversation's turns, and the last 20% as local pandas rows."""
+    full = datagen.generate_transcripts(spark, 6, mega_every=0, plant_fixtures=False)
+    pr = F.expr("percent_rank() over (partition by conv_id order by turn_idx)")
+    tagged = full.withColumn("pr", pr)
+    path = str(tmp_path_factory.mktemp("store") / "store")
+    tagged.where("pr < 0.8").drop("pr").write.parquet(path)
+    new = tagged.where("pr >= 0.8").drop("pr").toPandas()
+    return path, new
+
+
+def _batch(spark, pdf):
+    return spark.createDataFrame(pdf, TRANSCRIPT_DDL)
+
+
+def _recompute(spark, store, batch, conv_ids):
+    """Full recompute of conv_ids' profiles over store + batch."""
+    from go_matrixprofile_spark.operators.profile import matrix_profile
+    from go_matrixprofile_spark.operators.series import derive_series
+
+    merged = store.unionByName(batch)
+    return (
+        matrix_profile(derive_series(merged), w=W)
+        .where(F.col("conv_id").isin(conv_ids))
+        .toPandas()
+    )
+
+
+def _assert_same_profiles(got, want):
+    key = ["conv_id", "metric", "offset"]
+    got = got.sort_values(key, ignore_index=True)
+    want = want.sort_values(key, ignore_index=True)
+    assert len(got) == len(want) > 0
+    assert not got.duplicated(key).any()
+    assert got[key].equals(want[key])
+    np.testing.assert_array_equal(got["idx"].to_numpy(), want["idx"].to_numpy())
+    np.testing.assert_allclose(got["mp"].to_numpy(), want["mp"].to_numpy(), atol=1e-9)
+
+
 class TestIncrementalBatch:
-    def test_affected_convs_only_and_equivalence(self, spark):
-        from go_matrixprofile_spark.operators.profile import matrix_profile
-        from go_matrixprofile_spark.operators.series import derive_series
+    def test_affected_convs_only_and_equivalence(self, spark, split_store):
         from go_matrixprofile_spark.streaming.ingest import incremental_batch_update
 
-        full = datagen.generate_transcripts(spark, 6, mega_every=0, plant_fixtures=False)
-        # split: first 80% of each conv's turns are "existing", rest "new"
-        w = F.expr("percent_rank() over (partition by conv_id order by turn_idx)")
-        tagged = full.withColumn("pr", w)
-        existing = tagged.where("pr < 0.8").drop("pr")
-        new = tagged.where("pr >= 0.8").drop("pr")
-        # only convs 0 and 1 get new turns
-        new = new.where(F.col("conv_id").isin("conv-00000000", "conv-00000001"))
+        path, new = split_store
+        convs = ["conv-00000000", "conv-00000001"]
+        batch = _batch(spark, new[new["conv_id"].isin(convs)])
+        store = spark.read.parquet(path)
+        got = incremental_batch_update(spark, store, batch, w=W).toPandas()
+        assert set(got["conv_id"]) == set(convs)
+        _assert_same_profiles(got, _recompute(spark, store, batch, convs))
 
-        inc = incremental_batch_update(spark, existing, new, w=8)
-        got = inc.toPandas()
-        assert set(got["conv_id"]) <= {"conv-00000000", "conv-00000001"}
+    def test_conversation_only_in_batch(self, spark, split_store):
+        """A conversation the store has never seen is profiled from the
+        batch's turns alone."""
+        from go_matrixprofile_spark.streaming.ingest import incremental_batch_update
 
-        # equivalence with full recompute on the merged input
-        merged_input = existing.unionByName(new)
-        want = (
-            matrix_profile(derive_series(merged_input), w=8)
-            .where(F.col("conv_id").isin("conv-00000000", "conv-00000001"))
-            .toPandas()
-        )
-        got = got.sort_values(["conv_id", "metric", "offset"]).reset_index(drop=True)
-        want = want.sort_values(["conv_id", "metric", "offset"]).reset_index(drop=True)
-        assert len(got) == len(want)
-        np.testing.assert_allclose(got["mp"].to_numpy(), want["mp"].to_numpy(), atol=1e-9)
+        path, new = split_store
+        store = spark.read.parquet(path).where(F.col("conv_id") != "conv-00000002")
+        full = datagen.gen_conv_pdf(2, mega_every=0)
+        pdf = pd.concat([full, new[new["conv_id"] == "conv-00000003"]], ignore_index=True)
+        batch = _batch(spark, pdf)
+        got = incremental_batch_update(spark, store, batch, w=W).toPandas()
+        assert set(got["conv_id"]) == {"conv-00000002", "conv-00000003"}
+        _assert_same_profiles(got, _recompute(spark, store, batch, ["conv-00000002", "conv-00000003"]))
+
+    def test_null_conv_id_row_joins_the_union(self, spark, split_store):
+        """A batch row with a null conv_id touches no stored
+        conversation and leaves the others' profiles as they were."""
+        from go_matrixprofile_spark.streaming.ingest import incremental_batch_update
+
+        path, new = split_store
+        pdf = new[new["conv_id"] == "conv-00000004"]
+        orphan = pdf.iloc[:1].assign(conv_id=None, turn_idx=0)
+        store = spark.read.parquet(path)
+        got = incremental_batch_update(
+            spark, store, _batch(spark, pd.concat([pdf, orphan], ignore_index=True)), w=W
+        ).toPandas()
+        assert set(got["conv_id"]) == {"conv-00000004"}
+        _assert_same_profiles(got, _recompute(spark, store, _batch(spark, pdf), ["conv-00000004"]))
+
+    def test_duplicate_conv_ids_in_batch(self, spark, split_store):
+        """Several batch rows of one conversation select its stored turns
+        once: one profile row per (metric, offset)."""
+        from go_matrixprofile_spark.streaming.ingest import incremental_batch_update
+
+        path, new = split_store
+        pdf = new[new["conv_id"] == "conv-00000005"]
+        assert len(pdf) > 1
+        batch = _batch(spark, pdf)
+        store = spark.read.parquet(path)
+        got = incremental_batch_update(spark, store, batch, w=W).toPandas()
+        _assert_same_profiles(got, _recompute(spark, store, batch, ["conv-00000005"]))
+
+    def test_empty_batch(self, spark, split_store):
+        from go_matrixprofile_spark.streaming.ingest import incremental_batch_update
+
+        path, new = split_store
+        got = incremental_batch_update(
+            spark, spark.read.parquet(path), _batch(spark, new.iloc[:0]), w=W
+        ).toPandas()
+        assert got.empty
+
+    def test_local_batch_runs_at_most_six_jobs(self, spark, split_store):
+        """The batch's conv_ids come from a projection of a local batch
+        (no job) and filter the store at the scan: the call runs the two
+        store-scan legs, the assembly exchange, the range-bounds sample,
+        the range exchange and the kernel with the collect."""
+        from go_matrixprofile_spark.streaming.ingest import incremental_batch_update
+
+        path, new = split_store
+        sc = spark.sparkContext
+        store = spark.read.parquet(path)
+        batch = _batch(spark, new[new["conv_id"].isin(["conv-00000000", "conv-00000003"])])
+        group = "test-incremental-batch-jobs"
+        sc.setJobGroup(group, group)
+        try:
+            rows = incremental_batch_update(spark, store, batch, w=W).toPandas()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(rows) > 0
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
 class TestStatelessDocStagesStream:

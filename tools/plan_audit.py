@@ -25,6 +25,7 @@ from __future__ import annotations
 import io
 import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 from pathlib import Path
 
@@ -58,6 +59,7 @@ def read_schemas(p: str) -> list[set[str]]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
+    import pandas as pd
     from pyspark.sql import functions as F
 
     import __spark_entry__ as e
@@ -185,34 +187,104 @@ def main() -> int:
     )
 
     # 8b. fused series derivation: text_len + latency share one scan +
-    #     one window leg (explode of metric structs); turn_rate is
-    #     max(row_number per (conv_id, bucket)) on a stacked window —
-    #     its leg keeps a scan, but Catalyst prunes it to a 3-column
-    #     read with NO text payload, and the former dedicated
-    #     (conv_id, bucket) pre-aggregation exchange is gone (2, not 3,
-    #     exchanges). Formatted plans print each scan node twice
-    #     (tree + detail), so 2 physical scans == 4 occurrences;
-    #     exchanges are counted by their detail headers.
-    p = plan_of(
-        derive_series(
-            transcripts_from_events(
-                spark.read.parquet(f"{sf_dir}/events.parquet")
+    #     one window leg (inline of metric structs); turn_rate is a
+    #     count over a conv_id repartition, and Catalyst prunes its scan
+    #     to a read with NO text payload. Each leg crosses one exchange
+    #     (2 in all), both hash conv_id alone, so the Union keeps that
+    #     partitioning and a 1m rollup after it adds no exchange.
+    #     Formatted plans print each scan node twice (tree + detail), so
+    #     2 physical scans == 4 occurrences; exchanges are counted by
+    #     their detail headers.
+    from go_matrixprofile_spark.operators.rollup import rollup_raw
+
+    def derive_series_plan(name, t, text, windows):
+        p = plan_of(derive_series(t))
+        keys = re.findall(r"hashpartitioning\(([^()]*), \d+\)", p)
+        checks.append(
+            (
+                name,
+                p,
+                [
+                    ("exactly 2 parquet scans", p.count("Scan parquet") == 4),
+                    ("inline fuses the point metrics", "Generate" in p),
+                    ("single Union of the two branches", p.count("Union") == 2),
+                    ("exactly 2 exchanges", shuffle_exchanges(p) == 2),
+                    ("rate leg is a count", "partial_count" in p),
+                    ("no window beyond the latency leg's", p.count("Window") == windows),
+                    (
+                        "both exchanges hash conv_id alone",
+                        len(keys) == 2 and all(re.fullmatch(r"conv_id#\d+", k) for k in keys),
+                    ),
+                    (
+                        "a 1m rollup after it adds no exchange",
+                        shuffle_exchanges(plan_of(rollup_raw(derive_series(t), "1m"))) == 2,
+                    ),
+                    (
+                        "rate-leg scan prunes the text payload",
+                        any(text not in cols for cols in read_schemas(p)),
+                    ),
+                ],
             )
         )
+
+    # transcripts_from_events numbers turns with a window of its own
+    # and carries the text payload as `props`; formatted plans print
+    # each Window node twice
+    derive_series_plan(
+        "derive_series on transcripts_from_events: one window leg + count rate leg, conv_id-partitioned",
+        t, "props", 4,
     )
+
+    # 8c. the same plan over a Parquet transcript table, the production
+    #     input (the incremental store, jobs/run_pipeline.py): no input
+    #     partitioning to reuse, so a rate leg that is a window stacked
+    #     on the latency window takes a (conv_id, bucket) exchange for
+    #     the window and another for its aggregate — 3, not 2
+    tmp = tempfile.TemporaryDirectory(prefix="plan-audit-")
+    t.write.parquet(f"{tmp.name}/transcripts")
+    store = spark.read.parquet(f"{tmp.name}/transcripts")
+    derive_series_plan(
+        "derive_series on a Parquet transcript table: 2 exchanges, conv_id-partitioned",
+        store, "text", 2,
+    )
+
+    # 8d. incremental update: the batch's conv_ids are literals of a
+    #     filter pushed into the store scan — no broadcast semi-join, and
+    #     no aggregate or exchange over the batch: the update's plan has
+    #     exactly the aggregates and exchanges of the same pipeline over
+    #     store + batch
+    from go_matrixprofile_spark.streaming.ingest import incremental_batch_update
+
+    ts = pd.Timestamp("2024-01-01")
+    batch = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "conv_id": ["1", "2", "2"],
+                "turn_idx": [900, 900, 901],
+                "role": "user",
+                "text": "hello",
+                "tool": None,
+                "ts": [ts, ts, ts + pd.Timedelta(minutes=5)],
+            }
+        ),
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    p = plan_of(incremental_batch_update(spark, store, batch, w=8))
+    plain = plan_of(matrix_profile(derive_series(store.unionByName(batch)), w=8))
+
+    def aggregates(p):
+        return len(re.findall(r"^\(\d+\) \w*HashAggregate$", p, re.M))
+
     checks.append(
         (
-            "derive_series: fused plan (explode + stacked rate window)",
+            "incremental_batch_update: batch conv_ids as a pushed-down IN filter",
             p,
             [
-                ("exactly 2 parquet scans", p.count("Scan parquet") == 4),
-                ("explode fuses the point metrics", "Generate" in p),
-                ("single Union of the two branches", p.count("Union") == 2),
-                ("exactly 2 exchanges (no rate pre-agg shuffle)", shuffle_exchanges(p) == 2),
-                (
-                    "rate-leg scan prunes the text payload",
-                    any("props" not in cols for cols in read_schemas(p)),
-                ),
+                ("absent   'BroadcastExchange'", "BroadcastExchange" not in p),
+                ("no join", "Join" not in p),
+                ("no aggregate over the batch", aggregates(p) == aggregates(plain)),
+                ("IN filter pushed into the store scan", "In(conv_id, [1,2])" in p),
+                ("no exchange over the batch", shuffle_exchanges(p) == shuffle_exchanges(plain)),
             ],
         )
     )
@@ -587,6 +659,7 @@ def main() -> int:
         lines += ["", "```", excerpt, "```", ""]
         print(("OK  " if ok else "FAIL") + " " + name)
 
+    tmp.cleanup()
     with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines))
     print(f"\n{'ALL PLAN INVARIANTS HOLD' if failures == 0 else f'{failures} FAILURES'} -> PLANS.md")
