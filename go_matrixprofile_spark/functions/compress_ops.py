@@ -41,13 +41,11 @@ SERIES_SCHEMA = T.StructType(
 )
 
 
-def compress_series(
-    series: DataFrame, chunk_points: int = 65536, value_col: str = "value"
-) -> DataFrame:
+def compress_series(series: DataFrame, chunk_points: int = 65536) -> DataFrame:
     """Gorilla-compress each (conv_id, metric) series into ≤chunk_points
     blobs. Timestamps are packed as int64 microseconds."""
     src = series.select(
-        "conv_id", "metric", "bucket_s", F.col(value_col).cast("double").alias("value")
+        "conv_id", "metric", "bucket_s", F.col("value").cast("double").alias("value")
     )
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:

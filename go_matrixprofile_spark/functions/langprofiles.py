@@ -206,12 +206,9 @@ def _ranked_trigrams(text: str, k: int) -> dict[str, int]:
     return {tri: r for r, (tri, _) in enumerate(top)}
 
 
-def build_profiles(
-    seed: dict[str, str] | None = None, n_prof: int = N_PROF
-) -> dict[str, dict[str, int]]:
-    """{lang: {trigram: rank}} — rank 0 = most frequent."""
-    seed = SEED_TEXT if seed is None else seed
-    return {lang: _ranked_trigrams(text, n_prof) for lang, text in seed.items()}
+def build_profiles() -> dict[str, dict[str, int]]:
+    """{lang: {trigram: rank}} of SEED_TEXT — rank 0 = most frequent."""
+    return {lang: _ranked_trigrams(text, N_PROF) for lang, text in SEED_TEXT.items()}
 
 
 PROFILES: dict[str, dict[str, int]] = build_profiles()

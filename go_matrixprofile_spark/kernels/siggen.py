@@ -1,6 +1,6 @@
 """Deterministic synthetic signal generators (reference siggen/siggen.go).
 
-Used to seed the synthetic transcript corpus and benchmark series. Noise
+Used to build the benchmark series (bench.py). Noise
 takes an explicit seeded Generator (the reference uses the global
 unseeded rand, siggen/siggen.go:88-94 — we require determinism).
 """
@@ -8,13 +8,6 @@ unseeded rand, siggen/siggen.go:88-94 — we require determinism).
 from __future__ import annotations
 
 import numpy as np
-
-
-def sin(amp, freq, phase, offset, sample_rate, duration_sec) -> np.ndarray:
-    """amp·sin(2π·f·i/fs + phase) + offset  (siggen/siggen.go:11-18)."""
-    n = int(sample_rate * duration_sec)
-    i = np.arange(n, dtype=np.float64)
-    return amp * np.sin(2.0 * np.pi * freq * i / sample_rate + phase) + offset
 
 
 def line(slope, offset, n: int) -> np.ndarray:

@@ -36,28 +36,15 @@ def asof_join(
     left_on: str,
     right_on: str,
     value_cols: list[str],
-    tolerance: float | None = None,
-    direction: str = "backward",
 ) -> DataFrame:
-    """Inclusive as-of join: backward (default), forward, or nearest.
+    """Backward-inclusive as-of join.
 
     Returns every left row with `value_cols` (and ``asof_<right_on>``,
     the matched right timestamp) attached from the most recent right
-    row with right_on <= left_on (backward), the earliest right row
-    with right_on >= left_on (forward), or whichever of the two is
-    closer in absolute distance (nearest; ties go backward, matching
-    pandas ``merge_asof``) per `by` key; NULLs when no right row
-    qualifies (or, with `tolerance`, when the match is more than
-    `tolerance` away). Nearest costs the same single shuffle — the
-    backward and forward passes are two in-partition sorts over one
-    Exchange.
+    row with right_on <= left_on per `by` key; NULLs when no right row
+    qualifies.
     """
     from pyspark.sql.window import Window
-
-    if direction not in ("backward", "forward", "nearest"):
-        raise ValueError("direction must be 'backward', 'forward' or 'nearest'")
-    fwd = direction == "forward"
-    near = direction == "nearest"
 
     # internal columns must not collide with the caller's schema, and the
     # value columns get re-aliased onto the left schema — both are caller
@@ -83,7 +70,7 @@ def asof_join(
         *[F.col(c) for c in value_cols],
         # carry the original right_on value untouched so the output's
         # asof_<right_on> keeps its exact dataType (the double is only
-        # the internal sort/tolerance key)
+        # the internal sort key)
         F.col(right_on).alias(c_rt),
     )
     r = right.select(
@@ -98,53 +85,15 @@ def asof_join(
         .withColumn(c_side, F.lit(1))
     )
     u = l.unionByName(r, allowMissingColumns=True)
-    # forward = the same linear pass with the timeline reversed: order
-    # descending and rights still sort before lefts at equal timestamps
-    # (descending side 0 first needs _side DESC? no — at equal _t the
-    # right row must be visible to the left row, i.e. precede it in the
-    # scan order, which ascending _side already gives in both modes)
-    back_order = [F.col(c_t).asc(), F.col(c_side).asc()]
-    fwd_order = [F.col(c_t).desc(), F.col(c_side).asc()]
-    order = fwd_order if fwd else back_order
+    # at equal timestamps the right row must precede the left row in
+    # the scan order so the left row sees it: ascending _side
     w = (
         Window.partitionBy(*by)
-        .orderBy(*order)
+        .orderBy(F.col(c_t).asc(), F.col(c_side).asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    if near:
-        # nearest = both linear passes over the SAME key partitioning
-        # (one Exchange, two in-partition sorts), then the least-gap
-        # pick; ties go backward, matching pandas merge_asof
-        w_b = (
-            Window.partitionBy(*by)
-            .orderBy(*back_order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        w_f = (
-            Window.partitionBy(*by)
-            .orderBy(*fwd_order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        c_b, c_f = f"{tok}back", f"{tok}fwd"
-        u = u.withColumn(c_b, F.last(c_r, ignorenulls=True).over(w_b)).withColumn(
-            c_f, F.last(c_r, ignorenulls=True).over(w_f)
-        )
-        gap_b = F.col(c_t) - F.col(f"{c_b}.{c_rt}").cast("double")
-        gap_f = F.col(f"{c_f}.{c_rt}").cast("double") - F.col(c_t)
-        pick_f = F.col(c_b).isNull() | (
-            F.col(c_f).isNotNull() & (gap_f < gap_b)
-        )
-        u = u.withColumn(
-            c_last, F.when(pick_f, F.col(c_f)).otherwise(F.col(c_b))
-        )
-        gap = F.when(pick_f, gap_f).otherwise(gap_b)
-    else:
-        u = u.withColumn(c_last, F.last(c_r, ignorenulls=True).over(w))
-        rt_d = F.col(f"{c_last}.{c_rt}").cast("double")
-        gap = rt_d - F.col(c_t) if fwd else F.col(c_t) - rt_d
+    u = u.withColumn(c_last, F.last(c_r, ignorenulls=True).over(w))
     matched = F.col(c_last)
-    if tolerance is not None:
-        matched = F.when(gap <= float(tolerance), F.col(c_last))
     out = u.where(F.col(c_side) == 1)
     cols = [c for c in left.columns]
     return out.select(

@@ -28,9 +28,8 @@ Scale shape: the corpus-sized work is the single initial word-count
 aggregation (map-side combinable, one shuffle on the word key). Every
 round after that touches only the vocab table: one explode + one
 aggregation, keyed by symbol pair — no hot key, no growth. The replace
-chain accumulated on the vocab plan is re-materialized every
-``checkpoint_every`` rounds so round k never re-applies O(k) string
-replacements from round 0.
+chain accumulated on the vocab plan is re-materialized every 8 rounds
+so round k never re-applies O(k) string replacements from round 0.
 """
 
 from __future__ import annotations
@@ -41,8 +40,6 @@ from pyspark.sql import DataFrame, functions as F
 def train_bpe_distributed(
     documents: DataFrame,
     n_merges: int = 48,
-    text_col: str = "text",
-    checkpoint_every: int = 8,
 ) -> list[tuple[str, str]]:
     """Learn an ordered BPE merges table from a document corpus.
 
@@ -66,7 +63,7 @@ def train_bpe_distributed(
         documents.select(
             F.explode(
                 F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(_WORDISH), 0
+                    F.lower(F.col("text")), F.lit(_WORDISH), 0
                 )
             ).alias("w")
         )
@@ -121,7 +118,7 @@ def train_bpe_distributed(
                 F.lit("{" + x + y + "}"),
             ),
         )
-        if (r + 1) % checkpoint_every == 0:
+        if (r + 1) % 8 == 0:
             vocab = vocab.localCheckpoint(eager=True)
     return merges
 

@@ -32,30 +32,21 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def _line_ok(line: Column, min_words: int, require_terminal_punct: bool) -> Column:
+def _line_ok(line: Column) -> Column:
     """C4 line predicate over one element of the split-lines array."""
     t = F.trim(line)
-    ok = F.size(F.split(t, r"\s+")) >= min_words
-    if require_terminal_punct:
-        ok = ok & t.rlike(_TERMINAL_PUNCT)
+    ok = (F.size(F.split(t, r"\s+")) >= 3) & t.rlike(_TERMINAL_PUNCT)
     # C4 drops any line with the word "javascript" (boilerplate tell)
     ok = ok & ~F.lower(t).contains("javascript")
     return ok
 
 
-def clean_lines(
-    documents: DataFrame,
-    min_words: int = 3,
-    require_terminal_punct: bool = True,
-    text_col: str = "text",
-) -> DataFrame:
+def clean_lines(documents: DataFrame) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020 §2.2).
 
     Splits each document on newlines, keeps only lines that (a) have at
-    least ``min_words`` whitespace words, (b) end in terminal
-    punctuation (``. ! ? " '`` — disable with
-    ``require_terminal_punct=False`` for corpora without sentence
-    punctuation), and (c) do not contain the word "javascript".
+    least 3 whitespace words, (b) end in terminal punctuation
+    (``. ! ? " '``), and (c) do not contain the word "javascript".
     Documents containing "lorem ipsum" or a curly brace are flagged for
     doc-level removal (C4 drops them outright; the flag is returned so
     the caller can audit).
@@ -65,13 +56,9 @@ def clean_lines(
     newlines (empty string when nothing survives); filter
     ``WHERE keep_doc AND n_kept > 0`` for the cleaned corpus.
     """
-    if min_words < 1:
-        raise ValueError(f"min_words must be >= 1, got {min_words}")
-    lines = F.split(F.col(text_col), r"\n")
-    kept = F.filter(
-        lines, lambda x: _line_ok(x, min_words, require_terminal_punct)
-    )
-    lowered = F.lower(F.col(text_col))
+    lines = F.split(F.col("text"), r"\n")
+    kept = F.filter(lines, _line_ok)
+    lowered = F.lower(F.col("text"))
     keep_doc = ~lowered.contains("lorem ipsum") & ~lowered.contains("{")
     return documents.select(
         "doc_id",

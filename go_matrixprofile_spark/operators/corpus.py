@@ -8,8 +8,8 @@ token count for budget accounting. ``build_corpus`` composes the
 engine's oracle-checked operators into exactly that:
 
     dedup_groups (keep)            — fuzzy-dup survivors only
-    ∧ text_quality.quality ≥ q     — length/stopword/punct gate
-    ∧ repetition ≤ r (or N/A)      — Gopher dup-3gram gate
+    ∧ text_quality.quality ≥ 0.3   — length/stopword/punct gate
+    ∧ repetition ≤ 0.5 (or N/A)    — Gopher dup-3gram gate
     → (doc_id, n_bpe_tokens, quality)
 
 Every component is an independent single-purpose operator; this module
@@ -25,10 +25,7 @@ from pyspark.sql import types as T
 
 
 def build_corpus(
-    documents: DataFrame,
-    min_quality: float = 0.3,
-    max_dup_3gram: float = 0.5,
-    groups: DataFrame | None = None,
+    documents: DataFrame, groups: DataFrame | None = None
 ) -> DataFrame:
     """(doc_id, n_bpe_tokens, quality) for every document that survives
     dedup + quality + repetition gating — ``SUM(n_bpe_tokens)`` over
@@ -49,22 +46,18 @@ def build_corpus(
     tokens = token_counts_bpe(documents).select("doc_id", "n_bpe_tokens")
     return (
         keepers.join(quality, "doc_id")
-        .where(F.col("quality") >= min_quality)
+        .where(F.col("quality") >= 0.3)
         .join(rep, "doc_id")
         .where(
             F.col("dup_3gram_frac").isNull()
-            | (F.col("dup_3gram_frac") <= max_dup_3gram)
+            | (F.col("dup_3gram_frac") <= 0.5)
         )
         .join(tokens, "doc_id")
         .select("doc_id", "n_bpe_tokens", "quality")
     )
 
 
-def split_documents(
-    corpus: DataFrame,
-    budget: int = 2048,
-    token_col: str = "n_bpe_tokens",
-) -> DataFrame:
+def split_documents(corpus: DataFrame, budget: int = 2048) -> DataFrame:
     """Chunk every document whose token count exceeds `budget` into
     budget-sized pieces, so the downstream packer's invariant
     (SUM(n_tokens) per sequence <= budget) holds for EVERY sequence —
@@ -72,7 +65,7 @@ def split_documents(
     sequence with nothing to split it.
 
     Pure token arithmetic on the corpus accounting table (doc_id,
-    token_col): a doc with n tokens becomes ceil(n/budget) chunks —
+    n_bpe_tokens): a doc with n tokens becomes ceil(n/budget) chunks —
     full `budget` tokens each, the remainder in the last chunk (the
     standard pretraining chunking: fill whole training windows, one
     short tail). A doc with n <= budget passes through as its single
@@ -94,11 +87,11 @@ def split_documents(
     # a NULL token count would make explode(sequence(0, NULL)) emit
     # nothing and the document silently VANISH from the packed corpus —
     # fail loudly instead (NULLs here mean a broken upstream join)
-    raw_n = F.col(token_col)
+    raw_n = F.col("n_bpe_tokens")
     n = F.when(raw_n.isNotNull(), raw_n.cast("long")).otherwise(
         F.assert_true(
             F.lit(False),
-            f"split_documents: NULL {token_col} (broken upstream join?)",
+            "split_documents: NULL n_bpe_tokens (broken upstream join?)",
         ).cast("long")
     )
     # ceil(n/budget) chunks; degenerate empty docs keep one 0-token chunk
@@ -262,7 +255,6 @@ def materialize_sequences(
     tokenized: DataFrame,
     budget: int = 2048,
     vocab: dict[str, int] | None = None,
-    oov_buckets: int = 4096,
 ) -> DataFrame:
     """Turn the packer's accounting table into actual training token
     streams: one row per sequence with the concatenated tokens of its
@@ -280,7 +272,7 @@ def materialize_sequences(
     merge products); when given, ``input_ids`` are emitted alongside
     the token strings — known tokens map through the literal vocab
     map, everything else (digit runs, punctuation, unseen words)
-    lands deterministically in one of ``oov_buckets`` hash buckets
+    lands deterministically in one of 4096 hash buckets
     ABOVE the vocab range (ids are never silently aliased onto real
     vocab entries).
 
@@ -370,7 +362,7 @@ def materialize_sequences(
 
         def to_id(tok):
             # the repo's one portable md5->int32 idiom (mixture/dedup)
-            h = _md5_key("oov", tok) % oov_buckets + base
+            h = _md5_key("oov", tok) % 4096 + base
             return F.coalesce(vmap[tok], h).cast("int")
 
         out = out.withColumn("input_ids", F.transform("tokens", to_id))

@@ -13,9 +13,7 @@ Plan shape at 100 TB: the benchmark side is distinct n-grams of the
 eval set — millions of rows at most, broadcast by default so the
 corpus-side explode streams map-side against the hash set with NO
 shuffle of corpus data. Per-doc hit counts aggregate on doc_id (the
-natural document key, no hot key). With a huge reference set pass
-``broadcast_benchmark=False`` and the join shuffles on the gram key
-like any dedup candidate join.
+natural document key, no hot key).
 """
 
 from __future__ import annotations
@@ -49,8 +47,6 @@ def decontaminate(
     documents: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
-    broadcast_benchmark: bool = True,
-    threshold: float = 0.0,
 ) -> DataFrame:
     """Per-document contamination verdict against a benchmark table.
 
@@ -60,17 +56,12 @@ def decontaminate(
     n_grams is the document's word-``n``-gram count, n_hits how many of
     its gram OCCURRENCES appear anywhere in the benchmark, hit_frac =
     n_hits / n_grams (0.0 for gram-less docs), and contaminated =
-    hit_frac > ``threshold``. The default threshold 0.0 is the GPT-3
-    any-hit rule (one shared 13-gram condemns the doc); PaLM-style
-    pipelines keep docs below a contaminated fraction instead — pass
-    e.g. ``threshold=0.7`` for that regime. Filter
-    ``WHERE NOT contaminated`` for the clean corpus.
+    hit_frac > 0: the GPT-3 any-hit rule (one shared 13-gram condemns
+    the doc). Filter ``WHERE NOT contaminated`` for the clean corpus.
     """
-    if not 0.0 <= threshold < 1.0:
-        raise ValueError(f"threshold must be in [0, 1), got {threshold}")
-    bench_grams = _word_ngrams(benchmark, "bench_id", n).select("gram").distinct()
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
+    bench_grams = F.broadcast(
+        _word_ngrams(benchmark, "bench_id", n).select("gram").distinct()
+    )
     # explode_outer keeps a NULL-gram row for too-short docs, so the
     # doc_id aggregation alone covers every document — no corpus-sized
     # join back onto `documents`. The corpus side is spread to cluster
@@ -95,7 +86,7 @@ def decontaminate(
             "n_grams",
             "n_hits",
             hit_frac.alias("hit_frac"),
-            (hit_frac > F.lit(float(threshold))).alias("contaminated"),
+            (hit_frac > F.lit(0.0)).alias("contaminated"),
         )
     )
 
@@ -104,7 +95,6 @@ def contaminated_spans(
     documents: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Span-level contamination report: WHERE each document overlaps
     the benchmark, in word-token coordinates.
@@ -127,9 +117,9 @@ def contaminated_spans(
     construction — contamination is rare), one shuffle on doc_id for
     the ordered window.
     """
-    bench_grams = _word_ngrams(benchmark, "bench_id", n).select("gram").distinct()
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
+    bench_grams = F.broadcast(
+        _word_ngrams(benchmark, "bench_id", n).select("gram").distinct()
+    )
     norm = F.split(
         F.trim(F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]+", " ")),
         " ",

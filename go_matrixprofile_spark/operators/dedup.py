@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 MERSENNE = 2147483647  # 2^31-1, modulus for the affine min-hash family
+MAX_ITER = 25  # connected_components rounds before it gives up
+NGRAM_MAX_DF = 10000  # ngram_jaccard_pairs: shingles in more docs make no candidates
 
 
 def _md5_int(col):
@@ -73,14 +75,13 @@ def ngram_jaccard_pairs(
     k: int = 8,
     threshold: float = 0.5,
     max_doc_id: int | None = None,
-    max_df: int = 10000,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing ≥1 rare shingle.
 
     Two phases, both hot-key-safe at corpus scale:
 
     1. Candidates come from the self-join of shingles with document
-       frequency ≤ max_df only — a stop-shingle appearing in d docs
+       frequency ≤ NGRAM_MAX_DF only — a stop-shingle appearing in d docs
        would otherwise contribute O(d²) join rows (the classic
        quadratic blowup). Contract: a pair is reported only if it
        shares at least one rare shingle; pairs whose overlap is
@@ -101,7 +102,7 @@ def ngram_jaccard_pairs(
     rare_shingles = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= max_df)
+        .where(F.col("df") <= NGRAM_MAX_DF)
         .select("shingle")
     )
     rare = sh.join(rare_shingles, "shingle")
@@ -345,36 +346,10 @@ def jaccard_verify_pairs(
     )
 
 
-def _cc_materializer(pairs: DataFrame, reliable: bool, fn_name: str):
-    """Shared per-round materialization strategy for the iterative
-    component algorithms: localCheckpoint (executor-local, zero FS
-    round-trips) by default, reliable checkpoint() against the
-    configured durable dir when requested — validated up front so a
-    cluster job fails before any compute, not mid-iteration."""
-    if reliable and pairs.sparkSession.sparkContext.getCheckpointDir() is None:
-        raise ValueError(
-            f"{fn_name}(reliable=True) needs a reliable checkpoint "
-            "directory: call spark.sparkContext.setCheckpointDir("
-            "<durable path>) first"
-        )
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        if reliable:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    return _materialize
-
-
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-    max_iter: int = 25,
-    reliable: bool = False,
-) -> DataFrame:
-    """Distributed connected components over an undirected pair list:
-    (node, component) with component = the MIN node id of the component.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Distributed connected components over an undirected (a_id, b_id)
+    pair list: (node, component) with component = the MIN node id of
+    the component.
 
     Iterated min-label propagation with pointer jumping — all
     groupBy/join rounds, no driver-side data:
@@ -384,10 +359,10 @@ def connected_components(
 
     Pointer jumping makes convergence O(log diameter) rounds instead of
     O(diameter) — a chain component of length L resolves in ~log2(L)
-    rounds. Each round materializes via localCheckpoint (truncating the
-    plan tree: iterative lineage otherwise re-executes every prior
-    round per action and the plan grows unboundedly); the per-round
-    convergence check is a scalar count, never a collect of data.
+    rounds. Each round is materialized (truncating the plan tree:
+    iterative lineage otherwise re-executes every prior round per
+    action and the plan grows unboundedly); the per-round convergence
+    check is a scalar count, never a collect of data.
 
     Fixpoint argument: when no label changes, min(lbl[n], neighbor
     lbls) == lbl[n] for every n simultaneously, so lbl is constant
@@ -400,25 +375,24 @@ def connected_components(
     round is two shuffles on node id — the same key end to end, so AQE
     reuses the partitioning.
 
-    reliable=False (default) truncates per-round lineage with
-    ``localCheckpoint``: executor-local blocks, zero FS round-trips —
-    right for single-host runs (this sandbox) and static clusters. On a
-    real cluster with dynamic allocation or preemption, a lost executor
-    loses its local blocks and the iterative job FAILS (truncated
-    lineage cannot recompute them); pass ``reliable=True`` to persist
-    each round to the configured checkpoint directory
-    (``spark.sparkContext.setCheckpointDir`` — point it at durable
-    storage, e.g. an object-store path) so any executor loss replays
-    from the FS copy instead of killing the job.
+    A round is materialized with ``checkpoint()`` when the session has
+    a checkpoint directory (``spark.sparkContext.setCheckpointDir`` —
+    durable storage, so a lost executor replays from the FS copy), and
+    with ``localCheckpoint()`` otherwise: executor-local blocks, zero
+    FS round-trips, right for single-host runs and static clusters.
     """
-    _materialize = _cc_materializer(pairs, reliable, "connected_components")
+    durable = pairs.sparkSession.sparkContext.getCheckpointDir() is not None
+
+    def _materialize(df: DataFrame) -> DataFrame:
+        return df.checkpoint(eager=True) if durable else df.localCheckpoint(eager=True)
+
     # checkpoint edges FIRST, then derive labels from the checkpointed
     # edges: deriving labels from the raw plan would execute the whole
     # upstream pair pipeline (LSH joins, Jaccard verification, winnowing)
     # a second time — measured 2× the operator's wall on a 20k-doc corpus
     edges = _materialize(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .unionByName(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
+        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
+        .unionByName(pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
         .distinct()
     )
     labels = _materialize(
@@ -426,7 +400,7 @@ def connected_components(
         .distinct()
         .select("node", F.col("node").alias("lbl"))
     )
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         nbr_min = (
             edges.join(labels, edges.v == labels.node)
             .groupBy("u")
@@ -460,194 +434,48 @@ def connected_components(
         if changed == 0:
             return labels.select("node", F.col("lbl").alias("component"))
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(pointer-jumped min propagation needs ~log2(diameter); raise max_iter)"
+        f"connected_components did not converge in {MAX_ITER} rounds "
+        "(pointer-jumped min propagation needs ~log2(diameter))"
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-    max_iter: int = 50,
-    reliable: bool = False,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii 2014,
-    "Connected Components in MapReduce and Beyond") — the benchmark
-    alternative to ``connected_components``'s min-label+pointer-jump.
-
-    Per round over the symmetric edge list:
-
-      large-star: every node u links each STRICTLY LARGER neighbor to
-                  min(Γ(u) ∪ {u}) — tall trees flatten toward small ids
-      small-star: every node u links its smaller neighbors AND itself
-                  to min(Γ<(u) ∪ {u}) — stars contract onto their root
-
-    Both phases are one groupBy(min) + one join, keyed by node id. The
-    edge set provably converges to disjoint stars rooted at component
-    minima in O(log² n) rounds (O(log n) in practice); convergence here
-    = the edge-set fingerprint (count + order-independent hash sum)
-    unchanged across a full large+small round.
-
-    Output matches ``connected_components``: (node, component) with
-    component = min member id, one row per node appearing in any pair
-    (a node appearing only in self-pairs is its own singleton, same as
-    the min-label variant).
-    """
-    _materialize = _cc_materializer(pairs, reliable, "connected_components_star")
-    allp = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    raw = allp.where(F.col("u") != F.col("v"))
-    # node universe from the UNFILTERED pairs: self-pair-only nodes must
-    # still emit their singleton row (contract parity with minlabel)
-    nodes = _materialize(
-        allp.select(F.col("u").alias("node"))
-        .unionByName(allp.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    edges = _materialize(
-        raw.unionByName(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-    )
-    prev_sig: tuple[int, int] | None = None
-    for _ in range(max_iter):
-        # ---- large-star: (v, m) for v in Γ(u), v > u; m = min(Γ(u) ∪ {u})
-        m = (
-            edges.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", F.col("u")).alias("m"))
-        )
-        large = (
-            edges.where(F.col("v") > F.col("u"))
-            .join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
-        und = large.unionByName(
-            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        edges = _materialize(und)
-        # ---- small-star: (x, m) for x in Γ<(u) ∪ {u}, x != m
-        sm = edges.where(F.col("v") < F.col("u"))
-        m2 = sm.groupBy("u").agg(F.min("v").alias("m"))
-        linked = sm.join(m2, "u")
-        small = (
-            linked.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(
-                linked.select(F.col("u").alias("u"), F.col("m").alias("v"))
-            )
-            .where(F.col("u") != F.col("v"))
-        )
-        und2 = small.unionByName(
-            small.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        edges = _materialize(und2)
-        # order-independent edge-set fingerprint: count + sum of per-edge
-        # hashes (an equal-count, equal-hash-sum different edge set is a
-        # hash-collision event, not a plausible iteration state)
-        sig_row = edges.agg(
-            F.count("*").alias("c"),
-            # decimal sum: a long sum of 64-bit hashes overflows ANSI
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
-        ).first()
-        sig = (sig_row["c"], sig_row["s"])
-        if sig == prev_sig:
-            # stars: every remaining edge points node -> component min
-            stars = edges.where(F.col("v") < F.col("u")).select(
-                F.col("u").alias("node"), F.col("v").alias("component")
-            )
-            return (
-                nodes.join(stars, "node", "left")
-                .select(
-                    "node",
-                    F.coalesce("component", F.col("node")).alias("component"),
-                )
-            )
-        prev_sig = sig
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} rounds"
-    )
-
-
-def dedup_groups(
-    documents: DataFrame,
-    pairs: DataFrame | None = None,
-    embeddings: DataFrame | None = None,
-    max_iter: int = 25,
-    verify_jaccard: float | None = 0.5,
-    reliable: bool = False,
-    algorithm: str = "minlabel",
-) -> DataFrame:
+def dedup_groups(documents: DataFrame) -> DataFrame:
     """Resolve near-dup PAIRS into dedup groups with one survivor each:
     (doc_id, component_id, keep) for EVERY document.
 
     The final stage of a production fuzzy dedup: the pair operators
-    (minhash_lsh_pairs, simhash_near_dup_pairs, winnow_dup_pairs,
-    simsearch.cosine_near_dup_pairs) emit edges; this resolves the
-    union of those edges into connected components and picks the
-    min-doc_id member as the canonical survivor (keep = True). Docs in
-    no pair are their own singleton component (keep = True); the
-    training corpus is `WHERE keep`.
+    (minhash_lsh_pairs, simhash_near_dup_pairs, winnow_dup_pairs) emit
+    edges; this resolves the union of those edges into connected
+    components and picks the min-doc_id member as the canonical
+    survivor (keep = True). Docs in no pair are their own singleton
+    component (keep = True); the training corpus is `WHERE keep`.
 
     Edge quality matters here more than anywhere: transitive closure
     amplifies false edges, so UNVERIFIED minhash band candidates (hash
     coincidences) would chain whole corpora into one component. The
-    default therefore verifies the minhash candidates with exact
-    n-gram Jaccard >= verify_jaccard before clustering
-    (jaccard_verify_pairs); simhash pairs carry their own exact
-    Hamming verification and winnow pairs their >= min_shared rare-
-    fingerprint requirement already. Pass verify_jaccard=None to
-    cluster raw candidates (the over-merging behavior, occasionally
-    wanted for recall-first dedup).
-
-    pairs: pre-computed edge DataFrame with (a_id, b_id) columns — pass
-    the union of whichever sources apply. Defaults to
-    verified-minhash ∪ simhash ∪ winnow over `documents` (embedding
-    cosine pairs are unioned in when `embeddings` is given).
-
-    algorithm: "minlabel" (min-label propagation + pointer jumping, the
-    default) or "star" (alternating large-star/small-star). Measured
-    crossover (BENCH_BASELINE.md §3d): on the verified
-    sparse graphs this default pipeline produces, minlabel's two
-    shuffles/round edge out star's four; on heavy raw-candidate graphs
-    (~600k junk edges, hub components — the verify_jaccard=None
-    recall-first regime) star converges ~1.5× faster. Pick "star" when
-    clustering unverified candidates or any graph with huge components.
+    minhash candidates are therefore verified with exact n-gram
+    Jaccard >= 0.5 before clustering (jaccard_verify_pairs); simhash
+    pairs carry their own exact Hamming verification and winnow pairs
+    their >= min_shared rare-fingerprint requirement already.
     """
-    from .simsearch import cosine_near_dup_pairs
-
-    if pairs is None:
-        mh = minhash_lsh_pairs(documents, 8, 8, 2).select("a_id", "b_id")
-        if verify_jaccard is not None:
-            mh = jaccard_verify_pairs(documents, mh, k=8, threshold=verify_jaccard)
-        pairs = (
-            mh
-            .unionByName(
-                simhash_near_dup_pairs(
-                    documents, n_bits=32, n_bands=4, max_hamming=3
-                ).select("a_id", "b_id")
-            )
-            .unionByName(
-                winnow_dup_pairs(
-                    documents, k=8, window=4, min_shared=5, max_df=25
-                ).select("a_id", "b_id")
-            )
-        )
-        if embeddings is not None:
-            pairs = pairs.unionByName(
-                cosine_near_dup_pairs(
-                    embeddings, threshold=0.3, n_tables=4, band_size=4
-                ).select(
-                    F.col("a_id").cast("long").alias("a_id"),
-                    F.col("b_id").cast("long").alias("b_id"),
-                )
-            )
-    if algorithm not in ("minlabel", "star"):
-        raise ValueError("algorithm must be 'minlabel' or 'star'")
-    cc = connected_components if algorithm == "minlabel" else connected_components_star
-    comp = cc(
-        pairs.select("a_id", "b_id"), max_iter=max_iter, reliable=reliable
+    mh = jaccard_verify_pairs(
+        documents, minhash_lsh_pairs(documents, 8, 8, 2).select("a_id", "b_id"),
+        k=8, threshold=0.5,
     )
+    pairs = (
+        mh
+        .unionByName(
+            simhash_near_dup_pairs(
+                documents, n_bits=32, n_bands=4, max_hamming=3
+            ).select("a_id", "b_id")
+        )
+        .unionByName(
+            winnow_dup_pairs(
+                documents, k=8, window=4, min_shared=5, max_df=25
+            ).select("a_id", "b_id")
+        )
+    )
+    comp = connected_components(pairs)
     return (
         documents.select("doc_id")
         .join(comp, documents.doc_id == comp.node, "left")

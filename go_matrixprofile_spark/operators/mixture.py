@@ -74,15 +74,13 @@ def mixture_sample(
     documents: DataFrame,
     weights: Mapping[str, float],
     key_col: str = "source",
-    default_weight: float = 1.0,
     seed: int = 0,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Domain-weighted epoch sampling: one output row per (document,
     epoch copy), ``E[copies] = weight`` exactly.
 
     ``weights`` maps ``key_col`` values (domains) to target epoch
-    counts; unlisted domains get ``default_weight``. A weight of 2.0
+    counts; unlisted domains get weight 1. A weight of 2.0
     emits every doc twice (epochs 0 and 1); 0.25 keeps a deterministic
     quarter of the domain; 0.0 drops it. The Bernoulli draw for the
     fractional part is ``md5('mix:<seed>:<doc_id>')`` so the SAME
@@ -97,18 +95,16 @@ def mixture_sample(
     literal map expression, so there is NO join and NO shuffle at any
     corpus size.
     """
-    if any(w < 0 for w in weights.values()) or default_weight < 0:
+    if any(w < 0 for w in weights.values()):
         raise ValueError("mixture weights must be >= 0")
-    ident = F.col(id_col)
+    ident = F.col("doc_id")
     if weights:
         pairs: list[Column] = []
         for k, w in weights.items():
             pairs += [F.lit(k), F.lit(float(w))]
-        wt = F.coalesce(
-            F.create_map(*pairs)[F.col(key_col)], F.lit(float(default_weight))
-        )
+        wt = F.coalesce(F.create_map(*pairs)[F.col(key_col)], F.lit(1.0))
     else:
-        wt = F.lit(float(default_weight))
+        wt = F.lit(1.0)
     u = _md5_unit(f"mix:{seed}", ident)
     n_copies = (
         F.floor(wt).cast("int") + (u < (wt - F.floor(wt))).cast("int")
@@ -133,22 +129,19 @@ def mixture_sample(
 def temperature_weights(
     documents: DataFrame,
     tau: float = 0.3,
-    key_col: str = "source",
-    token_col: str | None = None,
-    total_epochs_cap: float = 10.0,
 ) -> dict[str, float]:
     """Temperature-based mixture weights (the multilingual sampling
     rule of mBERT / XLM-R, Conneau et al. 2020 §3.1): sample domain d
     with probability ``p_d ∝ f_d^tau`` where ``f_d`` is its corpus
-    fraction (by document count, or by ``token_col`` sum when given).
+    fraction by document count over the ``source`` column.
 
     Returns a {domain: epoch_weight} dict for :func:`mixture_sample`,
     normalized so the EXPECTED total output size equals the input size
     (``sum_d w_d · f_d = 1``): tau=1 reproduces the natural
     distribution (all weights 1), tau→0 approaches uniform domain
     sampling — rare domains get up-sampled, head domains down-sampled.
-    Weights are capped at ``total_epochs_cap`` so a vanishingly rare
-    domain cannot demand unbounded epochs.
+    Weights are capped at 10 epochs so a vanishingly rare domain cannot
+    demand unbounded epochs.
 
     Scale: ONE map-side-combinable aggregation over the corpus (the
     domain cardinality is tens of rows); the returned literal dict
@@ -158,21 +151,17 @@ def temperature_weights(
     """
     if tau <= 0:
         raise ValueError(f"tau must be > 0, got {tau}")
-    agg = (
-        F.sum(F.col(token_col)).cast("double")
-        if token_col
-        else F.count(F.lit(1)).cast("double")
-    )
+    agg = F.count(F.lit(1)).cast("double")
     # two-level agg folds the per-domain table (tens of rows) into ONE
     # driver row — a scalar fetch, not a data collect. NULL domains are
     # folded into a sentinel key (map_from_entries forbids null keys);
-    # mixture_sample gives those docs default_weight, so they are
+    # mixture_sample gives those docs weight 1, so they are
     # excluded from the returned table and held at weight 1 in the
     # size-preserving normalization below.
     null_key = "\x00__null_domain__"
     row = (
         documents.groupBy(
-            F.coalesce(F.col(key_col), F.lit(null_key)).alias("k")
+            F.coalesce(F.col("source"), F.lit(null_key)).alias("k")
         )
         .agg(agg.alias("n"))
         .agg(F.map_from_entries(F.collect_list(F.struct("k", "n"))).alias("m"))
@@ -191,14 +180,13 @@ def temperature_weights(
     fracs = {k: n / total for k, n in counts.items()}
     raw = {k: f ** (tau - 1.0) for k, f in fracs.items()}
     z = sum(raw[k] * fracs[k] for k in raw) / max(1.0 - f_null, 1e-12)
-    return {k: min(raw[k] / z, float(total_epochs_cap)) for k in raw}
+    return {k: min(raw[k] / z, 10.0) for k in raw}
 
 
 def train_val_split(
     documents: DataFrame,
     val_frac: float = 0.01,
     seed: int = 0,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic hash-based train/validation assignment: adds a
     ``split`` column ('val' iff ``md5('split:<seed>:<id>')``-uniform <
@@ -213,7 +201,7 @@ def train_val_split(
     """
     if not (0.0 <= val_frac <= 1.0):
         raise ValueError(f"val_frac must be in [0, 1], got {val_frac}")
-    u = _md5_unit(f"split:{seed}", F.col(id_col))
+    u = _md5_unit(f"split:{seed}", F.col("doc_id"))
     return documents.withColumn(
         "split", F.when(u < F.lit(float(val_frac)), "val").otherwise("train")
     )

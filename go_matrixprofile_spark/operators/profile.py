@@ -64,9 +64,7 @@ def cpu_partitions(df: DataFrame) -> int:
     return df.sparkSession.sparkContext.defaultParallelism
 
 
-def assemble_series(
-    series: DataFrame, value_col: str = "value", repartition: bool = True
-) -> DataFrame:
+def assemble_series(series: DataFrame, repartition: bool = True) -> DataFrame:
     """Collapse a long-format series table to one array row per
     (conv_id, metric), sorted by bucket.
 
@@ -94,7 +92,7 @@ def assemble_series(
     )
     return src.groupBy("conv_id", "metric").agg(
         F.expr(
-            f"transform(array_sort(collect_list(struct(bucket_s, `{value_col}` AS v))), "
+            "transform(array_sort(collect_list(struct(bucket_s, `value` AS v))), "
             "s -> s.v) AS vals"
         )
     )
@@ -124,35 +122,29 @@ def matrix_profile(
     series: DataFrame,
     w: int,
     opts: MPOpts | None = None,
-    value_col: str = "value",
-    min_len: int | None = None,
 ) -> DataFrame:
     """Self-join MP per (conv_id, metric); series shorter than w+1 are
     skipped (no profile defined). Series are assembled to array rows
     JVM-side; the NumPy kernel sees one row per conversation."""
-    return matrix_profile_assembled(
-        assemble_series(series, value_col), w, opts, min_len
-    )
+    return matrix_profile_assembled(assemble_series(series), w, opts)
 
 
 def matrix_profile_assembled(
     assembled: DataFrame,
     w: int,
     opts: MPOpts | None = None,
-    min_len: int | None = None,
 ) -> DataFrame:
     """MP over pre-assembled array rows (conv_id, metric, vals) — the
     entry point when series are already stored array-per-conv (e.g. a
     materialized tier), skipping the assembly shuffle. The array rows
     are placed on the kernel tasks by place_series."""
     opts = opts or MPOpts()
-    min_len = max(min_len or 0, w + 1)
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             for row in pdf.itertuples(index=False):
                 vals = np.asarray(row.vals, dtype=np.float64)
-                if vals.size < min_len:
+                if vals.size < w + 1:
                     continue
                 mp = MatrixProfile(vals, None, w).compute(opts)
                 n = mp.mp.size
@@ -264,7 +256,6 @@ def matrix_profile_chunked(
     w: int,
     n_batches: int = 8,
     opts: MPOpts | None = None,
-    value_col: str = "value",
 ) -> DataFrame:
     """MPX with intra-series parallelism via SCAMP-style 2-D tiles.
 
@@ -288,9 +279,7 @@ def matrix_profile_chunked(
     opts = opts or MPOpts(algorithm="mpx")
     if not opts.euclidean:
         raise ValueError("matrix_profile_chunked emits Euclidean profiles only")
-    src = series.select(
-        "conv_id", "metric", "bucket_s", F.col(value_col).alias("value")
-    )
+    src = series.select("conv_id", "metric", "bucket_s", "value")
     # k tiles per side so that k(k+1)/2 ≈ n_batches tasks per conv
     k = max(1, int(round(((8 * n_batches + 1) ** 0.5 - 1) / 2)))
     tile_in = chunked_tile_inputs(src, w, k)
@@ -376,13 +365,11 @@ def matrix_profile_chunked(
 def discover(
     series: DataFrame,
     w: int,
-    k_motifs: int = 3,
-    r_motifs: float = 2.0,
     k_discords: int = 3,
     opts: MPOpts | None = None,
-    av: str = "default",
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Analyze pipeline per conv: MP → motifs + discords + segmentation.
+    """Analyze pipeline per conv: MP → top-3 motifs (radius 2) +
+    discords + segmentation.
 
     The greedy discovery loops are inherently sequential per series
     (each pick mutates the profile — SURVEY.md §2.5) so they run inside
@@ -421,11 +408,9 @@ def discover(
                          [max(2 * w, w + 4)], float(vals.size))
                     )
                     continue
-                mp = MatrixProfile(vals, None, w)
-                mp.av = av
-                mp.compute(opts)
+                mp = MatrixProfile(vals, None, w).compute(opts)
                 try:
-                    motifs = mp.discover_motifs(k_motifs, r_motifs, 10, w // 2)
+                    motifs = mp.discover_motifs(3, 2.0, 10, w // 2)
                 except ValueError:
                     motifs = []
                 for g, group in enumerate(motifs):
@@ -571,32 +556,21 @@ def mpdist_pairs(
     w: int,
     max_convs: int = 20,
     opts: MPOpts | None = None,
-    conv_ids: list[str] | None = None,
 ) -> DataFrame:
     """Conversation-to-conversation MPDist similarity matrix
     (MPDist, matrixprofile.go:243-338).
 
     All-pairs MPDist is inherently quadratic in conversations, so the
-    pair space must be bounded: pass an explicit ``conv_ids`` list
-    (broadcast semi-join — no sort, the scale path) or fall back to the
-    first ``max_convs`` by conv_id (orderBy+limit; fine for bounded
-    exploration, not for a full-corpus plan). Series are assembled per
-    conv (one aggregation), the small conv-level table self-joins
-    (broadcast), and each pair's MPDist runs as one Arrow-batched task.
+    pair space is bounded to the first ``max_convs`` by conv_id
+    (orderBy+limit; fine for bounded exploration, not for a full-corpus
+    plan). Series are assembled per conv (one aggregation), the small
+    conv-level table self-joins (broadcast), and each pair's MPDist
+    runs as one Arrow-batched task.
     """
     opts = opts or MPOpts()
     src = series.select("conv_id", "metric", "bucket_s", "value")
-    if conv_ids is not None:
-        keys = series.sparkSession.createDataFrame(
-            [(c,) for c in conv_ids], "conv_id string"
-        )
-        src = src.join(F.broadcast(keys), "conv_id", "left_semi")
     assembled = assemble_series(src, repartition=False).where(F.size("vals") > w * 2)
-    ranked = (
-        assembled
-        if conv_ids is not None
-        else assembled.orderBy("conv_id").limit(max_convs)
-    )
+    ranked = assembled.orderBy("conv_id").limit(max_convs)
     a = ranked.select(
         F.col("conv_id").alias("a_id"), F.col("metric").alias("metric"), F.col("vals").alias("a_vals")
     )
@@ -633,14 +607,14 @@ def mpdist_pairs(
     return pairs.mapInPandas(kernel, schema)
 
 
-def streaming_update_check(series: DataFrame, w: int, split: float = 0.8) -> DataFrame:
+def streaming_update_check(series: DataFrame, w: int) -> DataFrame:
     """Incremental Update ≡ full recompute evidence per conv
     (the reference's own streaming contract, matrixprofile_test.go:706-762).
 
-    Splits each series at `split`, computes the prefix profile, streams
-    the suffix through update(), recomputes from scratch, and reports
-    the max abs deviation — the engine's incremental-batch path is
-    correct when max_abs_diff ≈ 0.
+    Splits each series at 80% of its length, computes the prefix
+    profile, streams the suffix through update(), recomputes from
+    scratch, and reports the max abs deviation — the engine's
+    incremental-batch path is correct when max_abs_diff ≈ 0.
     """
     schema = T.StructType(
         [
@@ -657,7 +631,7 @@ def streaming_update_check(series: DataFrame, w: int, split: float = 0.8) -> Dat
             rows = []
             for rec in pdf.itertuples(index=False):
                 vals = np.asarray(rec.vals, dtype=np.float64)
-                cut = int(vals.size * split)
+                cut = int(vals.size * 0.8)
                 if cut < w + 2 or vals.size - cut < 1:
                     continue
                 try:

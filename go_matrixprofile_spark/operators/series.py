@@ -32,23 +32,24 @@ METRIC_TURN_RATE = "turn_rate"
 
 
 def ts_seconds_sql(col: str = "ts") -> str:
-    """SQL text of ts_seconds(col). The divisor is a DOUBLE literal
-    (``D`` suffix): a bare ``1000000.0`` is DECIMAL in Spark SQL and
-    rounds some values differently in the last bits."""
+    """SQL text of the epoch seconds of `col` (see ts_seconds). The
+    divisor is a DOUBLE literal (``D`` suffix): a bare ``1000000.0`` is
+    DECIMAL in Spark SQL and rounds some values differently in the last
+    bits."""
     return (
         f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', "
         f"CAST({col} AS TIMESTAMP_NTZ)) / 1000000.0D"
     )
 
 
-def ts_seconds(col: str = "ts") -> Column:
-    """Epoch seconds (double, µs precision) from TIMESTAMP or
-    TIMESTAMP_NTZ, independent of session timezone.
+def ts_seconds() -> Column:
+    """Epoch seconds (double, µs precision) of the ``ts`` column, from
+    TIMESTAMP or TIMESTAMP_NTZ, independent of session timezone.
 
     NTZ wall-clock values are measured against the NTZ epoch;
     instant timestamps cast through NTZ in the session zone (our own
     sessions are pinned UTC in session.get_spark)."""
-    return F.expr(ts_seconds_sql(col))
+    return F.expr(ts_seconds_sql("ts"))
 
 
 def bucket_sql(sec: str, seconds: int) -> str:

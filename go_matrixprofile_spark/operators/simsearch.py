@@ -20,6 +20,10 @@ from pyspark.sql import DataFrame, functions as F
 
 from .spread import spread_input
 
+MAX_BUCKET = 100000  # LSH (tbl, bucket) blocks larger than this make no candidates
+PQ_M_SUB = 4  # product quantization: subvectors per embedding
+PQ_K_CODES = 16  # product quantization: codebook entries per subvector
+
 
 def _plane_components(p: int, dim: int) -> list[float]:
     """Plane p's ±1 components for dimensions 0..dim-1, evaluated in
@@ -38,9 +42,9 @@ def _plane_components(p: int, dim: int) -> list[float]:
 def _embedding_dim(embeddings: DataFrame) -> int:
     """Dimension of the embedding column: one single-row scalar fetch
     at plan-build time (the embeddings contract is fixed-dim). Empty
-    input returns 1 — every downstream plan is empty anyway."""
+    input returns 0 — every downstream plan is empty anyway."""
     row = embeddings.select(F.size("embedding").alias("d")).first()
-    return 1 if row is None or row["d"] is None else int(row["d"])
+    return 0 if row is None or row["d"] is None else int(row["d"])
 
 
 def _cosine(a, b):
@@ -112,7 +116,7 @@ def lsh_band_buckets(
     e = F.col("embedding")
     # constant plane matrix as literal arrays (see _plane_components):
     # one Python evaluation per plan instead of dim×planes md5s per row
-    dim = _embedding_dim(embeddings)
+    dim = max(_embedding_dim(embeddings), 1)
     tables = []
     for t in range(n_tables):
         sig = None
@@ -131,21 +135,19 @@ def lsh_band_buckets(
     ).select("vec_id", "e.tbl", "e.bucket")
 
 
-def _cap_buckets(buckets: DataFrame, max_bucket: int | None) -> DataFrame:
-    """Drop over-full (tbl, bucket) blocks: a degenerate bucket (all-zero
-    vectors, constant embeddings) would otherwise reintroduce the
-    quadratic pair blowup the bucketing exists to prevent. Dropped
-    buckets lose candidates by design — the multi-table layout gives
-    those pairs other chances."""
-    if max_bucket is None:
-        return buckets
+def _cap_buckets(buckets: DataFrame) -> DataFrame:
+    """Drop (tbl, bucket) blocks of more than MAX_BUCKET vectors: a
+    degenerate bucket (all-zero vectors, constant embeddings) would
+    otherwise reintroduce the quadratic pair blowup the bucketing
+    exists to prevent. Dropped buckets lose candidates by design — the
+    multi-table layout gives those pairs other chances."""
     # bucket sizes via groupBy + join (map-side-combinable partial
     # counts), NOT a frameless window that would route every row of a
     # degenerate bucket through one task before the filter discards them
     small = (
         buckets.groupBy("tbl", "bucket")
         .agg(F.count("*").alias("bsz"))
-        .where(F.col("bsz") <= max_bucket)
+        .where(F.col("bsz") <= MAX_BUCKET)
         .select("tbl", "bucket")
     )
     return buckets.join(small, ["tbl", "bucket"])
@@ -157,13 +159,12 @@ def knn_lsh_cosine(
     k: int = 5,
     n_tables: int = 4,
     band_size: int = 4,
-    max_bucket: int | None = 100000,
 ) -> DataFrame:
     """ANN: exact cosine restricted to vectors sharing any LSH band
     bucket with the query (multi-table union improves recall)."""
     from pyspark.sql.window import Window
 
-    bk = _cap_buckets(lsh_band_buckets(embeddings, n_tables, band_size), max_bucket)
+    bk = _cap_buckets(lsh_band_buckets(embeddings, n_tables, band_size))
     qb = bk.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("qid"), "tbl", "bucket"
     )
@@ -195,10 +196,10 @@ def _lloyd_mean_update(
     elems: DataFrame, keys: list[str], prev: DataFrame,
     centroid_round: int | None,
 ) -> DataFrame:
-    """One Lloyd mean step shared by the IVF and PQ refiners: per-key
-    element-wise mean of assigned member positions (optionally
-    quantized for cross-engine reproducibility), empty cells keep the
-    previous centroid, lineage truncated per iteration.
+    """One Lloyd mean step of the PQ refiner: per-key element-wise mean
+    of assigned member positions (optionally quantized for cross-engine
+    reproducibility), empty cells keep the previous centroid, lineage
+    truncated per iteration.
 
     elems: (*keys, pos, v) exploded member positions; prev: the
     (*keys, ce) table being refined."""
@@ -220,23 +221,13 @@ def _lloyd_mean_update(
 
 
 def ivf_assign(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    refine: int = 0,
-    centroid_round: int | None = None,
+    embeddings: DataFrame, n_centroids: int
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: deterministic centroids + nearest-centroid
     assignment.
 
-    Seed centroids are the first n_centroids vectors by vec_id — a
-    deterministic, engine-portable choice. ``refine`` > 0 runs that
-    many Lloyd (spherical k-means) iterations on top: argmax-cosine
-    assign, recompute each cell's centroid as the element-wise mean of
-    its members (posexplode → per-position avg, optionally quantized
-    via ``centroid_round`` for cross-engine reproducibility — the same
-    discipline as ``pq_codes``), empty cells keep their previous
-    centroid. Every step is the same broadcast + partial-agg plan —
-    no driver-side data; per-iteration localCheckpoint bounds lineage.
+    Centroids are the first n_centroids vectors by vec_id — a
+    deterministic, engine-portable choice.
 
     Returns (centroids, assignments) where assignments = (vec_id,
     centroid_id): one broadcast join + per-row argmax over n_centroids
@@ -248,39 +239,31 @@ def ivf_assign(
     # argmax below otherwise runs in one task for a single-split input
     embeddings = spread_input(embeddings)
 
-    def assign_to(cents_df: DataFrame) -> DataFrame:
-        # dim guard: a centroid of another length (a ragged embedding
-        # column) would null-pad every cosine into NULL and rank garbage
-        sim = F.when(
-            F.size("embedding") == F.size("ce"),
-            F.round(_cosine(F.col("embedding"), F.col("ce")), 6),
-        ).otherwise(
-            F.assert_true(
-                F.lit(False),
-                "centroid dimension != embedding dimension",
-            ).cast("double")
-        )
-        scored = embeddings.crossJoin(F.broadcast(cents_df)).select(
-            "vec_id", "centroid_id", sim.alias("sim")
-        )
-        w_ = Window.partitionBy("vec_id").orderBy(
-            F.col("sim").desc(), F.col("centroid_id").asc()
-        )
-        return (
-            scored.withColumn("rn", F.row_number().over(w_))
-            .where("rn = 1")
-            .select("vec_id", "centroid_id")
-        )
-
     cents = embeddings.where(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("ce")
     )
-    for _ in range(refine):
-        members = embeddings.join(assign_to(cents), "vec_id").select(
-            "centroid_id", F.posexplode("embedding").alias("pos", "v")
-        )
-        cents = _lloyd_mean_update(members, ["centroid_id"], cents, centroid_round)
-    return cents, assign_to(cents)
+    # dim guard: a centroid of another length (a ragged embedding
+    # column) would null-pad every cosine into NULL and rank garbage
+    sim = F.when(
+        F.size("embedding") == F.size("ce"),
+        F.round(_cosine(F.col("embedding"), F.col("ce")), 6),
+    ).otherwise(
+        F.assert_true(
+            F.lit(False),
+            "centroid dimension != embedding dimension",
+        ).cast("double")
+    )
+    scored = embeddings.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "centroid_id", sim.alias("sim")
+    )
+    w_ = Window.partitionBy("vec_id").orderBy(
+        F.col("sim").desc(), F.col("centroid_id").asc()
+    )
+    return cents, (
+        scored.withColumn("rn", F.row_number().over(w_))
+        .where("rn = 1")
+        .select("vec_id", "centroid_id")
+    )
 
 
 def knn_ivf_cosine(
@@ -289,8 +272,6 @@ def knn_ivf_cosine(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    refine: int = 0,
-    centroid_round: int | None = None,
 ) -> DataFrame:
     """IVF ANN: exact cosine restricted to the query's n_probe nearest
     centroid cells. The scale path for embedding search when hyperplane
@@ -298,9 +279,7 @@ def knn_ivf_cosine(
     bound the scanned fraction to n_probe/n_centroids."""
     from pyspark.sql.window import Window
 
-    cents, assigns = ivf_assign(
-        embeddings, n_centroids, refine=refine, centroid_round=centroid_round
-    )
+    cents, assigns = ivf_assign(embeddings, n_centroids)
     q_emb = embeddings.where(F.col("vec_id") < n_queries)
     # query → its n_probe closest centroids
     probed = q_emb.crossJoin(F.broadcast(cents)).select(
@@ -345,11 +324,10 @@ def cosine_near_dup_pairs(
     threshold: float = 0.95,
     n_tables: int = 4,
     band_size: int = 4,
-    max_bucket: int | None = 100000,
 ) -> DataFrame:
     """Embedding near-duplicate pairs above a cosine threshold; candidate
     space = pairs sharing any (tbl, bucket), per-bucket size capped."""
-    bk = _cap_buckets(lsh_band_buckets(embeddings, n_tables, band_size), max_bucket)
+    bk = _cap_buckets(lsh_band_buckets(embeddings, n_tables, band_size))
     a = bk.select(F.col("vec_id").alias("a_id"), "tbl", "bucket")
     b = bk.select(F.col("vec_id").alias("b_id"), "tbl", "bucket")
     cand = (
@@ -407,17 +385,15 @@ def _pq_assign(sv: DataFrame, cb: DataFrame) -> DataFrame:
 
 def pq_codes(
     embeddings: DataFrame,
-    m_sub: int = 4,
-    k_codes: int = 16,
-    dim: int = 64,
+    dim: int,
     refine: int = 0,
     centroid_round: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization codebooks + codes (deterministic).
 
-    The vector splits into m_sub subvectors of dim/m_sub dims; the
-    per-subvector SEED codebook is the matching slice of the first
-    k_codes vectors by vec_id — deterministic and engine-portable, same
+    The dim-long vector splits into PQ_M_SUB subvectors of
+    dim/PQ_M_SUB dims; the per-subvector SEED codebook is the matching
+    slice of the first PQ_K_CODES vectors by vec_id — deterministic and engine-portable, same
     policy as ivf_assign. ``refine`` > 0 runs that many Lloyd (k-means)
     iterations on top: assign codes, recompute each (sub, code)
     centroid as the element-wise mean of its assigned subvectors
@@ -427,24 +403,24 @@ def pq_codes(
     partial-agg plan shape — no driver-side data.
 
     Returns (codebooks, codes): codebooks = (sub, code, ce) — tiny,
-    broadcastable (m_sub * k_codes rows); codes = (vec_id, sub, code) —
-    the 100-TB payoff: ceil(log2 k_codes) bits per subvector instead of
+    broadcastable (PQ_M_SUB * PQ_K_CODES rows); codes = (vec_id, sub,
+    code) — the 100-TB payoff: ceil(log2 PQ_K_CODES) bits per subvector instead of
     4 bytes per float dim (64-dim float32 -> 4 uint8 codes is a 16x-
     64x memory cut), so the ADC scan touches codes, never raw vectors.
     The driver's oracle query runs refine=0 (the seed codebook is
     SQL-expressible); refined codebooks are pinned by pytest
     (quantization error must not increase per iteration).
     """
-    sub_len = dim // m_sub
-    if sub_len * m_sub != dim:
-        raise ValueError("m_sub must divide dim")
+    sub_len, rest = divmod(dim, PQ_M_SUB)
+    if rest:
+        raise ValueError(f"embedding dimension {dim} is not a multiple of {PQ_M_SUB}")
     # spread an under-split source once: the subvector explode + code
     # assignment below otherwise runs in one task for a 1-split input
     embeddings = spread_input(embeddings)
 
     subs = F.explode(
         F.transform(
-            F.sequence(F.lit(0), F.lit(m_sub - 1)),
+            F.sequence(F.lit(0), F.lit(PQ_M_SUB - 1)),
             lambda s: F.struct(
                 s.cast("int").alias("sub"),
                 F.slice(F.col("embedding"), s * sub_len + 1, sub_len).alias("v"),
@@ -452,7 +428,7 @@ def pq_codes(
         )
     ).alias("e")
     cb = (
-        embeddings.where(F.col("vec_id") < k_codes)
+        embeddings.where(F.col("vec_id") < PQ_K_CODES)
         .select(F.col("vec_id").alias("code"), subs)
         .select("code", "e.sub", F.transform("e.v", lambda x: x.cast("double")).alias("ce"))
     )
@@ -483,35 +459,33 @@ def knn_pq_adc(
     embeddings: DataFrame,
     n_queries: int = 8,
     k: int = 5,
-    m_sub: int = 4,
-    k_codes: int = 16,
-    dim: int = 64,
     refine: int = 0,
     centroid_round: int | None = None,
 ) -> DataFrame:
     """PQ ANN via asymmetric distance computation: approximate
     ||q - x||^2 = sum over subvectors of ||q_s - codebook[code_s(x)]||^2.
 
-    Plan: the per-query lookup table (n_queries * m_sub * k_codes rows —
-    tiny) broadcasts against the LONG code table (N * m_sub rows of 3
-    ints), one hash aggregation sums the m_sub parts, a per-query
+    Plan: the per-query lookup table (n_queries * PQ_M_SUB * PQ_K_CODES
+    rows — tiny) broadcasts against the LONG code table (N * PQ_M_SUB
+    rows of 3 ints), one hash aggregation sums the PQ_M_SUB parts, a per-query
     window ranks. The corpus-sized scan touches ONLY codes: no raw
     vector leaves the codebook/query side, which is what makes the scan
     memory-bound-feasible at 10^11 vectors. Distances are quantized
     (ROUND 4) before ranking, ties broken by nid, so the top-k hashes
     identically across engines.
     """
-    sub_len = dim // m_sub
     from pyspark.sql.window import Window
 
-    cb, codes = pq_codes(embeddings, m_sub, k_codes, dim, refine, centroid_round)
+    dim = _embedding_dim(embeddings)
+    sub_len = dim // PQ_M_SUB
+    cb, codes = pq_codes(embeddings, dim, refine, centroid_round)
     q_subs = (
         embeddings.where(F.col("vec_id") < n_queries)
         .select(
             F.col("vec_id").alias("qid"),
             F.explode(
                 F.transform(
-                    F.sequence(F.lit(0), F.lit(m_sub - 1)),
+                    F.sequence(F.lit(0), F.lit(PQ_M_SUB - 1)),
                     lambda s: F.struct(
                         s.cast("int").alias("sub"),
                         F.slice(F.col("embedding"), s * sub_len + 1, sub_len).alias("v"),

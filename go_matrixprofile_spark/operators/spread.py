@@ -22,17 +22,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_input(df: DataFrame, factor: int = 1) -> DataFrame:
+def spread_input(df: DataFrame) -> DataFrame:
     """Round-robin ``df`` to cluster parallelism iff it is under-split.
 
     Uses the planned partition count of the DataFrame (no job runs);
-    streaming DataFrames (no RDD view) pass through untouched.
+    a streaming DataFrame (no RDD view) passes through untouched.
     """
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
+    if df.isStreaming:
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
-    if n >= target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

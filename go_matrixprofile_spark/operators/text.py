@@ -326,15 +326,15 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def tokenize_bpe(documents: DataFrame, merges=None) -> DataFrame:
+def tokenize_bpe(documents: DataFrame) -> DataFrame:
     """REAL BPE tokenization — the token ARRAYS, not just the counts
     of :func:`token_counts_bpe` (same pre-tokenizer, same merge
     chain, proven ≡ the reference tokenizer in functions/bpe.py).
 
     Each alphabetic pre-token is brace-rendered and run through the
-    rank-ordered replace chain, then split back into its merged
-    symbols; digit runs and punctuation pass through as single
-    tokens in their original positions. Everything is one JVM
+    rank-ordered replace chain of ``functions.bpe.MERGES``, then split
+    back into its merged symbols; digit runs and punctuation pass
+    through as single tokens in their original positions. Everything is one JVM
     projection (transform + the literal replace chain inside the
     lambda) — shuffle-free, no Python per row, same plan class as the
     counting chain.
@@ -347,11 +347,9 @@ def tokenize_bpe(documents: DataFrame, merges=None) -> DataFrame:
     """
     from ..functions.bpe import MERGES
 
-    merges = MERGES if merges is None else merges
-
     def merge_word(w):
         s = F.regexp_replace(w, r"(.)", r"{$1}")
-        for x, y in merges:
+        for x, y in MERGES:
             s = F.replace(
                 s, F.lit("{" + x + "}{" + y + "}"), F.lit("{" + x + y + "}")
             )

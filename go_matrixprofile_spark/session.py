@@ -41,14 +41,12 @@ def driver_memory(total_bytes: int) -> str:
 def get_spark(
     app_name: str = "go_matrixprofile_spark",
     cores: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cores == "*" else max(int(cores), 2) * 2
+    shuffle_partitions = 32 if cores == "*" else max(int(cores), 2) * 2
     # one BLAS thread per python worker: N workers × M BLAS threads
     # oversubscribes the node 32x and collapses kernel throughput
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):

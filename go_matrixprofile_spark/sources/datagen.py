@@ -190,11 +190,9 @@ def generate_transcripts(
     return df
 
 
-def write_corpus(
-    spark: SparkSession, path: str, n_convs: int, seed: int = SEED, **kw
-) -> None:
+def write_corpus(spark: SparkSession, path: str, n_convs: int, **kw) -> None:
     """Materialize the corpus as parquet partitioned for conv-local scans."""
-    df = generate_transcripts(spark, n_convs, seed, **kw)
+    df = generate_transcripts(spark, n_convs, SEED, **kw)
     df.repartition(max(8, min(n_convs // 64, 256)), "conv_id").write.mode(
         "overwrite"
     ).parquet(path)

@@ -5,6 +5,6 @@ import pytest
 def spark():
     from go_matrixprofile_spark.session import get_spark
 
-    s = get_spark("pytest", cores=4, shuffle_partitions=8)
+    s = get_spark("pytest", cores=4)
     yield s
     s.stop()

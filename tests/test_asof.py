@@ -54,140 +54,27 @@ class TestAsofJoin:
             equal_nan=True,
         )
 
-    def test_forward_matches_merge_asof(self, spark):
+    def test_inclusive_ties_and_no_earlier_match(self, spark):
         from go_matrixprofile_spark.operators.asof import asof_join
 
-        left, right = self._data(seed=29)
-        got = (
-            asof_join(
-                spark.createDataFrame(left),
-                spark.createDataFrame(right),
-                by=["k"], left_on="t", right_on="t",
-                value_cols=["v"], direction="forward",
-            )
-            .orderBy("lid")
-            .toPandas()
-        )
-        want = pd.merge_asof(
-            left.sort_values("t"),
-            right.sort_values("t"),
-            on="t", by="k", direction="forward",
-        ).sort_values("lid")
-        np.testing.assert_allclose(
-            got["v"].to_numpy(dtype=float),
-            want["v"].to_numpy(dtype=float),
-            atol=0, equal_nan=True,
-        )
-
-    def test_nearest_matches_merge_asof(self, spark):
-        from go_matrixprofile_spark.operators.asof import asof_join
-
-        left, right = self._data(seed=31)
-        got = (
-            asof_join(
-                spark.createDataFrame(left),
-                spark.createDataFrame(right),
-                by=["k"], left_on="t", right_on="t",
-                value_cols=["v"], direction="nearest",
-            )
-            .orderBy("lid")
-            .toPandas()
-        )
-        want = pd.merge_asof(
-            left.sort_values("t"),
-            right.sort_values("t"),
-            on="t", by="k", direction="nearest",
-        ).sort_values("lid")
-        np.testing.assert_allclose(
-            got["v"].to_numpy(dtype=float),
-            want["v"].to_numpy(dtype=float),
-            atol=0, equal_nan=True,
-        )
-
-    def test_nearest_tie_goes_backward_and_tolerance(self, spark):
-        from go_matrixprofile_spark.operators.asof import asof_join
-
-        # t=5 equidistant to 4 and 6 -> backward (4), like merge_asof;
-        # t=30 nearest is 6 at gap 24 > tolerance -> NULL; t=0.5 has no
-        # backward match -> forward (4)
         left = pd.DataFrame(
-            {"k": ["a"] * 3, "t": [5.0, 30.0, 0.5], "lid": [0, 1, 2]}
+            {"k": ["a", "a", "a", "a"], "t": [5.0, 10.0, 50.0, 1.0], "lid": [0, 1, 2, 3]}
         )
-        right = pd.DataFrame(
-            {"k": ["a", "a"], "t": [4.0, 6.0], "v": [1.0, 2.0]}
-        )
-        got = (
-            asof_join(
-                spark.createDataFrame(left),
-                spark.createDataFrame(right),
-                by=["k"], left_on="t", right_on="t", value_cols=["v"],
-                direction="nearest", tolerance=10.0,
-            )
-            .orderBy("lid")
-            .toPandas()
-        )
-        assert got["v"].iloc[0] == 1.0
-        assert np.isnan(got["v"].iloc[1])
-        assert got["v"].iloc[2] == 1.0
-
-    def test_nearest_matches_duckdb_manual(self, spark):
-        """Cross-engine check: a manual two-sided nearest in DuckDB SQL
-        (native ASOF JOIN is backward-only) over the same frames."""
-        import duckdb
-
-        from go_matrixprofile_spark.operators.asof import asof_join
-
-        left, right = self._data(seed=37)
-        got = (
-            asof_join(
-                spark.createDataFrame(left),
-                spark.createDataFrame(right),
-                by=["k"], left_on="t", right_on="t",
-                value_cols=["v"], direction="nearest",
-            )
-            .orderBy("lid")
-            .toPandas()
-        )
-        con = duckdb.connect()
-        con.register("l", left)
-        con.register("r", right)
-        want = con.execute(
-            """
-            SELECT lid, v FROM (
-              SELECT l.lid, r.v,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY l.lid
-                       ORDER BY ABS(r.t - l.t) ASC, r.t ASC) AS rn
-              FROM l LEFT JOIN r ON l.k = r.k
-            ) WHERE rn = 1 ORDER BY lid
-            """
-        ).df()
-        con.close()
-        np.testing.assert_allclose(
-            got.sort_values("lid")["v"].to_numpy(dtype=float),
-            want["v"].to_numpy(dtype=float),
-            atol=0, equal_nan=True,
-        )
-
-    def test_inclusive_ties_and_tolerance(self, spark):
-        from go_matrixprofile_spark.operators.asof import asof_join
-
-        left = pd.DataFrame({"k": ["a", "a", "a"], "t": [5.0, 10.0, 50.0], "lid": [0, 1, 2]})
         right = pd.DataFrame({"k": ["a", "a"], "t": [5.0, 9.0], "v": [1.0, 2.0]})
         got = (
             asof_join(
                 spark.createDataFrame(left),
                 spark.createDataFrame(right),
                 by=["k"], left_on="t", right_on="t", value_cols=["v"],
-                tolerance=10.0,
             )
             .orderBy("lid")
             .toPandas()
         )
         assert got["v"].iloc[0] == 1.0  # equal timestamps match (inclusive)
         assert got["v"].iloc[1] == 2.0  # most recent wins
-        assert np.isnan(got["v"].iloc[2])  # 50 - 9 > tolerance -> NULL
-        assert np.isnan(got["asof_t"].iloc[2])
+        assert got["v"].iloc[2] == 2.0 and got["asof_t"].iloc[2] == 9.0
+        assert np.isnan(got["v"].iloc[3])  # no right row at or before 1 -> NULL
+        assert np.isnan(got["asof_t"].iloc[3])
 
     def test_partition_order_invariant(self, spark):
         from go_matrixprofile_spark.operators.asof import asof_join

@@ -58,7 +58,7 @@ class TestTilePlumbing:
 
         n, w = 16384, 64
         sig = siggen.add(
-            siggen.sin(1.0, 4, 0, 0, 100, n / 100)[:n], siggen.noise(0.25, n, 11)
+            np.sin(2.0 * np.pi * 4 * np.arange(n) / 100), siggen.noise(0.25, n, 11)
         )
         pdf = pd.DataFrame(
             {
@@ -188,7 +188,7 @@ class TestPanDistributed:
         for cid in range(3):
             n = 80 + cid * 17
             sig = siggen.add(
-                siggen.sin(1.0, 3, 0, 0, 50, n / 50)[:n], siggen.noise(0.2, n, cid)
+                np.sin(2.0 * np.pi * 3 * np.arange(n) / 50), siggen.noise(0.2, n, cid)
             )
             for i, v in enumerate(sig):
                 rows.append((f"c{cid}", "m", float(i), float(v)))

@@ -94,17 +94,13 @@ class TestCleanLines:
     def test_min_words_gate(self, spark):
         from go_matrixprofile_spark.operators.cleaning import clean_lines
 
-        docs = spark.createDataFrame(pd.DataFrame({"doc_id": [0], "text": ["x."]}))
-        with pytest.raises(ValueError, match="min_words"):
-            clean_lines(docs, min_words=0)
-        # relaxed terminal punctuation keeps unpunctuated lines
-        relaxed = clean_lines(
-            spark.createDataFrame(
-                pd.DataFrame({"doc_id": [0], "text": ["three plain words"]})
-            ),
-            require_terminal_punct=False,
+        text = "x.\nTwo words.\nNow three words.\nthree plain words"
+        got = clean_lines(
+            spark.createDataFrame(pd.DataFrame({"doc_id": [0], "text": [text]}))
         ).toPandas()
-        assert relaxed["n_kept"].iloc[0] == 1
+        # under 3 words, or no terminal punctuation: dropped
+        assert got["n_lines"].iloc[0] == 4 and got["n_kept"].iloc[0] == 1
+        assert got["clean_text"].iloc[0] == "Now three words."
 
 
 class TestRedactPII:

@@ -105,11 +105,9 @@ class TestDecontaminate:
             check_dtype=False,
         )
 
-    def test_fraction_threshold(self, spark):
-        """threshold switches the verdict from GPT-3 any-hit to a
-        PaLM-style contaminated-fraction rule on the same counts."""
-        import pytest as _pytest
-
+    def test_any_hit_rule_on_small_fraction(self, spark):
+        """GPT-3 any-hit rule: one quoted benchmark sentence in a long
+        doc condemns it, however small its hit fraction."""
         from go_matrixprofile_spark.operators.decontam import decontaminate
 
         rng = np.random.default_rng(61)
@@ -126,20 +124,10 @@ class TestDecontaminate:
         bench = spark.createDataFrame(
             pd.DataFrame({"bench_id": range(len(bench_texts)), "text": bench_texts})
         )
-        any_hit = decontaminate(docs, bench).orderBy("doc_id").toPandas()
-        frac = (
-            decontaminate(docs, bench, threshold=0.5).orderBy("doc_id").toPandas()
-        )
-        # identical counts either way; only the verdict column moves
-        for c in ("n_grams", "n_hits", "hit_frac"):
-            assert (any_hit[c] == frac[c]).all()
-        assert list(any_hit["contaminated"]) == [False, False, True, True]
-        assert list(frac["contaminated"]) == [False, False, False, True]
-        assert (
-            (frac["hit_frac"] > 0.5) == frac["contaminated"]
-        ).all()
-        with _pytest.raises(ValueError, match="threshold"):
-            decontaminate(docs, bench, threshold=1.0)
+        got = decontaminate(docs, bench).orderBy("doc_id").toPandas()
+        assert list(got["contaminated"]) == [False, False, True, True]
+        assert 0 < got["hit_frac"].iloc[2] < 0.5 < got["hit_frac"].iloc[3]
+        assert ((got["n_hits"] > 0) == got["contaminated"]).all()
 
     def test_spans_match_duckdb(self, spark):
         """contaminated_spans: planted overlaps come back as merged

@@ -62,7 +62,7 @@ class TestMixtureSample:
 
     def test_order_key_separates_epoch_copies(self, spark):
         docs = _docs(spark, 300)
-        out = mixture_sample(docs, {}, default_weight=2.0, seed=0).toPandas()
+        out = mixture_sample(docs, {f"src{i}": 2.0 for i in range(5)}, seed=0).toPandas()
         assert len(out) == 600
         assert out["order_key"].nunique() == 600  # distinct with high prob at n=600
         # the two copies of a doc do NOT sort adjacently in general:
@@ -205,16 +205,15 @@ class TestTemperatureWeights:
         for k, n_d in (("head", 800), ("mid", 150), ("tail", 50)):
             assert abs(sizes[k] - w[k] * n_d) <= 4 * (w[k] * n_d) ** 0.5 + 3
 
-    def test_token_weighted_and_cap(self, spark):
+    def test_epoch_cap(self, spark):
         from go_matrixprofile_spark.operators.mixture import temperature_weights
 
         docs = spark.createDataFrame(
-            [(0, "a", 10_000), (1, "b", 10)],
-            "doc_id long, source string, n_tokens long",
+            [(i, "a" if i else "b") for i in range(1000)],
+            "doc_id long, source string",
         )
-        w = temperature_weights(docs, tau=0.1, token_col="n_tokens",
-                                total_epochs_cap=5.0)
-        assert w["b"] == 5.0  # capped
+        w = temperature_weights(docs, tau=0.1)
+        assert w["b"] == 10.0  # capped
         assert w["a"] < 1.0
         with pytest.raises(ValueError, match="tau"):
             temperature_weights(docs, tau=0.0)

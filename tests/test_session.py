@@ -38,7 +38,7 @@ class TestWarmUp:
             return jsc.statusStore().jobsList(None).size()
 
         before = jobs()
-        again = get_spark("pytest", cores=4, shuffle_partitions=8)
+        again = get_spark("pytest", cores=4)
         assert again.sparkContext is spark.sparkContext
         assert jobs() == before
 
@@ -149,7 +149,7 @@ class TestWorkerPath:
                         pass
                     yield pd.DataFrame({{"ok": [callable(matrix_profile.diag_sweep)]}})
 
-                spark = get_spark("cwd-test", cores=2, shuffle_partitions=2)
+                spark = get_spark("cwd-test", cores=2)
                 rows = spark.range(0, 2, 1, 2).mapInPandas(kernel, "ok boolean").collect()
                 print("WORKERS", sorted(r.ok for r in rows))
                 spark.stop()

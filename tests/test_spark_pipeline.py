@@ -349,7 +349,7 @@ class TestGoldenDiscoveryThroughSpark:
             & (series_raw.metric == "text_len")
         )
         motifs, discords, _, _ = discover(
-            src, w=7, k_motifs=3, r_motifs=2.0, opts=MPOpts(algorithm="stomp")
+            src, w=7, opts=MPOpts(algorithm="stomp")
         )
         m = motifs.orderBy("group").toPandas()
         assert [list(x) for x in m["idx"]] == [[0, 14], [0, 7], [3, 10]]

@@ -208,3 +208,23 @@ class TestStatelessDocStagesStream:
         # the placeholder's bracket tokens do
         assert not any("@" in list(t) for t in s["tokens"])
         assert all("<" in list(t) and ">" in list(t) for t in s["tokens"])
+
+
+class TestSpreadInput:
+    def test_streaming_frame_passes_through(self, spark):
+        """A streaming frame has no RDD view to count partitions on:
+        spread_input hands it back as it came, without starting a query."""
+        from go_matrixprofile_spark.operators.spread import spread_input
+
+        stream = spark.readStream.format("rate").load()
+        assert spread_input(stream) is stream
+        assert spark.streams.active == []
+
+    def test_under_split_batch_is_spread(self, spark):
+        from go_matrixprofile_spark.operators.spread import spread_input
+
+        n = spark.sparkContext.defaultParallelism
+        one = spark.range(0, 100, 1, 1)
+        assert spread_input(one).rdd.getNumPartitions() == n
+        wide = spark.range(0, 100, 1, n)
+        assert spread_input(wide) is wide

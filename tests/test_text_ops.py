@@ -307,7 +307,7 @@ class TestMaterializeSequences:
         )
         vocab = bpe_vocab(MERGES)
         seqs = materialize_sequences(
-            packed, tokenized, budget=budget, vocab=vocab, oov_buckets=64
+            packed, tokenized, budget=budget, vocab=vocab
         ).toPandas()
 
         # budget holds for every materialized sequence
@@ -330,14 +330,14 @@ class TestMaterializeSequences:
                 rebuilt += list(tok_pd[d][lo : lo + int(r.n_tokens)])
             assert rebuilt == list(tok_pd[d]), d
         # ids: known tokens < len(vocab); OOV (digits/punct) ids in
-        # [len(vocab), len(vocab)+64)
+        # [len(vocab), len(vocab)+4096)
         nv = len(vocab)
         for ts, ids in zip(seqs["tokens"], seqs["input_ids"]):
             for t, i in zip(ts, ids):
                 if t in vocab:
                     assert i == vocab[t]
                 else:
-                    assert nv <= i < nv + 64
+                    assert nv <= i < nv + 4096
 
     def test_vocab_validation(self, spark):
         from go_matrixprofile_spark.operators.corpus import bpe_vocab, materialize_sequences

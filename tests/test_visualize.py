@@ -17,7 +17,7 @@ NS = "{http://www.w3.org/2000/svg}"
 
 def _sig(n=300, seed=4):
     return siggen.add(
-        siggen.sin(1.0, 5, 0, 0, 100, n / 100)[:n], siggen.noise(0.2, n, seed)
+        np.sin(2.0 * np.pi * 5 * np.arange(n) / 100), siggen.noise(0.2, n, seed)
     )
 
 

@@ -54,7 +54,9 @@ def main():
     import __spark_entry__ as entrymod
     from go_matrixprofile_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cores=8, shuffle_partitions=8)
+    spark = get_spark(
+        "oracle-check", cores=8, extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -65,7 +65,9 @@ def main() -> int:
     import __spark_entry__ as e
     from go_matrixprofile_spark.session import get_spark
 
-    spark = get_spark("plan-audit", cores=8, shuffle_partitions=8)
+    spark = get_spark(
+        "plan-audit", cores=8, extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     qs = e.queries()
 
     checks: list[tuple[str, str, list[tuple[str, bool]]]] = []
@@ -458,8 +460,8 @@ def main() -> int:
         must_not=["Exchange", "BatchEvalPython", "FlatMapGroupsInPandas"],
     )
 
-    # 13. nearest as-of: two in-partition sorted window passes over ONE
-    #     key exchange — no join operator, no second shuffle
+    # 13. as-of join: one in-partition sorted window pass over ONE key
+    #     exchange — no join operator, no second shuffle
     from go_matrixprofile_spark.operators.asof import asof_join
 
     toy_l = spark.range(500).select(
@@ -474,16 +476,17 @@ def main() -> int:
     p = plan_of(
         asof_join(
             toy_l, toy_r, by=["k"], left_on="t", right_on="rt",
-            value_cols=["v"], direction="nearest",
+            value_cols=["v"],
         )
     )
     checks.append(
         (
-            "asof_join(nearest): one key shuffle, two window passes, no join",
+            "asof_join: one key exchange, one window pass, no join",
             p,
             [
                 ("exactly one exchange", shuffle_exchanges(p) == 1),
-                ("window pass present", "Window" in p),
+                ("exactly one window pass",
+                 len(re.findall(r"^\(\d+\) Window$", p, re.M)) == 1),
                 ("no join operator", "Join" not in p),
             ],
         )
