@@ -22,8 +22,14 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
+# a stage is written to <root>/<stage>; checkpoint_stage refuses this
+# one name. Spark's file listing hides names that start with "_" or ".":
+# reading such a directory by name logs "All paths were ignored"
+LINEAGE_DIR = "lineage.parquet"
+
+
 def _lineage_path(root: str) -> str:
-    return os.path.join(root, "_lineage")
+    return os.path.join(root, LINEAGE_DIR)
 
 
 def _dir_has_data_files(spark: SparkSession, path: str) -> bool:
@@ -72,6 +78,8 @@ def checkpoint_stage(
     """Write df partitioned by partition_col, skipping partitions already
     committed for this (stage, input_version); append lineage rows.
     Returns the full checkpointed stage read back from disk."""
+    if stage == LINEAGE_DIR:
+        raise ValueError(f"stage name {stage!r} is the lineage table's directory")
     spark = df.sparkSession
     out_path = os.path.join(root, stage)
     lineage = read_lineage(spark, root)

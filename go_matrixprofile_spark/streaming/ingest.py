@@ -35,15 +35,19 @@ def incremental_batch_update(
     Equivalence with a full recompute mirrors the reference's Update
     contract (matrixprofile_test.go:706-762).
 
-    What is read: the batch's conv_ids are collected on the driver (a
-    projection of a local batch runs no Spark job), and the store is
-    filtered with ``conv_id IN (...)`` of those literals. Spark pushes
-    that filter into the Parquet scan, which can skip row groups whose
-    conv_id statistics miss the set; otherwise every file of the store
-    is read, once by each leg of derive_series (two legs). Rows of
-    untouched conversations are dropped in the scan, before any
+    What is read: the batch's conv_ids are collected on the driver, and
+    the store is filtered with ``conv_id IN (...)`` of those literals.
+    Spark pushes that filter into the Parquet scan, which can skip row
+    groups whose conv_id statistics miss the set; otherwise every file
+    of the store is read, once by each leg of derive_series (two legs).
+    Rows of untouched conversations are dropped in the scan, before any
     exchange. Every batch row goes into the union, a null conv_id
-    included."""
+    included.
+
+    The collect runs no Spark job on a batch made with
+    ``spark.createDataFrame(<pandas frame>, ddl)``, a LocalRelation; a
+    batch made from a list of tuples is an RDD scan (LogicalRDD), and
+    its collect runs one job."""
     from ..operators.profile import matrix_profile
     from ..operators.series import derive_series
 

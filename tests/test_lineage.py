@@ -1,5 +1,7 @@
 """Lineage / checkpoint-resume tests."""
 
+import os
+
 import pytest
 
 
@@ -56,7 +58,20 @@ class TestLineage:
         root = tmp_path / "ckpt"
         df = spark.createDataFrame([("c1", 1.0), ("c2", 2.0)], ["conv_id", "v"])
         checkpoint_stage(df, str(root), "tier_1m")
-        (root / "_lineage" / "0-not-parquet.txt").write_text("not parquet\n")
+        (root / "lineage.parquet" / "0-not-parquet.txt").write_text("not parquet\n")
         with pytest.raises(Exception, match="0-not-parquet.txt"):
             checkpoint_stage(df, str(root), "tier_1m")
         assert spark.read.parquet(str(root / "tier_1m")).count() == 2
+
+    def test_lineage_directory_is_listed_and_not_a_stage(self, spark, tmp_path):
+        """The lineage table sits in a directory Spark lists (no "_" or
+        "." prefix), whose name no stage may take."""
+        from go_matrixprofile_spark.plans.lineage import LINEAGE_DIR, checkpoint_stage
+
+        root = tmp_path / "ckpt"
+        df = spark.createDataFrame([("c1", 1.0)], ["conv_id", "v"])
+        checkpoint_stage(df, str(root), "tier_1m")
+        assert sorted(os.listdir(root)) == sorted(["tier_1m", LINEAGE_DIR])
+        assert not LINEAGE_DIR.startswith(("_", "."))
+        with pytest.raises(ValueError, match="lineage"):
+            checkpoint_stage(df, str(root), LINEAGE_DIR)

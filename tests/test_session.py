@@ -241,3 +241,148 @@ class TestKernelBackend:
         rows = spark.range(0, 2 * n, 1, 2 * n).mapInPandas(report, "path string").collect()
         assert len(rows) == 2 * n
         assert {r.path for r in rows} == {mpm.sweep_path}
+
+
+class TestClassArchive:
+    """The driver JVM of a local session maps a per-host class archive
+    (JDK dynamic CDS), recorded once per key by a child process."""
+
+    def test_key_follows_the_jars_and_the_java_binary(self, tmp_path):
+        jars = tmp_path / "jars"
+        jars.mkdir()
+        (jars / "a.jar").write_bytes(b"a")
+        (jars / "b.jar").write_bytes(b"b")
+        java, other = tmp_path / "java", tmp_path / "java17"
+        java.write_bytes(b"java")
+        other.write_bytes(b"java")
+        key = session._archive_key(str(java), str(jars))
+        assert session._archive_key(str(java), str(jars)) == key
+
+        st = os.stat(jars / "a.jar")
+        os.utime(jars / "a.jar", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        mtime_key = session._archive_key(str(java), str(jars))
+        (jars / "a.jar").write_bytes(b"aa")
+        os.utime(jars / "a.jar", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        size_key = session._archive_key(str(java), str(jars))
+        java_key = session._archive_key(str(other), str(jars))
+        assert len({key, mtime_key, size_key, java_key}) == 4
+
+    @pytest.mark.parametrize("files,records", [(["spark-defaults.conf.template"], True),
+                                               (["spark-defaults.conf.template", "spark-defaults.conf"], False)])
+    def test_a_conf_dir_of_templates_qualifies(self, tmp_path, monkeypatch, caplog, files, records):
+        conf = tmp_path / "conf"
+        conf.mkdir()
+        for f in files:
+            (conf / f).write_text("spark.driver.memory 2g\n")
+        monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+        monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+        for var in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH"):
+            monkeypatch.delenv(var, raising=False)
+        calls = []
+        monkeypatch.setattr(session, "_record", lambda *a: calls.append(a) or ("recorded", a[1]))
+        with caplog.at_level(logging.INFO, logger=session.__name__):
+            got = session._class_archive(2, {})
+        if records:
+            (archive, conf_dir, cores), = calls
+            assert archive.startswith(str(tmp_path / "cache" / "go_matrixprofile_spark" / "spark-classes-"))
+            assert got == ("recorded", conf_dir) and cores == 2
+        else:
+            assert got == (None, None) and not calls
+            assert f"no class archive: the Spark conf dir {conf} holds spark-defaults.conf" in caplog.messages
+
+    def test_the_callers_java_options_follow_the_archive_flags(self):
+        opts = session._replay_options("/c/a.jsa", {"spark.driver.extraJavaOptions": "-Xss4m -Dk=v"})
+        assert opts.split() == [
+            "-XX:SharedArchiveFile=/c/a.jsa", "-Xlog:cds*=off", "-Xlog:cds*=warning:stderr",
+            "-Xss4m", "-Dk=v",
+        ]
+
+    def test_a_held_lock_starts_without_an_archive_at_once(self, tmp_path, caplog):
+        """A second process that finds the archive being recorded starts
+        without one instead of waiting for it."""
+        import fcntl
+        import time
+
+        archive = tmp_path / "spark-classes-k.jsa"
+        with open(tmp_path / "spark-classes-k.lock", "w") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            t0 = time.perf_counter()
+            with caplog.at_level(logging.INFO, logger=session.__name__):
+                got = session._record(str(archive), str(tmp_path / "conf"), 2)
+            assert time.perf_counter() - t0 < 1
+        assert got == (None, None) and not archive.exists()
+        assert caplog.messages == [f"no class archive: another process is recording {archive}"]
+
+    DRIVER = textwrap.dedent(
+        """
+        import logging, os, sys
+        sys.path.insert(0, {root!r})
+        logging.basicConfig(stream=sys.stdout, format="LOG %(levelname)s %(message)s")
+        logging.getLogger("go_matrixprofile_spark.session").setLevel(logging.INFO)
+        from go_matrixprofile_spark.session import get_spark
+
+        spark = get_spark("archive-test", cores=2, extra_conf={extra_conf!r})
+        # processes still running from the recording: its child python
+        # or its JVM, both named with a temp file in this cache
+        cache = os.environ.get("XDG_CACHE_HOME")
+        left = []
+        for pid in filter(str.isdigit, os.listdir("/proc")):
+            try:
+                with open(f"/proc/{{pid}}/cmdline", "rb") as f:
+                    cmd = f.read().replace(b"\\0", b" ").decode(errors="replace")
+            except OSError:
+                continue
+            if cache in cmd and ("_record_classes" in cmd or "ArchiveClassesAtExit" in cmd):
+                left.append(pid)
+        print("LEFT", len(left))
+        print("COUNT", spark.range(0, 10, 1, 2).count())
+        spark.stop()
+        """
+    )
+
+    def _drive(self, tmp_path, cache, extra_conf=None):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = tmp_path / "driver.py"
+        script.write_text(self.DRIVER.format(root=root, extra_conf=extra_conf or {}))
+        env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_DRIVER_MEMORY="1g",
+                   SPARK_GRAFT_NO_WARMUP="1")
+        proc = subprocess.run(
+            [sys.executable, str(script)],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        return proc.stdout.splitlines()
+
+    def test_records_once_then_replays(self, tmp_path):
+        """The first session records the archive and leaves no process
+        behind; the next maps SparkContext's class from it, with the
+        caller's own JVM options still applied."""
+        cache = tmp_path / "cache"
+        first = self._drive(tmp_path, cache)
+        archives = sorted((cache / "go_matrixprofile_spark").glob("spark-classes-*.jsa"))
+        assert len(archives) == 1
+        assert f"LOG INFO recorded {archives[0]}" in " ".join(first)
+        assert "LEFT 0" in first and "COUNT 10" in first
+        assert not [x for x in first if x.startswith("LOG WARNING")]
+        assert not list((cache / "go_matrixprofile_spark").glob("*.tmp"))
+
+        classes = tmp_path / "classes.log"
+        second = self._drive(
+            tmp_path, cache, {"spark.driver.extraJavaOptions": f"-Xlog:class+load:file={classes}"}
+        )
+        assert f"LOG INFO replaying {archives[0]}" in second
+        assert "COUNT 10" in second
+        assert not [x for x in second if "cds" in x]
+        loads = [x for x in classes.read_text().splitlines() if "org.apache.spark.SparkContext " in x]
+        assert loads and loads[0].endswith("source: shared objects file (top)"), loads
+
+    def test_an_unusable_cache_dir_warns_once(self, tmp_path):
+        """A cache dir under a regular file: one WARNING, no archive, and
+        the session still runs a query."""
+        blocker = tmp_path / "not-a-dir"
+        blocker.write_text("")
+        out = self._drive(tmp_path, blocker)
+        warnings = [x for x in out if x.startswith("LOG WARNING")]
+        assert len(warnings) == 1 and "class archive not recorded" in warnings[0], out
+        assert "LOG INFO no class archive: recording failed" in out
+        assert "COUNT 10" in out

@@ -140,6 +140,35 @@ class TestIncrementalBatch:
         assert len(rows) > 0
         assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
+    @pytest.mark.parametrize("kind,jobs", [("pandas", 0), ("tuples", 1)])
+    def test_conv_id_collect_jobs_by_batch_kind(self, spark, split_store, kind, jobs):
+        """Building the update collects the batch's conv_ids: no job on a
+        pandas-built batch (LocalRelation), one on a tuple-list batch (a
+        LogicalRDD scan)."""
+        from go_matrixprofile_spark.streaming.ingest import incremental_batch_update
+
+        path, new = split_store
+        sc = spark.sparkContext
+        store = spark.read.parquet(path)
+        rows = new[new["conv_id"].isin(["conv-00000000", "conv-00000003"])]
+        if kind == "pandas":
+            batch = _batch(spark, rows)
+        else:
+            cols = ["conv_id", "turn_idx", "role", "text", "tool"]
+            tuples = [
+                (*r, ts.to_pydatetime())
+                for r, ts in zip(rows[cols].itertuples(index=False), rows["ts"])
+            ]
+            batch = spark.createDataFrame(tuples, TRANSCRIPT_DDL)
+        group = f"test-conv-id-collect-{kind}"
+        sc.setJobGroup(group, group)
+        try:
+            incremental_batch_update(spark, store, batch, w=W)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
 
 class TestStatelessDocStagesStream:
     def test_clean_redact_tokenize_compose_into_streams(self, spark, tmp_path):
